@@ -117,3 +117,45 @@ def test_compaction_on_materialized_edges(spark, run_dirs, first_run):
     assert before.equals(after)
     assert stats["files_after"] <= stats["files_before"]
     assert {p.name for p in Path(path).glob("pred=*")} == preds_before
+
+
+def test_failed_rewrite_leaves_no_manifest(tmp_path):
+    """A rewrite that dies after the stage's manifest was written for
+    another fingerprint must not leave that manifest behind: a rerun with
+    the old fingerprint would otherwise skip onto a half-written data/."""
+    from uk_ner_presidio_demo_spark.plans.pipeline import StagedPipeline
+
+    pipe = StagedPipeline(spark=None, sf_dir="", out_dir=str(tmp_path / "o"),
+                          checkpoint_dir=str(tmp_path / "ckpt"))
+    man = pipe._manifest("triples")
+    (man.parent / "data").mkdir(parents=True)
+    man.write_text(json.dumps({"stage": "triples", "rows": 3,
+                               "input_fingerprint": "old"}))
+
+    def killed_mid_write():
+        raise RuntimeError("killed")
+
+    with pytest.raises(RuntimeError, match="killed"):
+        pipe._stage("triples", "new", killed_mid_write)
+    assert not man.exists()
+    # the rerun with the old fingerprint rebuilds instead of skipping
+    with pytest.raises(RuntimeError, match="killed"):
+        pipe._stage("triples", "old", killed_mid_write)
+    assert pipe.results == []
+
+
+@pytest.mark.parametrize("name", ["sf0.001", "sf0.01", "sf0.1", "sf1"])
+def test_known_scale_names_resolve(name):
+    from uk_ner_presidio_demo_spark.data.synth import sf_key_for_dir
+
+    assert sf_key_for_dir(f"/data/{name}") == name
+    assert sf_key_for_dir(f"/data/{name}/") == name
+
+
+@pytest.mark.parametrize("sf_dir", ["/data/sf10", "/data/sf0.01_score",
+                                    "/data/transcripts", ""])
+def test_unknown_scale_name_raises(sf_dir):
+    from uk_ner_presidio_demo_spark.data.synth import sf_key_for_dir
+
+    with pytest.raises(ValueError, match="unknown scale"):
+        sf_key_for_dir(sf_dir)

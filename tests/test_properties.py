@@ -289,3 +289,115 @@ class TestChunkerInvariants:
                 " ".join(toks[s:e]).encode("utf-8")
             ).hexdigest()
             assert h == want
+
+
+def _triples_all_pairs(conv_id, turns, mentions, window):
+    """Brute-force restatement of the semantics/triples.py docstring
+    rules: every turn scans EVERY indexed mention of the conversation (the
+    all-pairs form the window-indexed kernel replaced)."""
+    from uk_ner_presidio_demo_spark.semantics import triples as tr
+
+    out = set()
+    subj_conv = tr.conv_ref(conv_id)
+    flat = [(t, m) for t in sorted(t for t, _ in turns)
+            for m in mentions.get(t, [])]
+    for t, tool in sorted(turns):
+        ms = mentions.get(t, [])
+        for m in ms:
+            if m.entity_type == "PERS":
+                out.add((t, subj_conv, tr.PRED_MENTIONS_PERSON,
+                         tr.entity_ref("PERS", m.norm_surface)))
+        if tool is not None and tool != "":
+            out.add((t, subj_conv, tr.PRED_USES_TOOL, tr.tool_ref(tool)))
+        for m in ms:
+            if m.entity_type not in tr.CHANNEL_TYPES:
+                continue
+            best = best_key = None
+            for pt, pm in flat:
+                if pm.entity_type not in tr.PARTY_TYPES:
+                    continue
+                dt = abs(pt - t)
+                if dt > window:
+                    continue
+                key = (0 if pt == t else 1, dt, pt, pm.start)
+                if best_key is None or key < best_key:
+                    best_key = key
+                    best = (pm.entity_type, pm.norm_surface)
+            if best is not None:
+                out.add((t, tr.entity_ref(*best), tr.PRED_CONTACTS_VIA,
+                         tr.entity_ref(m.entity_type, m.norm_surface)))
+        if any(m.entity_type in tr.PII_TYPES for m in ms):
+            persons = {m.norm_surface for m in ms if m.entity_type == "PERS"}
+            parties = {(pm.entity_type, pm.norm_surface) for pt, pm in flat
+                       if pm.entity_type in tr.PARTY_TYPES
+                       and abs(pt - t) <= window}
+            for p in persons:
+                for qt, qn in parties:
+                    if not (qt == "PERS" and qn == p):
+                        out.add((t, tr.entity_ref("PERS", p),
+                                 tr.PRED_SHARES_PII_WITH,
+                                 tr.entity_ref(qt, qn)))
+    return sorted(out)
+
+
+_turn_idx = st.integers(-3, 20)
+_tool = st.one_of(st.none(), st.just(""), st.just(float("nan")),
+                  st.sampled_from(["search", "mail"]))
+_mention = st.tuples(
+    st.sampled_from(["PERS", "ORG", "EMAIL_ADDRESS", "PHONE_NUMBER", "URL",
+                     "CREDIT_CARD", "DOC", "LOC"]),
+    st.integers(0, 3),               # narrow range: tied starts in a turn
+    st.sampled_from(["a", "b", "c"]),
+)
+
+
+@st.composite
+def _conversation(draw):
+    from uk_ner_presidio_demo_spark.semantics.detect import Mention
+
+    # unique but unsorted and gapped turn indices
+    tids = draw(st.lists(_turn_idx, unique=True, max_size=10))
+    turns = [(t, draw(_tool)) for t in tids]
+    # mentions may sit on turns that `turns` does not list
+    keyed = set(tids) | set(draw(st.lists(_turn_idx, max_size=3)))
+    mentions = {
+        t: [Mention(i, et, s, s + 1, 0.0, n, n)
+            for i, (et, s, n) in enumerate(draw(st.lists(_mention,
+                                                         max_size=6)))]
+        for t in keyed
+    }
+    return turns, mentions
+
+
+class TestTriplesWindowEquivalence:
+    """emit_triples_for_conv reads only each turn's window; it MUST stay
+    output-identical to the all-pairs scan.  The oracle and the engine
+    share the kernel, so the goldens cannot catch a wrong rewrite — this
+    is the tripwire."""
+
+    @given(_conversation(), st.integers(0, 3))
+    @settings(max_examples=500, deadline=None)
+    def test_window_kernel_equals_all_pairs(self, conv, window):
+        from uk_ner_presidio_demo_spark.semantics.triples import (
+            emit_triples_for_conv,
+        )
+
+        turns, mentions = conv
+        assert emit_triples_for_conv("c", turns, mentions, window) == \
+            _triples_all_pairs("c", turns, mentions, window)
+
+    def test_tied_start_keeps_first_in_mention_order(self):
+        from uk_ner_presidio_demo_spark.semantics.detect import Mention
+        from uk_ner_presidio_demo_spark.semantics.triples import (
+            emit_triples_for_conv,
+        )
+
+        mentions = {
+            4: [Mention(0, "ORG", 7, 9, 0.0, "x", "zeta"),
+                Mention(1, "PERS", 7, 9, 0.0, "y", "alpha")],
+            5: [Mention(0, "URL", 0, 3, 0.0, "u", "u")],
+        }
+        got = emit_triples_for_conv("c", [(5, None), (4, None)], mentions, 2)
+        assert (5, "ORG:zeta", "contacts_via", "URL:u") in got
+        assert got == _triples_all_pairs("c", [(5, None), (4, None)],
+                                         mentions, 2)

@@ -227,8 +227,15 @@ SF_BUCKETS = {"sf0.001": 4, "sf0.01": 8, "sf0.1": 32, "sf1": 64}
 
 
 def sf_key_for_dir(sf_dir: str) -> str:
+    """The scale name of `sf_dir` (its last path component).  An unknown
+    name raises instead of mapping to some default scale, which would run
+    and label the wrong amount of data."""
     name = Path(sf_dir).name
-    return name if name in SF_CONVS else "sf0.01"
+    if name not in SF_CONVS:
+        raise ValueError(
+            f"unknown scale {name!r} (from {sf_dir!r}); "
+            f"expected one of {sorted(SF_CONVS)}")
+    return name
 
 
 def conv_bucket(conv_id: str, n: int) -> int:

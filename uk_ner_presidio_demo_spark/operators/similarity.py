@@ -513,9 +513,11 @@ def _emb_block_rows(emb: DataFrame) -> DataFrame:
         for pdf in batches:
             rows = []
             # emb_block_keys stays the scalar sequential fold (frozen
-            # sign semantics); numpy float64 elements go through the
-            # same IEEE ops as the former [float(x) ...] copies
+            # sign semantics).  Arrow hands over float32 elements; widen
+            # them (exactly) to float64 so the fold accumulates in float64
+            # under any NumPy promotion rules (NEP 50 would keep float32)
             for vec_id, vec in zip(pdf["vec_id"], pdf["embedding"]):
+                vec = np.asarray(vec, dtype=np.float64)
                 for tbl, bucket in emb_block_keys(vec):
                     rows.append((int(vec_id), tbl, bucket))
             yield pd.DataFrame(rows, columns=["vec_id", "tbl", "bucket"])

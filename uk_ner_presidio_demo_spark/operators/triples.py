@@ -8,9 +8,10 @@ rule kernel `semantics.triples.emit_triples_for_conv` emits the
 a window-not-join formulation: one shuffle by conv_id on each input, no
 range self-join, no driver collect.
 
-Skew note: the hot conversation (conv skew) lands on one task, but a single
-conv is bounded by max-turns x mentions — the kernel is O(turns * mentions)
-per conv and never materializes cross-conv state.
+Skew note: the hot conversation (conv skew) lands on one task, but the
+kernel reads only each turn's +-W window through a per-conv turn index —
+O(turns * mentions-in-window) per conv, linear in conversation length —
+and never materializes cross-conv state.
 """
 
 from __future__ import annotations

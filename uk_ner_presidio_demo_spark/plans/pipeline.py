@@ -98,6 +98,10 @@ class StagedPipeline:
                     StageResult(stage, True, meta["rows"], 0.0)
                 )
                 return self.spark.read.parquet(str(path / "data"))
+            # drop the stale manifest BEFORE data/ is overwritten: a rewrite
+            # killed halfway must not leave it vouching for a torn directory
+            # (a rerun with the old fingerprint would skip and read it)
+            man.unlink()
         t0 = time.time()
         df = build()
         df.write.mode("overwrite").parquet(str(path / "data"))

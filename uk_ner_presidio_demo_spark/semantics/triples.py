@@ -25,6 +25,16 @@ Emission rules per conversation (turns sorted by turn_idx):
                     (PERS:<p>, shares_pii_with, <q_ref>) anchored at t.
 
 All outputs are deduped per (turn_idx, subj, pred, obj).
+
+Cost: the kernel builds one window index per conversation, turn_idx ->
+that turn's PERS/ORG mentions in the caller's mention order (turns listed
+in `turns` only).  Turn t reads just the index entries for
+t-W .. t+W in ascending turn order, so the work is
+O(turns x mentions-in-window), linear in conversation length.  The
+ascending scan order is kept on purpose: among equal tie-break keys (tied
+`start`s within a turn) the first mention in scan order wins, exactly as
+in an all-mentions scan.  The nearest party depends only on t, so it is
+picked once per turn and shared by every channel mention in t.
 """
 
 from __future__ import annotations
@@ -70,13 +80,14 @@ def emit_triples_for_conv(
 ) -> list[Triple]:
     out: set[Triple] = set()
     subj_conv = conv_ref(conv_id)
-    turn_idxs = sorted(t for t, _ in turns)
 
-    # Flat (turn_idx, mention) list for window scans, in deterministic order.
-    flat: list[tuple[int, Mention]] = []
-    for t in turn_idxs:
-        for m in mentions.get(t, []):
-            flat.append((t, m))
+    # Window index: turn_idx -> that turn's PERS/ORG mentions in the
+    # caller's order, over the turns listed in `turns` only.
+    parties: dict[int, list[Mention]] = {}
+    for t, _ in turns:
+        ps = [m for m in mentions.get(t, []) if m.entity_type in PARTY_TYPES]
+        if ps:
+            parties[t] = ps
 
     for t, tool in sorted(turns):
         ms = mentions.get(t, [])
@@ -91,42 +102,43 @@ def emit_triples_for_conv(
         if tool is not None and tool != "":
             out.add((t, subj_conv, PRED_USES_TOOL, tool_ref(tool)))
 
+        channels = [m for m in ms if m.entity_type in CHANNEL_TYPES]
+        persons_in_t = (
+            {m.norm_surface for m in ms if m.entity_type == "PERS"}
+            if any(m.entity_type in PII_TYPES for m in ms) else set()
+        )
+        if not channels and not persons_in_t:
+            continue
+        # this turn's window slice, ascending turn_idx
+        in_window = [
+            (pt, pm)
+            for pt in range(t - window, t + window + 1)
+            for pm in parties.get(pt, ())
+        ]
+
         # contacts_via: channel mention in t -> nearest party in window
-        for m in ms:
-            if m.entity_type not in CHANNEL_TYPES:
-                continue
-            best = None
-            best_key = None
-            for pt, pm in flat:
-                if pm.entity_type not in PARTY_TYPES:
-                    continue
-                dt = abs(pt - t)
-                if dt > window:
-                    continue
-                key = (0 if pt == t else 1, dt, pt, pm.start)
-                if best_key is None or key < best_key:
-                    best_key = key
-                    best = (pm.entity_type, pm.norm_surface)
-            if best is not None:
-                out.add((t, entity_ref(*best), PRED_CONTACTS_VIA,
+        # (min keeps the first of equal keys: tied starts go by scan order)
+        if channels and in_window:
+            _, best = min(
+                in_window,
+                key=lambda p: (0 if p[0] == t else 1, abs(p[0] - t), p[0],
+                               p[1].start),
+            )
+            party_ref = entity_ref(best.entity_type, best.norm_surface)
+            for m in channels:
+                out.add((t, party_ref, PRED_CONTACTS_VIA,
                          entity_ref(m.entity_type, m.norm_surface)))
 
         # shares_pii_with
-        if any(m.entity_type in PII_TYPES for m in ms):
-            persons_in_t = sorted(
-                {m.norm_surface for m in ms if m.entity_type == "PERS"}
-            )
-            if persons_in_t:
-                parties_in_window = {
-                    (pm.entity_type, pm.norm_surface)
-                    for pt, pm in flat
-                    if pm.entity_type in PARTY_TYPES and abs(pt - t) <= window
-                }
-                for p in persons_in_t:
-                    for qt, qn in parties_in_window:
-                        if qt == "PERS" and qn == p:
-                            continue
-                        out.add((t, entity_ref("PERS", p),
-                                 PRED_SHARES_PII_WITH, entity_ref(qt, qn)))
+        if persons_in_t:
+            parties_in_window = {
+                (pm.entity_type, pm.norm_surface) for _, pm in in_window
+            }
+            for p in persons_in_t:
+                for qt, qn in parties_in_window:
+                    if qt == "PERS" and qn == p:
+                        continue
+                    out.add((t, entity_ref("PERS", p),
+                             PRED_SHARES_PII_WITH, entity_ref(qt, qn)))
 
     return sorted(out)
