@@ -10,6 +10,7 @@ identical."""
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from uk_ner_presidio_demo_spark.operators.canonicalize import (
     CC_LOCAL_MAX_EDGES, connected_components,
@@ -99,3 +100,36 @@ def test_local_and_distributed_agree_on_corpus_graph(spark, sf01):
             for r in connected_components(
                 nodes, edges, local_max_edges=0).collect()}
     assert local == dist and local
+
+
+@pytest.mark.parametrize("extra, local", [(0, True), (1, False)],
+                         ids=["at_gate", "gate_plus_one"])
+def test_gate_boundary(spark, monkeypatch, extra, local):
+    """Exactly local_max_edges edges take the local union-find; one edge
+    more takes the distributed loop — with the labels both strategies
+    agree on."""
+    from uk_ner_presidio_demo_spark.operators import canonicalize
+
+    calls = []
+    real = canonicalize._local_labels
+    monkeypatch.setattr(canonicalize, "_local_labels",
+                        lambda rows: calls.append(1) or real(rows))
+    nodes = ["a", "b", "c", "d", "x", "y", "lone"]
+    edges = [("b", "a"), ("c", "b"), ("d", "c"), ("y", "x")][:3 + extra]
+    got = _run(spark, nodes, edges, len(edges) - extra)
+    assert bool(calls) == local
+    assert got == _run(spark, nodes, edges, CC_LOCAL_MAX_EDGES)
+    assert got == _run(spark, nodes, edges, 0)
+    assert got["d"] == "T:a" and got["lone"] == "T:lone"
+
+
+def test_local_labels_keep_string_type(spark):
+    nodes = spark.createDataFrame(
+        [("T", "a"), ("T", "b")], "entity_type string, norm_surface string"
+    )
+    edges = spark.createDataFrame(
+        [("T", "a", "b")], "entity_type string, src string, dst string"
+    )
+    out = connected_components(nodes, edges)
+    assert out.schema["label"].dataType == StringType()
+    assert {r.label for r in out.collect()} == {"T:a"}

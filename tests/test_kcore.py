@@ -102,6 +102,21 @@ def test_empty_and_bad_k(spark):
     # chain graph, k=2 -> empty via the distributed loop's zero branch
     chain = _df(spark, [("a", "b"), ("b", "c")])
     assert k_core(chain, 2, local_max_edges=-1).count() == 0
+    assert k_core(chain, 2, local_max_edges=-1).columns == ["node"]
+
+
+@pytest.mark.parametrize("typ, nodes", [("string", ("a", "b", "c")),
+                                        ("bigint", (1, 2, 3))])
+def test_local_result_keeps_node_type(spark, typ, nodes):
+    """The driver-built local result carries the edge frame's node type,
+    whether or not the core is empty."""
+    a, b, c = nodes
+    tri = spark.createDataFrame([(a, b), (b, c), (c, a)],
+                                f"subj {typ}, obj {typ}")
+    for k, want in ((2, set(nodes)), (3, set())):
+        out = k_core(tri, k)
+        assert out.schema.simpleString() == f"struct<node:{typ}>"
+        assert {r.node for r in out.collect()} == want
 
 
 def test_kg_shaped_use(spark, sf001):

@@ -5,6 +5,7 @@ design), dangling-mass semantics, and DuckDB-oracle bit-parity."""
 import duckdb
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from uk_ner_presidio_demo_spark.operators.graph import (
     PR_DAMP_DEN, PR_DAMP_NUM, PR_SCALE, pagerank, pagerank_oracle_sql,
@@ -158,7 +159,38 @@ def test_empty_graph_and_bad_k(spark):
     out = pagerank(empty, k=3)
     assert out.count() == 0
     assert out.columns == ["node", "rank_fp"]
+    assert out.schema == StructType([
+        StructField("node", StringType()), StructField("rank_fp", LongType()),
+    ])
     with pytest.raises(ValueError, match="k must be"):
         pagerank(empty, k=0)
     with pytest.raises(ValueError, match="k must be"):
         pagerank_oracle_sql("/nonexistent.parquet", k=0)
+
+
+@pytest.mark.parametrize("extra, local", [(0, True), (1, False)],
+                         ids=["at_gate", "gate_plus_one"])
+def test_gate_boundary(spark, edges_df, monkeypatch, extra, local):
+    """Exactly local_max_edges edges take the driver-local fixed point;
+    one edge more takes the distributed loop — bit-identical ranks
+    either way."""
+    from uk_ner_presidio_demo_spark.operators import graph
+
+    calls = []
+    real = graph._local_pagerank
+    monkeypatch.setattr(graph, "_local_pagerank",
+                        lambda rows, k: calls.append(1) or real(rows, k))
+    got = sorted(map(tuple, pagerank(
+        edges_df, k=4, local_max_edges=len(EDGES) - extra).collect()))
+    assert bool(calls) == local
+    assert got == sorted(map(tuple, pagerank(edges_df, k=4).collect()))
+    assert got == sorted(map(tuple, pagerank(
+        edges_df, k=4, local_max_edges=0).collect()))
+
+
+def test_local_ranks_keep_declared_types(spark, edges_df):
+    out = pagerank(edges_df, k=2)
+    assert out.schema == StructType([
+        StructField("node", StringType()), StructField("rank_fp", LongType()),
+    ])
+    assert all(isinstance(r.rank_fp, int) for r in out.collect())

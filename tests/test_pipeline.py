@@ -2,12 +2,21 @@
 materialized-graph sanity."""
 
 import json
+from pathlib import Path
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.types import StructType
 
 from uk_ner_presidio_demo_spark.oracle.reference_oracle import ensure_golden
-from uk_ner_presidio_demo_spark.plans.pipeline import KGPipeline
+from uk_ner_presidio_demo_spark.plans.pipeline import (
+    KGPipeline, StagedPipeline,
+)
+
+
+def _no_build():
+    raise AssertionError("a matching manifest must skip, not rebuild")
 
 
 @pytest.fixture(scope="module")
@@ -46,7 +55,6 @@ def test_rerun_skips_everything(spark, sf001, run_dirs, first_run):
 def test_partial_resume_after_loss(spark, sf001, run_dirs, first_run):
     """Simulate a crash that lost the last two stages: only they re-run."""
     import shutil
-    from pathlib import Path
 
     ckpt, out = run_dirs
     shutil.rmtree(Path(ckpt) / "canonical_nodes")
@@ -75,19 +83,32 @@ def test_checkpointed_outputs_match_golden(spark, run_dirs, first_run, sf001):
     assert a.equals(b)
 
 
-def test_manifests_carry_lineage(run_dirs, first_run):
-    from pathlib import Path
-
+def test_manifests_carry_lineage(spark, run_dirs, first_run):
+    """Per-file lineage from the written footers: one partition_rows entry
+    per data/*.parquet file (sorted by name), each equal to that file's
+    footer row count, summing to rows; and the recorded schema is the one
+    the skip path reads back with."""
     ckpt, _ = run_dirs
     man = json.loads((Path(ckpt) / "mentions" / "_MANIFEST.json").read_text())
     assert man["rows"] > 0 and man["input_fingerprint"] and man["partitions"] >= 1
+    resumed = StagedPipeline(spark=spark, sf_dir="", checkpoint_dir=ckpt,
+                             out_dir="")
+    for stage in [r.stage for r in first_run[0].results]:
+        man = json.loads(resumed._manifest(stage).read_text())
+        files = sorted((Path(ckpt) / stage / "data").glob("*.parquet"))
+        assert man["partitions"] == len(files) == len(man["partition_rows"])
+        assert man["partition_rows"] == [
+            pq.read_metadata(f).num_rows for f in files
+        ]
+        assert sum(man["partition_rows"]) == man["rows"]
+        out = resumed._stage(stage, man["input_fingerprint"], _no_build)
+        assert resumed.results[-1].skipped
+        assert StructType.fromJson(man["schema"]) == out.schema
 
 
 def test_materialized_partition_layout(run_dirs, first_run):
     """Edges land partitioned by pred; nodes by entity_type (the Iceberg
     partitionedBy analogue)."""
-    from pathlib import Path
-
     _, out = run_dirs
     preds = {p.name for p in Path(out, "edges").glob("pred=*")}
     assert {"pred=uses_tool", "pred=mentions_person"} <= preds
@@ -99,8 +120,6 @@ def test_compaction_on_materialized_edges(spark, run_dirs, first_run):
     """Maintenance integration: compacting the pipeline's REAL edges
     table (partitioned by pred) is row-exact and preserves the partition
     layout the scans prune on."""
-    from pathlib import Path
-
     from uk_ner_presidio_demo_spark.sources.maintenance import (
         compact_partitioned_table,
     )
@@ -123,8 +142,6 @@ def test_failed_rewrite_leaves_no_manifest(tmp_path):
     """A rewrite that dies after the stage's manifest was written for
     another fingerprint must not leave that manifest behind: a rerun with
     the old fingerprint would otherwise skip onto a half-written data/."""
-    from uk_ner_presidio_demo_spark.plans.pipeline import StagedPipeline
-
     pipe = StagedPipeline(spark=None, sf_dir="", out_dir=str(tmp_path / "o"),
                           checkpoint_dir=str(tmp_path / "ckpt"))
     man = pipe._manifest("triples")
@@ -142,6 +159,87 @@ def test_failed_rewrite_leaves_no_manifest(tmp_path):
     with pytest.raises(RuntimeError, match="killed"):
         pipe._stage("triples", "old", killed_mid_write)
     assert pipe.results == []
+
+
+def test_manifest_without_schema_is_rebuilt(spark, tmp_path):
+    """A manifest whose fingerprint matches but which records no schema
+    (written before schemas were recorded) is stale: the stage rebuilds
+    and the new manifest carries the schema."""
+    pipe = StagedPipeline(spark=spark, sf_dir="", out_dir=str(tmp_path / "o"),
+                          checkpoint_dir=str(tmp_path / "ckpt"))
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(5)
+
+    pipe._stage("s", "fp", build)
+    man = pipe._manifest("s")
+    meta = json.loads(man.read_text())
+    del meta["schema"]
+    man.write_text(json.dumps(meta))
+    out = pipe._stage("s", "fp", build)
+    assert len(builds) == 2
+    assert [r.skipped for r in pipe.results] == [False, False]
+    assert out.count() == 5
+    assert "schema" in json.loads(man.read_text())
+
+
+def test_empty_stage_commits_zero_rows(spark, tmp_path):
+    """A stage whose build returns no rows commits rows == 0 and resumes
+    with its declared columns."""
+    pipe = StagedPipeline(spark=spark, sf_dir="", out_dir=str(tmp_path / "o"),
+                          checkpoint_dir=str(tmp_path / "ckpt"))
+    out = pipe._stage("empty", "fp",
+                      lambda: spark.range(0).selectExpr("id", "'x' AS s"))
+    meta = json.loads(pipe._manifest("empty").read_text())
+    assert meta["rows"] == 0 and sum(meta["partition_rows"]) == 0
+    assert pipe.results[-1].rows == 0 and out.count() == 0
+    again = pipe._stage("empty", "fp", _no_build)
+    assert pipe.results[-1].skipped and pipe.results[-1].rows == 0
+    assert again.schema == out.schema and again.columns == ["id", "s"]
+
+
+def test_full_skip_resume_job_budget(spark, sf001, run_dirs, first_run):
+    """Job-budget tripwire for the checkpoint machinery: a full-skip
+    resume reads every stage back with its recorded schema and re-runs
+    only the materialize writes and the metrics append.  Measured 4 Spark
+    jobs on a local[4] test session with footer counts and declared
+    read-back schemas; the version that re-scanned each stage for its
+    counts and inferred every read-back schema ran 13 here (14 on the
+    benchmark's session).  A reintroduced re-scan or schema inference
+    fails here."""
+    ckpt, out = run_dirs
+    # make sure every stage is checkpointed, whatever ran before
+    KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+               out_dir=out).run()
+    sc = spark.sparkContext
+    group = "test_full_skip_resume_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                          out_dir=out)
+        pipe.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert all(r.skipped for r in pipe.results), pipe.results
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 4, f"{len(jobs)} Spark jobs for a full-skip resume"
+
+
+def test_materialized_readback_matches_inference(spark, sf001, run_dirs,
+                                                 first_run):
+    """nodes/edges come back with the written frames' schemas (partition
+    column last): the same columns, types and rows schema inference
+    gives."""
+    ckpt, out = run_dirs
+    tables = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                        out_dir=out).run()
+    for name, df in tables.items():
+        inferred = spark.read.parquet(f"{out}/{name}")
+        assert df.schema == inferred.schema, name
+        assert sorted(map(tuple, df.drop("aliases").collect())) == sorted(
+            map(tuple, inferred.drop("aliases").collect()))
 
 
 @pytest.mark.parametrize("name", ["sf0.001", "sf0.01", "sf0.1", "sf1"])

@@ -21,6 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import driver_frame
 
 
 def _node_id(etype_col: str, surface_col: str):
@@ -38,6 +41,11 @@ def _node_id(etype_col: str, surface_col: str):
 # checkpoint job scheduling (~2.5 s wall for a 327-node graph at sf0.1),
 # which dwarfs the actual labeling work until the graph is huge.
 CC_LOCAL_MAX_EDGES = 200_000
+
+LABELS_SCHEMA = T.StructType([
+    T.StructField("id", T.StringType()),
+    T.StructField("label", T.StringType()),
+])
 
 
 def _local_labels(pairs: list) -> list[tuple[str, str]]:
@@ -93,10 +101,12 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         _node_id("entity_type", "dst").alias("dst"),
     ).localCheckpoint(eager=True)
 
-    if e.count() <= local_max_edges:
-        lbl = _local_labels(e.collect())
-        spark = nodes.sparkSession
-        labels = spark.createDataFrame(lbl, "id string, label string")
+    # one action decides the gate AND fetches the rows: len <= gate iff
+    # count <= gate, and the driver never holds more than gate + 1 rows
+    rows = e.limit(local_max_edges + 1).collect()
+    if len(rows) <= local_max_edges:
+        labels = driver_frame(nodes.sparkSession, _local_labels(rows),
+                              LABELS_SCHEMA)
         return n.join(F.broadcast(labels), "id", "left").select(
             "entity_type",
             "norm_surface",

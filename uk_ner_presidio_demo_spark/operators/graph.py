@@ -30,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import driver_frame
 
 EDGE_KEY = ["subj", "pred", "obj"]
 
@@ -192,20 +195,18 @@ def pagerank(edges: DataFrame, k: int = 8,
     if k < 1:
         raise ValueError(f"pagerank: k must be >= 1, got {k}")
 
-    if edges.count() <= local_max_edges:
-        # size-gated local strategy (see PR_LOCAL_MAX_EDGES): solve the
-        # fixed point driver-side; one collect bounded by the gate
-        import pyspark.sql.types as T
-
-        spark = edges.sparkSession
+    # size-gated local strategy (see PR_LOCAL_MAX_EDGES): one action
+    # decides the gate AND fetches the rows (len <= gate iff count <=
+    # gate; the driver holds at most gate + 1 rows), then the fixed point
+    # is solved driver-side
+    rows = edges.limit(local_max_edges + 1).collect()
+    if len(rows) <= local_max_edges:
         schema = T.StructType([
             T.StructField("node", edges.schema["subj"].dataType),
             T.StructField("rank_fp", T.LongType()),
         ])
-        rows = edges.collect()
-        if not rows:
-            return spark.createDataFrame([], schema)
-        return spark.createDataFrame(_local_pagerank(rows, k), schema)
+        return driver_frame(edges.sparkSession,
+                            _local_pagerank(rows, k) if rows else [], schema)
 
     nodes = (
         edges.select(F.col("subj").alias("node"))
@@ -370,12 +371,10 @@ def k_core(edges: DataFrame, k: int,
     n_und = und.count()  # one action: gates the strategy AND seeds the loop
     if n_und <= local_max_edges:
         alive = sorted(_local_k_core(und.collect(), k))
-        import pyspark.sql.types as T
-
         schema = T.StructType(
             [T.StructField("node", und.schema["u"].dataType)]
         )
-        return spark.createDataFrame([(n,) for n in alive], schema)
+        return driver_frame(spark, [(n,) for n in alive], schema)
 
     cur, n_cur = und, n_und
     for _ in range(max_iter):
@@ -400,7 +399,7 @@ def k_core(edges: DataFrame, k: int,
             # means every remaining node already holds degree >= k
             return keep.select(F.col("node"))
         if n_nxt == 0:
-            return spark.createDataFrame([], keep.schema)
+            return driver_frame(spark, [], keep.schema)
         cur, n_cur = nxt, n_nxt
     raise RuntimeError(
         f"k_core: no fixed point within max_iter={max_iter} rounds — "
@@ -466,7 +465,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     n_nodes = deg.count()
     n_edges = und.count()
     spark = edges.sparkSession
-    return spark.createDataFrame(
-        [(n_nodes, n_edges, tri)],
-        "n_nodes long, n_edges long, n_triangles long",
-    )
+    return driver_frame(spark, [(n_nodes, n_edges, tri)], T.StructType([
+        T.StructField(c, T.LongType())
+        for c in ("n_nodes", "n_edges", "n_triangles")
+    ]))

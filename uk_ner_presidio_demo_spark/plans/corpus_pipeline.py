@@ -25,9 +25,9 @@ into the flow a real 100-TB data-prep run executes:
 
 Same checkpoint contract as the KG pipeline (StagedPipeline): each stage
 writes parquet + a _MANIFEST.json with chained input fingerprints,
-per-partition lineage counts, and wall time; re-running with unchanged
-inputs SKIPs every stage.  Resumability and lineage are inherited, not
-re-implemented.
+per-file row counts from the written footers, the schema, and wall time;
+re-running with unchanged inputs SKIPs every stage.  Resumability and
+lineage are inherited, not re-implemented.
 
 Scale notes per stage: profile/split are scan-local (no shuffle); clean's
 legs are left-semi joins with only the dup clustering iterating (size-

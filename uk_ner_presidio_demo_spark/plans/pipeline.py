@@ -7,13 +7,20 @@ Stage graph (SURVEY.md §3.4):
          -> metrics table
 
 Checkpoint contract: each stage writes its output parquet under
-<ckpt>/<stage>/ plus a _MANIFEST.json carrying {stage, input_fingerprint,
-rows, partitions, wall_sec, finished_at}.  A rerun with the same input
-fingerprint SKIPS the stage and reads the parquet back — the driver-level
-restatement of "resumable from checkpoint with per-partition lineage +
-metrics" (BASELINE.json north_rule).  Fingerprints chain: a stage's
-fingerprint folds in its upstream stages', so editing an upstream
-invalidates everything downstream, deterministically.
+<ckpt>/<stage>/data/ plus a _MANIFEST.json carrying {stage,
+input_fingerprint, schema, rows, partitions, partition_rows, wall_sec,
+finished_at}.  `partitions` is the number of parquet files written and
+`partition_rows` the rows in each (sorted by file name), read from the
+files' footers — metadata only, so a commit is ONE Spark job, the write.
+`schema` is the Spark schema the stage returns (StructType JSON).  A
+rerun with the same input fingerprint SKIPS the stage and reads the
+parquet back with that schema — the driver-level restatement of
+"resumable from checkpoint with per-partition lineage + metrics"
+(BASELINE.json north_rule).  A manifest without a schema is stale and
+the stage is rebuilt.  Every read of a file the pipeline wrote carries
+its schema: inference is a Spark job per read.  Fingerprints chain: a
+stage's fingerprint folds in its upstream stages', so editing an
+upstream invalidates everything downstream, deterministically.
 
 Partitioned materialization: edges are written partitioned by `pred` and a
 `conv_bucket` (pmod(hash(conv_id), n)) — the parquet-layout equivalent of
@@ -29,8 +36,10 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.canonicalize import canonical_nodes, canonical_triples
 from ..operators.detect import (
@@ -38,10 +47,19 @@ from ..operators.detect import (
 )
 from ..operators.linking import link_entities
 from ..operators.triples import emit_triples
+from ..session import driver_frame
 from ..sources.tables import read_aliases, read_transcripts, valid_text_predicate
 
 N_CONV_BUCKETS = 32
 N_SALT = 16
+
+METRICS_SCHEMA = T.StructType([
+    T.StructField("stage", T.StringType()),
+    T.StructField("skipped", T.BooleanType()),
+    T.StructField("rows", T.LongType()),
+    T.StructField("wall_sec", T.DoubleType()),
+    T.StructField("run_at", T.StringType()),
+])
 
 
 def _fingerprint_path(p: Path) -> str:
@@ -54,6 +72,13 @@ def _fingerprint_path(p: Path) -> str:
         for f in p.glob("*.parquet")
     )
     return "|".join(parts)
+
+
+def _partitioned_schema(schema: T.StructType, part: str) -> T.StructType:
+    """The schema a directory written with partitionBy(part) reads back
+    with: the data columns, then the partition column last."""
+    return T.StructType([f for f in schema if f.name != part]
+                        + [schema[part]])
 
 
 @dataclass
@@ -87,45 +112,44 @@ class StagedPipeline:
         (always read back from the checkpoint parquet, so downstream
         lineage starts at the materialized file, not the compute DAG)."""
         path = self._ckpt(stage)
+        data = path / "data"
         man = self._manifest(stage)
         if man.exists():
             try:
                 meta = json.loads(man.read_text())
             except (json.JSONDecodeError, OSError):
                 meta = {}  # torn/corrupt manifest (crash mid-write) -> re-run
-            if meta.get("input_fingerprint") == fingerprint:
+            if (meta.get("input_fingerprint") == fingerprint
+                    and "schema" in meta):
                 self.results.append(
                     StageResult(stage, True, meta["rows"], 0.0)
                 )
-                return self.spark.read.parquet(str(path / "data"))
+                schema = T.StructType.fromJson(meta["schema"])
+                return self.spark.read.schema(schema).parquet(str(data))
             # drop the stale manifest BEFORE data/ is overwritten: a rewrite
             # killed halfway must not leave it vouching for a torn directory
             # (a rerun with the old fingerprint would skip and read it)
             man.unlink()
         t0 = time.time()
         df = build()
-        df.write.mode("overwrite").parquet(str(path / "data"))
-        out = self.spark.read.parquet(str(path / "data"))
-        # per-partition lineage counts (A-7 [north-rule]): one cheap job on
-        # the materialized parquet, recorded in the manifest so a resumed
-        # run can audit exactly what each partition contributed
-        ppart = (
-            out.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .orderBy("pid")
-            .collect()
-        )
-        rows = sum(r["count"] for r in ppart)
+        df.write.mode("overwrite").parquet(str(data))
+        out = self.spark.read.schema(df.schema).parquet(str(data))
+        # per-file lineage counts (A-7 [north-rule]) from the footers just
+        # written: no re-scan, so a resumed run can still audit exactly
+        # what each file contributed
+        part_rows = [pq.read_metadata(f).num_rows
+                     for f in sorted(data.glob("*.parquet"))]
+        rows = sum(part_rows)
         wall = round(time.time() - t0, 3)
-        man.parent.mkdir(parents=True, exist_ok=True)
         man.write_text(
             json.dumps(
                 {
                     "stage": stage,
                     "input_fingerprint": fingerprint,
+                    "schema": out.schema.jsonValue(),
                     "rows": rows,
-                    "partitions": len(ppart),
-                    "partition_rows": [r["count"] for r in ppart],
+                    "partitions": len(part_rows),
+                    "partition_rows": part_rows,
                     "wall_sec": wall,
                     "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
                                                  time.gmtime()),
@@ -138,14 +162,12 @@ class StagedPipeline:
     # ---- metrics / lineage (shared) -----------------------------------------
 
     def _write_metrics(self) -> None:
-        rows = [
-            (r.stage, r.skipped, r.rows, r.wall_sec,
-             time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))
-            for r in self.results
-        ]
-        df = self.spark.createDataFrame(
-            rows, "stage string, skipped boolean, rows long, wall_sec double,"
-                  " run_at string"
+        run_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        df = driver_frame(
+            self.spark,
+            [(r.stage, r.skipped, r.rows, r.wall_sec, run_at)
+             for r in self.results],
+            METRICS_SCHEMA,
         )
         df.coalesce(1).write.mode("append").parquet(
             str(Path(self.out_dir) / "metrics")
@@ -260,6 +282,10 @@ class KGPipeline(StagedPipeline):
             str(out / "edges")
         )
         return {
-            "nodes": self.spark.read.parquet(str(out / "nodes")),
-            "edges": self.spark.read.parquet(str(out / "edges")),
+            "nodes": self.spark.read.schema(
+                _partitioned_schema(nodes.schema, "entity_type")
+            ).parquet(str(out / "nodes")),
+            "edges": self.spark.read.schema(
+                _partitioned_schema(edges.schema, "pred")
+            ).parquet(str(out / "edges")),
         }

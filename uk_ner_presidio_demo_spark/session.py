@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -51,3 +52,17 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def driver_frame(spark: SparkSession, rows, schema: T.StructType
+                 ) -> DataFrame:
+    """A frame from rows built on the driver (tuples in ``schema`` field
+    order), handed to the JVM as one Arrow batch.  A list of tuples would
+    instead be pickled through a Python-worker RDD (~1 s for a 7-row
+    append on a 4-vCPU VM, against ~0.17 s this way).  An empty ``rows``
+    keeps ``schema``."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(list(rows), columns=schema.fieldNames()), schema
+    )

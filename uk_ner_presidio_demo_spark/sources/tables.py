@@ -28,6 +28,14 @@ TRANSCRIPTS_SCHEMA = T.StructType(
     ]
 )
 
+ALIASES_SCHEMA = T.StructType(
+    [
+        T.StructField("alias_norm", T.StringType()),
+        T.StructField("canonical_norm", T.StringType()),
+        T.StructField("entity_type", T.StringType()),
+    ]
+)
+
 
 def read_transcripts(spark: SparkSession, sf_dir: str,
                      table: str | None = None) -> DataFrame:
@@ -42,7 +50,7 @@ def read_transcripts(spark: SparkSession, sf_dir: str,
 
 def read_aliases(spark: SparkSession) -> DataFrame:
     """Small alias dictionary — always broadcast at the join site (J-1)."""
-    return spark.read.parquet(str(ensure_aliases()))
+    return spark.read.schema(ALIASES_SCHEMA).parquet(str(ensure_aliases()))
 
 
 def read_tpch(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
