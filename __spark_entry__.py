@@ -261,8 +261,8 @@ def _q_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uk_ner_presidio_demo_spark.sources.tables import read_aliases
 
     tr = read_transcripts(spark, sf_dir)
-    # lineage cut: `m` feeds BOTH link_entities (consumed eagerly into the
-    # distinct-entities checkpoint) and emit_triples — without it the
+    # lineage cut: `m` feeds BOTH link_entities (consumed eagerly by its
+    # entity-universe collect) and emit_triples — without it the
     # detection kernel runs twice (the r2 cooccurrence defect, VERDICT #3).
     # r8: checkpoint only the columns those two consumers read
     # (link_entities: entity_type+norm_surface; emit_triples:

@@ -246,7 +246,10 @@ def main() -> None:
         distinct_stages = _new_heavy_stages(spark, before, min_tasks=8,
                                             top=1)
         before = set(_completed_stages(spark))
-        nodes_s, edges_s = link_entities(spiked_m, read_aliases(spark))
+        # local_max_entities=0: time the distributed band join, not the
+        # driver path the gate picks for a universe this small
+        nodes_s, edges_s = link_entities(spiked_m, read_aliases(spark),
+                                         local_max_entities=0)
         n_hot_edges = edges_s.count()
         linking_stages = _new_heavy_stages(spark, before, min_tasks=8)
         # deterministic per-KEY skew into the CC min-label aggregate: the

@@ -242,6 +242,67 @@ def test_materialized_readback_matches_inference(spark, sf001, run_dirs,
             map(tuple, inferred.drop("aliases").collect()))
 
 
+def _copy_ckpt(run_dirs, tmp_path):
+    """A private copy of the module's completed checkpoint (manifests
+    hold fingerprints, not paths) and a fresh output dir."""
+    import shutil
+
+    ckpt = tmp_path / "ckpt"
+    shutil.copytree(run_dirs[0], ckpt)
+    return str(ckpt), str(tmp_path / "out")
+
+
+def test_alias_edit_rebuilds_linking(spark, sf001, run_dirs, first_run,
+                                     tmp_path, monkeypatch):
+    """Editing the alias dictionary rebuilds canonical_nodes and the
+    canonical_triples chained from it; the 5 upstream stages skip.  The
+    dictionary is a tmp copy: read_aliases and the pipeline's fingerprint
+    both resolve it through ensure_aliases."""
+    from uk_ner_presidio_demo_spark.data import synth
+    from uk_ner_presidio_demo_spark.sources import tables
+
+    alias_path = tmp_path / "aliases.parquet"
+    aliases = pd.read_parquet(synth.ensure_aliases())
+    aliases.to_parquet(alias_path, index=False)
+    for mod in (synth, tables):
+        monkeypatch.setattr(mod, "ensure_aliases", lambda: alias_path)
+    ckpt, out = _copy_ckpt(run_dirs, tmp_path)
+
+    def run():
+        pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                          out_dir=out)
+        pipe.run()
+        return {r.stage: r.skipped for r in pipe.results}
+
+    run()
+    assert all(run().values())
+    extra = pd.DataFrame([{"alias_norm": "зовсім новий псевдонім",
+                           "canonical_norm": "новий канон",
+                           "entity_type": "PERS"}])
+    pd.concat([aliases, extra]).to_parquet(alias_path, index=False)
+    status = run()
+    rebuilt = {"canonical_nodes", "canonical_triples"}
+    assert {s for s, skipped in status.items() if not skipped} == rebuilt
+    assert len(status) == 7
+
+
+def test_semantics_version_rebuilds_every_stage(spark, sf001, run_dirs,
+                                                first_run, tmp_path,
+                                                monkeypatch):
+    """A checkpoint written under another semantics version (GOLDEN_VERSION)
+    is not resumed: every stage rebuilds."""
+    from uk_ner_presidio_demo_spark.oracle import reference_oracle
+
+    ckpt, out = _copy_ckpt(run_dirs, tmp_path)
+    monkeypatch.setattr(reference_oracle, "GOLDEN_VERSION",
+                        reference_oracle.GOLDEN_VERSION + 1)
+    pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                      out_dir=out)
+    pipe.run()
+    assert len(pipe.results) == 7
+    assert not any(r.skipped for r in pipe.results), pipe.results
+
+
 @pytest.mark.parametrize("name", ["sf0.001", "sf0.01", "sf0.1", "sf1"])
 def test_known_scale_names_resolve(name):
     from uk_ner_presidio_demo_spark.data.synth import sf_key_for_dir

@@ -105,10 +105,11 @@ def test_detection_stage_is_narrow(spark, sf01):
 
 
 def test_alias_link_uses_broadcast(spark, sf01):
-    """J-1 must stay a broadcast hash join regardless of stats.  (Inspected
-    on the un-checkpointed join — inside kg_canonical_nodes the alias join
-    sits behind the entity-universe localCheckpoint, invisible to the final
-    plan.)"""
+    """J-1 must stay a broadcast hash join regardless of stats on the
+    distributed link path.  (Inspected on the un-checkpointed join — inside
+    kg_canonical_nodes the alias lookup runs on the driver, or on the
+    distributed path behind the entity-universe localCheckpoint, invisible
+    to the final plan either way.)"""
     from uk_ner_presidio_demo_spark.operators.linking import (
         alias_match, distinct_entities,
     )

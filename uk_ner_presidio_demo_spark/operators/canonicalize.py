@@ -86,7 +86,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     Physical strategy is size-gated (see CC_LOCAL_MAX_EDGES): small edge
     sets are solved driver-side and broadcast; large ones iterate
     distributed.  Both paths produce identical labelings
-    (tests/test_canonicalize.py property)."""
+    (tests/test_connected_components.py property)."""
     n = nodes.select(
         "entity_type", "norm_surface",
         _node_id("entity_type", "norm_surface").alias("id"),
@@ -95,11 +95,15 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # Materialize the raw edge list FIRST: the union below references it
     # twice (forward + swapped), and the edge plan upstream (band join +
     # verify, or near-dup pair discovery) is the expensive part — without
-    # the cut it would execute twice.
+    # the cut it would execute twice.  Edges built on the driver (a local
+    # relation, e.g. linking's driver path) are already materialized, and
+    # the collect below folds into the relation without a Spark job.
     e = edges.select(
         _node_id("entity_type", "src").alias("src"),
         _node_id("entity_type", "dst").alias("dst"),
-    ).localCheckpoint(eager=True)
+    )
+    if not edges.isLocal():
+        e = e.localCheckpoint(eager=True)
 
     # one action decides the gate AND fetches the rows: len <= gate iff
     # count <= gate, and the driver never holds more than gate + 1 rows

@@ -20,7 +20,10 @@ parquet back with that schema — the driver-level restatement of
 the stage is rebuilt.  Every read of a file the pipeline wrote carries
 its schema: inference is a Spark job per read.  Fingerprints chain: a
 stage's fingerprint folds in its upstream stages', so editing an
-upstream invalidates everything downstream, deterministically.
+upstream invalidates everything downstream, deterministically.  The
+root fingerprint holds the semantics version (GOLDEN_VERSION), so an
+engine upgrade rebuilds every stage; the linking stage also folds in the
+alias dictionary it reads.
 
 Partitioned materialization: edges are written partitioned by `pred` and a
 `conv_bucket` (pmod(hash(conv_id), n)) — the parquet-layout equivalent of
@@ -182,10 +185,14 @@ class KGPipeline(StagedPipeline):
 
     def run(self) -> dict[str, DataFrame]:
         spark = self.spark
-        from ..data.synth import ensure_transcripts
+        from ..data.synth import ensure_aliases, ensure_transcripts
+        from ..oracle import reference_oracle
 
         src_path = ensure_transcripts(self.sf_dir)
-        fp_src = _fingerprint_path(src_path)
+        # the semantics version joins the input lineage: an engine whose
+        # outputs differ bumps it, so no stage resumes another's checkpoint
+        fp_src = (f"{_fingerprint_path(src_path)}"
+                  f"|semantics=v{reference_oracle.GOLDEN_VERSION}")
 
         transcripts = read_transcripts(spark, self.sf_dir)
 
@@ -225,10 +232,13 @@ class KGPipeline(StagedPipeline):
             nodes, edges = link_entities(mentions, aliases)
             return canonical_nodes(nodes, edges)
 
-        canon = self._stage("canonical_nodes", fp_next + "|link", build_canon)
+        # linking reads the alias dictionary: editing it rebuilds the
+        # canonical nodes and, chained from them, the canonical triples
+        fp_link = f"{fp_next}|link|{_fingerprint_path(ensure_aliases())}"
+        canon = self._stage("canonical_nodes", fp_link, build_canon)
 
         ctriples = self._stage(
-            "canonical_triples", fp_next + "|canon",
+            "canonical_triples", fp_link + "|canon",
             lambda: canonical_triples(triples, canon).distinct(),
         )
 

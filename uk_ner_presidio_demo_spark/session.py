@@ -57,12 +57,19 @@ def get_spark(
 def driver_frame(spark: SparkSession, rows, schema: T.StructType
                  ) -> DataFrame:
     """A frame from rows built on the driver (tuples in ``schema`` field
-    order), handed to the JVM as one Arrow batch.  A list of tuples would
-    instead be pickled through a Python-worker RDD (~1 s for a 7-row
-    append on a 4-vCPU VM, against ~0.17 s this way).  An empty ``rows``
-    keeps ``schema``."""
-    import pandas as pd
+    order), handed to the JVM as one Arrow table: a local relation, which
+    Spark reads without a job.  A list of tuples would instead be pickled
+    through a Python-worker RDD (~1 s for a 7-row append on a 4-vCPU VM,
+    against ~0.17 s this way), and so would an empty pandas frame.  An
+    empty ``rows`` keeps ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
     return spark.createDataFrame(
-        pd.DataFrame(list(rows), columns=schema.fieldNames()), schema
+        pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+        ),
+        schema,
     )
