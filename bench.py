@@ -163,7 +163,9 @@ def control_par_probe(n_procs: int, n_texts: int = 1000) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from uk_ner_presidio_demo_spark.session import default_cores, get_spark
+
+    cores = default_cores()
 
     # Materialize synth input before timing.
     from uk_ner_presidio_demo_spark.data.synth import (
@@ -171,8 +173,6 @@ def main() -> None:
     )
 
     ensure_transcripts(sf_dir)
-
-    from uk_ner_presidio_demo_spark.session import get_spark
 
     spark = get_spark(app_name="bench", cores=cores)
 

@@ -8,7 +8,9 @@ Cluster launch (the north-rule form):
         --checkpoint checkpoints/run1 --out out/kg
 
 Local dev (no spark-submit): the same command via plain `python driver.py`
-falls back to local[$SPARK_GRAFT_CPUS].
+runs on local[$SPARK_GRAFT_CPUS], by default on every CPU the process may
+run on.  Both paths build the session through `session.get_spark`, so they
+run the configuration the tests run.
 
 The pipeline resumes from per-stage checkpoints: re-running with the same
 inputs skips completed stages (see plans/pipeline.py).
@@ -17,7 +19,6 @@ inputs skips completed stages (see plans/pipeline.py).
 from __future__ import annotations
 
 import argparse
-import os
 import sys
 
 
@@ -34,22 +35,10 @@ def main(argv: list[str] | None = None) -> int:
                          "pack)")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from uk_ner_presidio_demo_spark.session import get_spark
 
-    builder = (
-        SparkSession.builder.appName("uk-ner-kg-pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.python.worker.reuse", "true")
-    )
-    # Under spark-submit the master comes from the launcher; otherwise local.
-    if "spark.master" not in os.environ.get("SPARK_CONF", "") and \
-            os.environ.get("SPARK_ENV_LOADED") is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        builder = builder.master(f"local[{cores}]").config(
-            "spark.sql.shuffle.partitions", cores
-        )
-    spark = builder.getOrCreate()
+    # under spark-submit the launcher's master and confs stand
+    spark = get_spark(app_name="uk-ner-kg-pipeline")
 
     if args.pipeline == "corpus":
         from uk_ner_presidio_demo_spark.plans.corpus_pipeline import (

@@ -2,6 +2,10 @@
 materialized-graph sanity."""
 
 import json
+import re
+import shutil
+import threading
+import time
 from pathlib import Path
 
 import pandas as pd
@@ -15,8 +19,35 @@ from uk_ner_presidio_demo_spark.plans.pipeline import (
 )
 
 
+STAGES = ["validate_metrics", "detected_turns", "mentions", "anonymized",
+          "triples", "canonical_nodes", "canonical_triples"]
+# each stage's inputs in KGPipeline's stage graph (plans/pipeline.py)
+STAGE_INPUTS = {
+    "validate_metrics": (),
+    "detected_turns": (),
+    "mentions": ("detected_turns",),
+    "anonymized": ("detected_turns",),
+    "triples": ("mentions",),
+    "canonical_nodes": ("mentions",),
+    "canonical_triples": ("triples", "canonical_nodes"),
+}
+UTC_STAMP = re.compile(r"\d{4}-\d\d-\d\dT\d\d:\d\d:\d\dZ")
+
+
 def _no_build():
     raise AssertionError("a matching manifest must skip, not rebuild")
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return how many Spark
+    jobs carried that group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -37,11 +68,7 @@ def first_run(spark, sf001, run_dirs):
 def test_all_stages_ran(first_run):
     pipe, _ = first_run
     assert all(not r.skipped for r in pipe.results)
-    names = [r.stage for r in pipe.results]
-    assert names == [
-        "validate_metrics", "detected_turns", "mentions", "anonymized",
-        "triples", "canonical_nodes", "canonical_triples",
-    ]
+    assert [r.stage for r in pipe.results] == STAGES
 
 
 def test_rerun_skips_everything(spark, sf001, run_dirs, first_run):
@@ -101,6 +128,9 @@ def test_manifests_carry_lineage(spark, run_dirs, first_run):
             pq.read_metadata(f).num_rows for f in files
         ]
         assert sum(man["partition_rows"]) == man["rows"]
+        assert UTC_STAMP.fullmatch(man["started_at"])
+        assert UTC_STAMP.fullmatch(man["finished_at"])
+        assert man["started_at"] <= man["finished_at"]
         out = resumed._stage(stage, man["input_fingerprint"], _no_build)
         assert resumed.results[-1].skipped
         assert StructType.fromJson(man["schema"]) == out.schema
@@ -208,23 +238,32 @@ def test_full_skip_resume_job_budget(spark, sf001, run_dirs, first_run):
     read-back schemas; the version that re-scanned each stage for its
     counts and inferred every read-back schema ran 13 here (14 on the
     benchmark's session).  A reintroduced re-scan or schema inference
-    fails here."""
+    fails here.  The lower bound is the two materialize writes, which run
+    on stage-graph threads: a thread that does not inherit the caller's
+    job group leaves only the metrics append in it."""
     ckpt, out = run_dirs
     # make sure every stage is checkpointed, whatever ran before
     KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
                out_dir=out).run()
-    sc = spark.sparkContext
-    group = "test_full_skip_resume_job_budget"
-    sc.setJobGroup(group, group)
-    try:
-        pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
-                          out_dir=out)
-        pipe.run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                      out_dir=out)
+    n = _jobs_in_group(spark, "test_full_skip_resume_job_budget", pipe.run)
     assert all(r.skipped for r in pipe.results), pipe.results
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 4, f"{len(jobs)} Spark jobs for a full-skip resume"
+    assert 2 <= n <= 4, f"{n} Spark jobs for a full-skip resume"
+
+
+def test_cold_run_job_budget(spark, sf001, tmp_path):
+    """A cold run's stage jobs all carry the caller's job group, however
+    the stage graph schedules them.  Measured 21 Spark jobs on a local[4]
+    test session, the same as the serial run before it; a stage thread
+    that loses the group counts none of its jobs, and a reintroduced
+    per-stage re-scan or read-back schema inference adds at least 7."""
+    pipe = KGPipeline(spark=spark, sf_dir=sf001,
+                      checkpoint_dir=str(tmp_path / "ckpt"),
+                      out_dir=str(tmp_path / "out"))
+    n = _jobs_in_group(spark, "test_cold_run_job_budget", pipe.run)
+    assert not any(r.skipped for r in pipe.results), pipe.results
+    assert 10 <= n <= 24, f"{n} Spark jobs for a cold run"
 
 
 def test_materialized_readback_matches_inference(spark, sf001, run_dirs,
@@ -301,6 +340,96 @@ def test_semantics_version_rebuilds_every_stage(spark, sf001, run_dirs,
     pipe.run()
     assert len(pipe.results) == 7
     assert not any(r.skipped for r in pipe.results), pipe.results
+
+
+def test_failed_stage_stops_its_downstream(spark, sf001, run_dirs, first_run,
+                                          tmp_path, monkeypatch):
+    """A stage that raises fails the run with its own exception once the
+    stage running beside it has committed; the stage downstream of it never
+    starts.  A rerun rebuilds exactly the failed stage and its downstream."""
+    from uk_ner_presidio_demo_spark.plans import pipeline
+
+    ckpt, out = _copy_ckpt(run_dirs, tmp_path)
+    canon_fp = json.loads(
+        (Path(ckpt) / "canonical_nodes" / "_MANIFEST.json").read_text()
+    )["input_fingerprint"]
+    import shutil
+
+    for stage in ("triples", "canonical_nodes", "canonical_triples"):
+        shutil.rmtree(Path(ckpt) / stage)
+
+    class TriplesFailed(Exception):
+        pass
+
+    def failing_emit_triples(*args, **kwargs):
+        raise TriplesFailed("emit_triples failed")
+
+    real_emit_triples = pipeline.emit_triples
+    monkeypatch.setattr(pipeline, "emit_triples", failing_emit_triples)
+    with pytest.raises(TriplesFailed):
+        KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                   out_dir=out).run()
+    assert not (Path(ckpt) / "triples" / "_MANIFEST.json").exists()
+    assert not (Path(ckpt) / "canonical_triples" / "_MANIFEST.json").exists()
+    man = json.loads(
+        (Path(ckpt) / "canonical_nodes" / "_MANIFEST.json").read_text())
+    assert man["input_fingerprint"] == canon_fp and man["rows"] > 0
+
+    monkeypatch.setattr(pipeline, "emit_triples", real_emit_triples)
+    pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                      out_dir=out)
+    pipe.run()
+    assert [r.stage for r in pipe.results] == STAGES
+    assert {r.stage for r in pipe.results if not r.skipped} == {
+        "triples", "canonical_triples"}
+
+
+def test_stage_graph_order(spark, sf001, tmp_path, monkeypatch):
+    """Every stage starts after its inputs in the stage graph have ended,
+    the nodes write after canonical_nodes, the edges write after
+    canonical_triples and the metrics append after everything; stage
+    results and metrics rows come out in declaration order on cold,
+    full-skip and partial runs, whatever the completion order."""
+    spans = {}
+    lock = threading.Lock()
+
+    def timed(name_of, fn):
+        def wrapper(self, *args, **kwargs):
+            t0 = time.monotonic()
+            try:
+                return fn(self, *args, **kwargs)
+            finally:
+                with lock:
+                    spans[name_of(args)] = (t0, time.monotonic())
+        return wrapper
+
+    for attr, name_of in (("_stage", lambda a: a[0]),
+                          ("_write_nodes", lambda a: "nodes"),
+                          ("_write_edges", lambda a: "edges"),
+                          ("_write_metrics", lambda a: "metrics")):
+        monkeypatch.setattr(KGPipeline, attr,
+                            timed(name_of, getattr(KGPipeline, attr)))
+    inputs = {**STAGE_INPUTS, "nodes": ("canonical_nodes",),
+              "edges": ("canonical_triples",),
+              "metrics": (*STAGE_INPUTS, "nodes", "edges")}
+    ckpt = tmp_path / "ckpt"
+    for run, drop in (("cold", ()), ("skip", ()),
+                      ("partial", ("canonical_nodes", "canonical_triples"))):
+        for stage in drop:
+            shutil.rmtree(ckpt / stage)
+        spans.clear()
+        out = tmp_path / run
+        pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=str(ckpt),
+                          out_dir=str(out))
+        pipe.run()
+        assert [r.stage for r in pipe.results] == STAGES, run
+        assert {r.stage for r in pipe.results if not r.skipped} == (
+            set(STAGES) if run == "cold" else set(drop)), run
+        metrics = pd.read_parquet(out / "metrics")
+        assert metrics["stage"].tolist() == STAGES, run
+        for step, ins in inputs.items():
+            for i in ins:
+                assert spans[step][0] >= spans[i][1], (run, step, i)
 
 
 @pytest.mark.parametrize("name", ["sf0.001", "sf0.01", "sf0.1", "sf1"])

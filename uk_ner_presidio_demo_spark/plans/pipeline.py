@@ -1,17 +1,37 @@
 """End-to-end staged KG pipeline with per-stage checkpoints, lineage
 manifests, and counter metrics — resumable reruns [north-rule].
 
-Stage graph (SURVEY.md §3.4):
-    scan -> validate(+metrics) -> detect (fused) -> {mentions, anonymized}
-         -> triples -> link -> canonicalize -> materialize nodes/edges
-         -> metrics table
+Stage graph (SURVEY.md §3.4); an arrow is "starts after ... has ended":
+
+    validate_metrics                      (scan + reject counters)
+    detected_turns                        (scan + fused detection)
+      -> mentions, anonymized
+    mentions -> triples, canonical_nodes  (link + connected components)
+    triples, canonical_nodes -> canonical_triples
+    canonical_nodes   -> nodes write
+    canonical_triples -> edges write
+    everything        -> metrics table append
+
+Concurrency contract: `KGPipeline.run` runs this graph on one thread pool
+over the one session (`StagedPipeline._run_graph`): a step starts as soon
+as its inputs have ended, so validate_metrics overlaps detected_turns,
+mentions overlaps anonymized, triples overlaps canonical_nodes, and the
+nodes write overlaps canonical_triples.  Each step's thread starts through
+`pyspark.inheritable_thread_target(spark)`, so the caller's job group,
+local properties and tags reach every stage job.  `self.results` and the
+metrics rows come out in declaration order whatever the completion order.
+The first failure is re-raised from `run()` once the running steps have
+drained; no step starts after it, so a stage downstream of the failure
+keeps no manifest.  Stage fingerprints do not depend on the schedule.
 
 Checkpoint contract: each stage writes its output parquet under
 <ckpt>/<stage>/data/ plus a _MANIFEST.json carrying {stage,
 input_fingerprint, schema, rows, partitions, partition_rows, wall_sec,
-finished_at}.  `partitions` is the number of parquet files written and
-`partition_rows` the rows in each (sorted by file name), read from the
-files' footers — metadata only, so a commit is ONE Spark job, the write.
+started_at, finished_at}.  `partitions` is the number of parquet files
+written and `partition_rows` the rows in each (sorted by file name), read
+from the files' footers — metadata only, so a commit is ONE Spark job,
+the write.  `started_at`/`finished_at` (UTC, whole seconds) bound the
+build, so a run's overlap can be read from its own manifests.
 `schema` is the Spark schema the stage returns (StructType JSON).  A
 rerun with the same input fingerprint SKIPS the stage and reads the
 parquet back with that schema — the driver-level restatement of
@@ -36,13 +56,17 @@ from __future__ import annotations
 
 import json
 import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from pathlib import Path
+from typing import Any, Callable
 
 import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions.partitioning import bucket
 
 from ..operators.canonicalize import canonical_nodes, canonical_triples
 from ..operators.detect import (
@@ -63,6 +87,10 @@ METRICS_SCHEMA = T.StructType([
     T.StructField("wall_sec", T.DoubleType()),
     T.StructField("run_at", T.StringType()),
 ])
+
+
+def _utc_now() -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
 
 
 def _fingerprint_path(p: Path) -> str:
@@ -133,6 +161,7 @@ class StagedPipeline:
             # killed halfway must not leave it vouching for a torn directory
             # (a rerun with the old fingerprint would skip and read it)
             man.unlink()
+        started_at = _utc_now()
         t0 = time.time()
         df = build()
         df.write.mode("overwrite").parquet(str(data))
@@ -154,18 +183,59 @@ class StagedPipeline:
                     "partitions": len(part_rows),
                     "partition_rows": part_rows,
                     "wall_sec": wall,
-                    "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ",
-                                                 time.gmtime()),
+                    "started_at": started_at,
+                    "finished_at": _utc_now(),
                 }
             )
         )
         self.results.append(StageResult(stage, False, rows, wall))
         return out
 
+    def _run_graph(
+        self, steps: dict[str, tuple[tuple[str, ...], Callable[[dict], Any]]]
+    ) -> dict[str, Any]:
+        """Run ``steps`` ({name: (inputs, fn)}) on one thread pool over the
+        session and return {name: fn's value} in declaration order.  A step
+        starts once every step named in its ``inputs`` has returned; ``fn``
+        gets the values returned so far.  Threads start through
+        ``inheritable_thread_target``, so every step's Spark jobs carry the
+        caller's job group, local properties and tags.  The stage results
+        appended meanwhile are put back in declaration order.  After the
+        first failure no step starts; it is re-raised once the running
+        steps have ended."""
+        order = {name: i for i, name in enumerate(steps)}
+        first = len(self.results)
+        pending = dict(steps)
+        running: dict = {}
+        done: dict[str, Any] = {}
+        error: BaseException | None = None
+        with ThreadPoolExecutor(max_workers=len(steps)) as pool:
+            while True:
+                if error is None:
+                    for name, (inputs, fn) in list(pending.items()):
+                        if all(i in done for i in inputs):
+                            del pending[name]
+                            target = inheritable_thread_target(self.spark)(fn)
+                            running[pool.submit(target, dict(done))] = name
+                if not running:
+                    break
+                ended, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in ended:
+                    name = running.pop(fut)
+                    try:
+                        done[name] = fut.result()
+                    except BaseException as exc:  # re-raised below
+                        error = error or exc
+        if error is not None:
+            raise error
+        self.results[first:] = sorted(self.results[first:],
+                                      key=lambda r: order[r.stage])
+        return {name: done[name] for name in steps}
+
     # ---- metrics / lineage (shared) -----------------------------------------
 
     def _write_metrics(self) -> None:
-        run_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        run_at = _utc_now()
         df = driver_frame(
             self.spark,
             [(r.stage, r.skipped, r.rows, r.wall_sec, run_at)
@@ -197,7 +267,9 @@ class KGPipeline(StagedPipeline):
         transcripts = read_transcripts(spark, self.sf_dir)
 
         # stage: validate metrics (reject counters — O-5 at scale filters,
-        # never raises; the rejects become metrics rows)
+        # never raises; the rejects become metrics rows).  perfbench/flow.py
+        # runs this closure's code: keep it a direct closure of run() whose
+        # only free variable is transcripts.
         def build_validate():
             return transcripts.groupBy("role").agg(
                 F.count("*").alias("n_turns"),
@@ -206,45 +278,48 @@ class KGPipeline(StagedPipeline):
                 ),
             )
 
-        self._stage("validate_metrics", fp_src, build_validate)
-
-        # stage: detect (fused) — per-turn rows w/ mention arrays
         fp_detect = f"{fp_src}|strategy={self.strategy}"
-        detected = self._stage(
-            "detected_turns", fp_detect,
-            lambda: detect_turns(transcripts, self.strategy),
-        )
-
         fp_next = fp_detect + "|detected"
-        mentions = self._stage(
-            "mentions", fp_next, lambda: mentions_from_turns(detected)
-        )
-        anonymized = self._stage(
-            "anonymized", fp_next, lambda: anonymized_turns(detected)
-        )
-        triples = self._stage(
-            "triples", fp_next, lambda: emit_triples(transcripts, mentions)
-        )
-
-        aliases = read_aliases(spark)
-
-        def build_canon():
-            nodes, edges = link_entities(mentions, aliases)
-            return canonical_nodes(nodes, edges)
-
         # linking reads the alias dictionary: editing it rebuilds the
         # canonical nodes and, chained from them, the canonical triples
         fp_link = f"{fp_next}|link|{_fingerprint_path(ensure_aliases())}"
-        canon = self._stage("canonical_nodes", fp_link, build_canon)
 
-        ctriples = self._stage(
-            "canonical_triples", fp_link + "|canon",
-            lambda: canonical_triples(triples, canon).distinct(),
-        )
+        def stage(name, fp, inputs, build):
+            """The graph step that runs or resumes stage ``name`` once the
+            steps named in ``inputs`` have ended; ``build`` gets their
+            outputs."""
+            return name, (inputs,
+                          lambda r: self._stage(name, fp, lambda: build(r)))
 
-        out = self._materialize(canon, ctriples)
+        def build_canon(mentions):
+            nodes, edges = link_entities(mentions, read_aliases(spark))
+            return canonical_nodes(nodes, edges)
+
+        # the stage graph of the module docstring, in declaration order
+        out = self._run_graph(dict([
+            stage("validate_metrics", fp_src, (), lambda r: build_validate()),
+            # detect (fused): per-turn rows with mention arrays
+            stage("detected_turns", fp_detect, (),
+                  lambda r: detect_turns(transcripts, self.strategy)),
+            stage("mentions", fp_next, ("detected_turns",),
+                  lambda r: mentions_from_turns(r["detected_turns"])),
+            stage("anonymized", fp_next, ("detected_turns",),
+                  lambda r: anonymized_turns(r["detected_turns"])),
+            stage("triples", fp_next, ("mentions",),
+                  lambda r: emit_triples(transcripts, r["mentions"])),
+            stage("canonical_nodes", fp_link, ("mentions",),
+                  lambda r: build_canon(r["mentions"])),
+            stage("canonical_triples", fp_link + "|canon",
+                  ("triples", "canonical_nodes"),
+                  lambda r: canonical_triples(
+                      r["triples"], r["canonical_nodes"]).distinct()),
+            ("nodes", (("canonical_nodes",),
+                       lambda r: self._write_nodes(r["canonical_nodes"]))),
+            ("edges", (("canonical_triples",),
+                       lambda r: self._write_edges(r["canonical_triples"]))),
+        ]))
         self._write_metrics()
-        return out
+        return {"nodes": out["nodes"], "edges": out["edges"]}
 
     # ---- final graph tables -------------------------------------------------
 
@@ -261,41 +336,41 @@ class KGPipeline(StagedPipeline):
 
     def _materialize(self, canon: DataFrame, ctriples: DataFrame
                      ) -> dict[str, DataFrame]:
-        out = Path(self.out_dir)
+        """Write nodes and edges, the two writes overlapping."""
+        return self._run_graph({
+            "nodes": ((), lambda r: self._write_nodes(canon)),
+            "edges": ((), lambda r: self._write_edges(ctriples)),
+        })
+
+    def _write_nodes(self, canon: DataFrame) -> DataFrame:
         nodes = (
             canon.groupBy("entity_type", "canonical_id", "canonical_norm")
             .agg(F.sort_array(F.collect_set("norm_surface")).alias("aliases"))
         )
+        return self._write_table("nodes", nodes, "entity_type",
+                                 ["entity_type"])
+
+    def _write_edges(self, ctriples: DataFrame) -> DataFrame:
         edges = ctriples.withColumn(
             "conv_bucket", F.pmod(F.hash("conv_id"), F.lit(N_CONV_BUCKETS))
         ).withColumn(
             "salt", F.pmod(F.hash("obj"), F.lit(N_SALT))
         )
+        return self._write_table("edges", edges, "pred",
+                                 ["pred", bucket(N_CONV_BUCKETS, "conv_id")])
+
+    def _write_table(self, name: str, df: DataFrame, part: str,
+                     iceberg_parts: list) -> DataFrame:
+        """Write one graph table and return it read back."""
         if self._iceberg_available():
             # The north-rule production layout: Iceberg tables partitioned
             # by entity-type / pred with a conv_id bucket transform.
-            nodes.writeTo("kg.nodes").partitionedBy("entity_type") \
+            df.writeTo(f"kg.{name}").partitionedBy(*iceberg_parts) \
                 .createOrReplace()
-            edges.writeTo("kg.edges").partitionedBy(
-                "pred", F.bucket(N_CONV_BUCKETS, "conv_id")
-            ).createOrReplace()
-            return {
-                "nodes": self.spark.table("kg.nodes"),
-                "edges": self.spark.table("kg.edges"),
-            }
+            return self.spark.table(f"kg.{name}")
         # dev fallback: the parquet-layout equivalent (hive-style partition
         # dirs + precomputed conv_bucket column)
-        nodes.write.mode("overwrite").partitionBy("entity_type").parquet(
-            str(out / "nodes")
-        )
-        edges.write.mode("overwrite").partitionBy("pred").parquet(
-            str(out / "edges")
-        )
-        return {
-            "nodes": self.spark.read.schema(
-                _partitioned_schema(nodes.schema, "entity_type")
-            ).parquet(str(out / "nodes")),
-            "edges": self.spark.read.schema(
-                _partitioned_schema(edges.schema, "pred")
-            ).parquet(str(out / "edges")),
-        }
+        path = str(Path(self.out_dir) / name)
+        df.write.mode("overwrite").partitionBy(part).parquet(path)
+        return self.spark.read.schema(
+            _partitioned_schema(df.schema, part)).parquet(path)

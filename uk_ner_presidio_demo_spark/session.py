@@ -7,7 +7,8 @@ Config rationale (SURVEY.md §4.4):
     distributed analogue of the reference's lazy singleton model load
     (/root/reference/recognizers/ukrainian_ner.py:28-66)
   - shuffle.partitions sized to cores for local bench; a real cluster run
-    overrides via spark-submit --conf (AQE coalesces the excess)
+    overrides via spark-submit --conf (AQE coalesces the excess): a
+    launcher's keys, its master included, stand over these defaults
 """
 
 from __future__ import annotations
@@ -18,37 +19,63 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+def default_cores() -> int:
+    """$SPARK_GRAFT_CPUS, else the number of CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def launcher_conf() -> dict[str, str]:
+    """The conf a launcher (spark-submit, the pyspark shell) gave this
+    process.  A launcher starts the JVM before Python and passes its port in
+    $PYSPARK_GATEWAY_PORT; plain ``python`` starts its own JVM and has none,
+    so the result is empty."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
+
+
 def get_spark(
     app_name: str = "uk-ner-kg",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """The engine's session on ``local[cores]`` (default `default_cores`).
+    Under a launcher, every key it set — ``spark.master`` included — stands
+    over these defaults, so spark-submit runs the configuration the tests
+    run on its own master; ``extra_conf`` overrides both."""
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
-    b = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    defaults = {
+        "spark.master": f"local[{cores}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # r8 (guide §3.1): let the planner pick shuffled-hash join when
         # its size conditions fit (no sort on either side), and let AQE
         # rewrite a planned sort-merge to shuffled-hash when every
         # post-shuffle partition is under 64 MB — bounded build side, so
         # the SHJ OOM risk stays capped at any corpus size.
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                "67108864")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "67108864",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.python.worker.reuse": "true",
+        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+    }
+    launcher = launcher_conf()
+    b = SparkSession.builder.appName(app_name)
+    for k, v in defaults.items():
+        if k not in launcher:
+            b = b.config(k, v)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
