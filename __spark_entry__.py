@@ -1641,69 +1641,7 @@ def _q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Exactly 50 entries — the driver's correctness board caps at 50 rows,
-    and VERDICT r2 #1 required every registered query to hold a driver-green
-    row.  Round-4 rotation (VERDICT r3 #1/#4): six slots were freed by
-    merging low-information variants (tpch_semi_join + tpch_anti_join ->
-    tpch_semi_anti_join; kg_confirmed + kg_rejected -> kg_review_mentions;
-    mm_resize_plan + mm_frame_sample -> mm_media_plan; ann_topk +
-    ann_lsh_topk -> ann_exact_lsh_topk; sink_json_roundtrip folded into
-    sink_report_roundtrip) or demoting to pytest-only coverage
-    (kg_mentions_score_strategy — a strategy-divergence anchor, mirrored
-    in tests/test_demoted_queries.py like earlier demotions: kg_top_surfaces,
-    ann_ivf_topk), and filled with the formerly off-board r3 operators:
-    doc_partial_overlap (verified), doc_hash_sample (+ split),
-    txt_repetition, txt_freq_profile, ann_ivfpq_topk, stream_triples.
-    Late r4: txt_unigram_probs demoted (live-SQL pytest mirror; the
-    corpus-frequency evidence stays on the board via txt_freq_profile)
-    for doc_pii_scrub — the reference's detect+anonymize over the
-    training corpus, golden-parquet-oracled; and txt_stopword_stats
-    merged into txt_quality (same per-doc grain, standalone pytest
-    mirror kept) freeing the slot for doc_span_excise — span-level
-    dedup apply, golden-parquet-oracled; and mm_decode_features folded
-    into mm_media_plan (third 'feat' leg) freeing the slot for
-    kg_incremental_canon — the delta-canonicalization operator, fully
-    SQL-oracled via DuckDB sha256 == Spark sha2 parity.  Every r3
-    off-board operator now holds a driver row.
-    r5 rotation (VERDICT r4 #5): ann_ivf_kmeans_topk demoted (exact
-    golden mirror kept in tests/test_demoted_queries.py; its trainer
-    lineage stays board-verified inside both IVF-PQ rows) freeing the
-    slot for ann_ivfpq_query_path — the deployment-shaped pure query
-    path over the materialized codes table, oracled against the same
-    golden as ann_ivfpq_topk (defined output-equal).
-    r6 rotation (VERDICT r5 #2): doc_exact_dedup demoted (the md5
-    hash-agg is the board's lowest-information row; its live SQL oracle
-    moved verbatim to tests/test_demoted_queries.py) freeing the slot
-    for txt_bpe_counts — the trained-BPE chain end-to-end against the
-    single-process twin golden.
-    Late-r6 rotation: kg_valid_turn_stats demoted (its validity-filter
-    counts are recomputed verbatim by pipeline_stage_rows'
-    validate_metrics/detected_turns legs; live SQL oracle kept in
-    tests/test_demoted_queries.py) for kg_edge_upsert — the MERGE-INTO
-    edge-snapshot maintenance operator; kg_degree_distribution demoted
-    (kg_pagerank runs over the same canonical-triples graph and subsumes
-    its structural evidence; live SQL oracle kept in the same mirror)
-    for kg_pagerank — fixed-point integer PageRank, bit-exact vs the
-    unrolled-CTE DuckDB oracle.
-    Final late-r6 rotation: three TPC-H rows whose operator evidence is
-    duplicated elsewhere on the board demoted with their live SQL
-    oracles kept verbatim in tests/test_demoted_queries.py —
-    tpch_union_agg (U-1/A-6 evidence stays via kg_mentions' recognizer
-    fusion + txt_quality), tpch_rollup_agg (A-6 conditional/multi-level
-    agg stays via txt_quality; the Expand shape keeps its mirror), and
-    tpch_shipping_priority (join+agg+topk decomposes into
-    tpch_broadcast_join + tpch_agg + tpch_window_topk evidence) — for
-    txt_lm_score (fixed-point bigram-LM corpus-typicality filter, live
-    DuckDB oracle), events_asof_view (backward as-of join vs DuckDB's
-    NATIVE ASOF LEFT JOIN), and kg_triangles (degree-oriented triangle
-    census vs an independent three-way self-join oracle).
-    r7 rotation (VERDICT r6 #3): tpch_semi_anti_join demoted — the
-    board's lowest-information row; its semi/anti evidence also lives
-    in kg_review_mentions (left-semi) and the dedup-apply plan gates
-    (left-anti), and its live SQL oracle moved verbatim to
-    tests/test_demoted_queries.py — freeing the slot for
-    doc_token_quantiles: exact integer order statistics vs DuckDB
-    quantile_disc live, the hard driver signal for disc_rank's
-    decimal-exact rank arithmetic."""
+    and every registered query must hold a driver-green row."""
     return {
         "kg_mentions": _q_mentions,
         "kg_anonymized": _q_anonymized,

@@ -161,6 +161,27 @@ def control_par_probe(n_procs: int, n_texts: int = 1000) -> float:
     return sum(rates)
 
 
+def check_scale(spark, sf_dir: str) -> int:
+    """The turn count of `sf_dir`'s transcripts, after checking that they
+    hold the conversations its scale name declares.  A scan that misses
+    the label (a lost part file, a stale cache) exits non-zero before any
+    timing, so no JSON line labels the wrong amount of data."""
+    from pyspark.sql import functions as F
+
+    from uk_ner_presidio_demo_spark.data.synth import SF_CONVS, sf_key_for_dir
+    from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
+
+    row = read_transcripts(spark, sf_dir).agg(
+        F.count("*").alias("turns"), F.countDistinct("conv_id").alias("convs")
+    ).first()
+    want = SF_CONVS[sf_key_for_dir(sf_dir)]
+    if row["convs"] != want:
+        raise SystemExit(
+            f"bench: {sf_dir} scanned {row['convs']} conversations "
+            f"({row['turns']} turns), its scale declares {want}")
+    return row["turns"]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from uk_ner_presidio_demo_spark.session import default_cores, get_spark
@@ -175,6 +196,7 @@ def main() -> None:
     ensure_transcripts(sf_dir)
 
     spark = get_spark(app_name="bench", cores=cores)
+    n_turns = check_scale(spark, sf_dir)
 
     import __spark_entry__ as entrymod
 
@@ -244,9 +266,6 @@ def main() -> None:
     par_rate = round(max(par_before, control_par_probe(cores)), 1)
 
     # turns/sec over the full detection pass (the BASELINE throughput metric)
-    from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
-
-    n_turns = read_transcripts(spark, sf_dir).count()
     det_sec = timings.get("kg_mentions", None)
     turns_per_sec = round(n_turns / det_sec, 1) if det_sec else None
 
@@ -256,13 +275,9 @@ def main() -> None:
                 "metric": "headline_query_wall_time",
                 "value": total,
                 "unit": "sec",
-                # recorded so bench_regressions can warn when two rounds
-                # used different wall estimators (ADVICE r2).  r7 rename
-                # (VERDICT r6 #1): the two attempts have been
-                # pass-separated full sweeps since commit 5c2b819 (late
-                # r6), which is a DIFFERENT estimator from back-to-back
-                # best-of-2 — the r6 file that still said "best_of_2" is
-                # corrected via ESTIMATOR_ACTUAL in bench_regressions.py
+                # recorded so bench_regressions can warn when two runs
+                # used different wall estimators: the two attempts are
+                # pass-separated full sweeps, not back-to-back best-of-2
                 "estimator": "best_of_2_passes",
                 # single-proc detection texts/s (max of a probe before and
                 # after the loop) — bench_regressions.py divides out the

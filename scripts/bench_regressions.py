@@ -22,80 +22,6 @@ from pathlib import Path
 REGRESSION_FACTOR = 1.3
 REPO = Path(__file__).resolve().parent.parent
 
-# Known BY-DESIGN per-query work changes, scoped to the round whose
-# BENCH_r{N}.json is the NEW side of the comparison (so an entry can
-# never mask a later real regression).  An entry downgrades a flag to an
-# informational line and does not fail the exit code.
-BY_DESIGN: dict[int, dict[str, str]] = {
-    5: {
-        "doc_span_excise": (
-            "r5 runs the EXACT-boundary excision operator (added the "
-            "pair matching-statistics stage; Lee et al. semantics) — "
-            "the r4 number timed the chunk-granular twin"
-        ),
-    },
-    6: {
-        "ann_ivfpq_query_path": (
-            "r6 added the frozen-trainer APPEND maintenance stage "
-            "before the query (append-then-query under one hash, "
-            "__spark_entry__.py ~:513) — the r5 number timed the pure "
-            "query path only"
-        ),
-        "doc_span_excise": (
-            "r6 added the fanout() repartition in doc_chunks "
-            "(operators/chunking.py) — a full text shuffle at sf0.1 "
-            "that is a metadata-gated no-op on wide scans; fixes the "
-            "single-split single-core kernel fragility (SCALE.md §7f)"
-        ),
-        "doc_partial_overlap": (
-            "r6 added the fanout() repartition in doc_chunks (same "
-            "mechanism and trade as doc_span_excise)"
-        ),
-    },
-    7: {
-        "txt_lm_score": (
-            "r7 added the external-model 'xmodel' leg (VERDICT r6 #7: "
-            "train on the doc_id-parity reference split, score the "
-            "complement) — a second model build + scoring pass on top "
-            "of the r6 self-scoring leg"
-        ),
-        "kg_edge_upsert": (
-            "r7 added the 'stream' leg (VERDICT r6 #5: the versioned-"
-            "snapshot fold chain — two availableNow streaming batches "
-            "through a resumed checkpoint + read_snapshot) on top of "
-            "the batch MERGE leg"
-        ),
-    },
-}
-
-# File-level estimator corrections: BENCH_r{N}.json whose recorded
-# "estimator" string is known-wrong.  r6 shipped commit 5c2b819 (moved
-# the best-of-2 attempts from back-to-back pairs to two pass-separated
-# full sweeps — each query's second sample lands minutes, not seconds,
-# after its first, so it no longer shares the first attempt's co-tenant
-# burst / warm pages) while bench.py still stamped "best_of_2"
-# (VERDICT r6 #1) — without this correction the provenance check below
-# is blind to the one methodology change it exists to catch.
-ESTIMATOR_ACTUAL: dict[int, str] = {6: "best_of_2_passes"}
-
-# Recorded estimator-methodology seams, keyed (like BY_DESIGN) by the
-# round on the NEW side of the comparison.  Across a recorded seam the
-# per-query ratios measure the ESTIMATOR delta plus any kernel change
-# and cannot be separated, so flags are downgraded to informational
-# "est-confounded" lines and do not fail the exit code.  An UNrecorded
-# estimator change still warns and still fails — recording a seam is a
-# deliberate act, exactly like a BY_DESIGN entry.
-ESTIMATOR_SEAMS: dict[int, str] = {
-    6: (
-        "best_of_2 -> best_of_2_passes (commit 5c2b819): attempt 2 "
-        "no longer runs seconds-warm behind attempt 1, a uniform "
-        "upward shift on every query's minimum — measured ~1.12-1.16x "
-        "median on untouched queries across two sweep-faithful "
-        "sessions (scripts/estimator_shift.py; "
-        "BENCH/estimator_shift.json)"
-    ),
-}
-
 
 def _latest_two() -> tuple[Path, Path] | None:
     rounds = sorted(
@@ -131,40 +57,20 @@ def main() -> int:
         return 1
     # files predating the "estimator" field (<= BENCH_r02) are reported as
     # unknown, NOT assumed single_shot: r2 was in fact recorded best-of-2
-    # before the field existed, and the old default produced a spurious
-    # "estimator changed" caveat on a like-for-like comparison (VERDICT r3
-    # What's-wrong #2)
-    def _round_of(p: Path) -> int | None:
-        m = re.search(r"r(\d+)", p.name)
-        return int(m.group(1)) if m else None
-
-    old_round, new_round = _round_of(old_p), _round_of(new_p)
-    est_old = ESTIMATOR_ACTUAL.get(old_round) or old.get(
-        "estimator", "unknown (pre-estimator-field file)")
-    est_new = ESTIMATOR_ACTUAL.get(new_round) or new.get(
-        "estimator", "unknown (pre-estimator-field file)")
-    est_seam: str | None = None
+    # before the field existed
+    est_old = old.get("estimator", "unknown (pre-estimator-field file)")
+    est_new = new.get("estimator", "unknown (pre-estimator-field file)")
     if est_old.startswith("unknown") or est_new.startswith("unknown"):
         print(
             f"bench-regressions: note — estimator {est_old} -> {est_new} "
             f"(a pre-field file does not imply a different estimator)"
         )
     elif est_old != est_new:
-        seam_note = ESTIMATOR_SEAMS.get(new_round) if new_round else None
-        if seam_note is not None:
-            est_seam = seam_note
-            print(
-                f"bench-regressions: WARNING — recorded estimator seam "
-                f"({est_old} -> {est_new}); cross-seam per-query ratios "
-                f"measure the estimator delta plus any kernel change and "
-                f"are downgraded to informational: {seam_note}"
-            )
-        else:
-            print(
-                f"bench-regressions: WARNING — estimator changed "
-                f"({est_old} -> {est_new}); ratios include the estimator "
-                f"delta, not just kernel changes"
-            )
+        print(
+            f"bench-regressions: WARNING — estimator changed "
+            f"({est_old} -> {est_new}); ratios include the estimator "
+            f"delta, not just kernel changes"
+        )
     # host-drift control: divide the control ratio out of every per-query
     # ratio (a host running 20% slower inflates ALL walls ~20%; the control
     # moves with it).  Preference order (r6): the ALL-CORES leg when both
@@ -215,8 +121,7 @@ def main() -> int:
             f"  bandwidth control: {m_old} -> {m_new} MB/s "
             f"(ratio {m_new / m_old:.3f}; diagnostic — not normalized out)"
         )
-    by_design = BY_DESIGN.get(new_round, {}) if new_round else {}
-    flagged, improved, designed, confounded = [], [], [], []
+    flagged, improved = [], []
     for name, t_new in sorted(newq.items()):
         t_old = oldq.get(name)
         if t_old is None or t_old <= 0:
@@ -225,13 +130,7 @@ def main() -> int:
         if drift is not None:
             ratio *= drift
         if ratio > REGRESSION_FACTOR:
-            if name in by_design:
-                designed.append((name, t_old, t_new, ratio,
-                                 by_design[name]))
-            elif est_seam is not None:
-                confounded.append((name, t_old, t_new, ratio))
-            else:
-                flagged.append((name, t_old, t_new, ratio))
+            flagged.append((name, t_old, t_new, ratio))
         elif ratio < 1 / REGRESSION_FACTOR:
             improved.append((name, t_old, t_new, ratio))
     print(
@@ -254,14 +153,6 @@ def main() -> int:
         print(line)
     for name, a, b, r in flagged:
         print(f"  REGRESSION {name}: {a}s -> {b}s ({r:.2f}x)")
-    for name, a, b, r, note in designed:
-        print(f"  by-design  {name}: {a}s -> {b}s ({r:.2f}x) — {note}")
-    for name, a, b, r in confounded:
-        print(
-            f"  est-confounded {name}: {a}s -> {b}s ({r:.2f}x) — "
-            f"crosses the recorded estimator seam; not attributable "
-            f"to a kernel change"
-        )
     for name, a, b, r in improved:
         print(f"  improved   {name}: {a}s -> {b}s ({r:.2f}x)")
     if not flagged:

@@ -1,15 +1,27 @@
-"""Dump `explain(formatted)` for the headline queries to PLANS.md — the
-plan-quality audit artifact (broadcasts, pushed filters, Arrow crossings,
-exchange counts are all visible per query).  Regenerate after any operator
-change: `python scripts/dump_plans.py 2>/dev/null`."""
+"""Dump `explain(formatted)` for board queries — the plan-quality audit
+artifact (broadcasts, pushed filters, Arrow crossings, exchange counts are
+all visible per query).
+
+    python scripts/dump_plans.py 2>/dev/null
+        the HEADLINE queries at sf0.01 -> PLANS.md (regenerate after any
+        operator change)
+    python scripts/dump_plans.py --tag before kg_triples kg_pagerank
+        the named queries -> plans/before/<query>.txt
+
+Query names resolve through `__spark_entry__.queries()`; `--sf-dir` picks
+the scale (default /root/testdata/sf0.01).  The session runs on
+`session.default_cores()` cores."""
 
 from __future__ import annotations
 
-import os
+import argparse
+import contextlib
+import io
 import sys
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 HEADLINE = [
     "kg_mentions", "kg_anonymized", "kg_triples", "kg_canonical_nodes",
@@ -28,56 +40,81 @@ HEADLINE = [
     "doc_token_quantiles", "events_asof_view",
 ]
 
+PREAMBLE = [
+    "# PLANS — formatted physical plans of the headline queries",
+    "",
+    "Generated by `python scripts/dump_plans.py` at sf0.01; the",
+    "plan-hygiene tests (tests/test_plan_hygiene.py) assert the",
+    "properties these plans must keep (single Arrow crossing, broadcast",
+    "joins, pushed filters, no cartesian products).",
+    "",
+    "Counting caveat: several operators `localCheckpoint` an expensive",
+    "kernel output before a self-join (so it evaluates once, not twice);",
+    "the checkpointed subplan — including its Python stage — is then",
+    "invisible in the final query plan, so python_stages=0 can mean",
+    "'kernel ran in the materialization job', not 'no Python'.",
+    "",
+]
 
-def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+
+def explain(df, mode: str) -> str:
+    """`df.explain(mode=...)`'s printed text."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode=mode)
+    return buf.getvalue().strip()
+
+
+def summary(df) -> str:
+    """Exchanges and Python stages, counted on the physical plan tree (the
+    formatted text lists every node twice: once in the tree and once in the
+    numbered details section)."""
+    tree = explain(df, "simple")
+    n_sh = (tree.count("Exchange hashpartitioning")
+            + tree.count("Exchange rangepartitioning")
+            + tree.count("Exchange SinglePartition"))
+    n_bc = tree.count("BroadcastExchange")
+    n_py = tree.count("MapInPandas") + tree.count("ArrowEvalPython") \
+        + tree.count("FlatMapCoGroupsInPandas")
+    return f"shuffles={n_sh}  broadcasts={n_bc}  python_stages={n_py}"
+
+
+def main(argv: list[str] | None = None, spark=None,
+         root: Path = REPO) -> None:
     import __spark_entry__ as em
-    from uk_ner_presidio_demo_spark.session import get_spark
 
-    spark = get_spark(cores=int(os.environ["SPARK_GRAFT_CPUS"]))
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("queries", nargs="*", default=HEADLINE,
+                    help="board query names (default: HEADLINE)")
+    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
+    ap.add_argument("--tag", default=None,
+                    help="write plans/TAG/<query>.txt instead of PLANS.md")
+    args = ap.parse_args(argv)
     qs = em.queries()
-    out = [
-        "# PLANS — formatted physical plans of the headline queries",
-        "",
-        "Generated by `python scripts/dump_plans.py` at sf0.01; the",
-        "plan-hygiene tests (tests/test_plan_hygiene.py) assert the",
-        "properties these plans must keep (single Arrow crossing, broadcast",
-        "joins, pushed filters, no cartesian products).",
-        "",
-        "Counting caveat: several operators `localCheckpoint` an expensive",
-        "kernel output before a self-join (so it evaluates once, not twice);",
-        "the checkpointed subplan — including its Python stage — is then",
-        "invisible in the final query plan, so python_stages=0 can mean",
-        "'kernel ran in the materialization job', not 'no Python'.",
-        "",
-    ]
-    for name in HEADLINE:
-        df = qs[name](spark, "/root/testdata/sf0.01")
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        # summary line: exchanges + python stages, counted on the executed
-        # plan tree (the formatted text lists every node twice: once in the
-        # tree and once in the numbered details section)
-        tree = df._jdf.queryExecution().executedPlan().toString()
-        n_sh = (tree.count("Exchange hashpartitioning")
-                + tree.count("Exchange rangepartitioning")
-                + tree.count("Exchange SinglePartition"))
-        n_bc = tree.count("BroadcastExchange")
-        n_py = tree.count("MapInPandas") + tree.count("ArrowEvalPython") \
-            + tree.count("FlatMapCoGroupsInPandas")
-        out.append(f"## {name}")
-        out.append("")
-        out.append(
-            f"shuffles={n_sh}  broadcasts={n_bc}  python_stages={n_py}"
-        )
-        out.append("")
-        out.append("```")
-        out.append(plan.strip())
-        out.append("```")
-        out.append("")
-    Path("PLANS.md").write_text("\n".join(out))
-    print(f"PLANS.md written ({len(HEADLINE)} queries)")
+    unknown = [q for q in args.queries if q not in qs]
+    if unknown:
+        ap.error(f"unknown query {', '.join(unknown)}; "
+                 f"names come from __spark_entry__.queries()")
+
+    if spark is None:
+        from uk_ner_presidio_demo_spark.session import get_spark
+
+        spark = get_spark(app_name="dump-plans")
+    if args.tag:
+        out_dir = root / "plans" / args.tag
+        out_dir.mkdir(parents=True, exist_ok=True)
+        for name in args.queries:
+            p = out_dir / f"{name}.txt"
+            p.write_text(explain(qs[name](spark, args.sf_dir), "formatted"))
+            print(f"wrote {p}")
+        return
+    out = list(PREAMBLE)
+    for name in args.queries:
+        df = qs[name](spark, args.sf_dir)
+        out += [f"## {name}", "", summary(df), "", "```",
+                explain(df, "formatted"), "```", ""]
+    (root / "PLANS.md").write_text("\n".join(out))
+    print(f"PLANS.md written ({len(args.queries)} queries)")
 
 
 if __name__ == "__main__":

@@ -65,7 +65,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    spark = get_spark(app_name="excision_recall", cores=8)
+    spark = get_spark(app_name="excision_recall")
     sdocs = read_tpch(spark, sf_dir, "documents")
     ch = doc_chunks(sdocs).localCheckpoint(eager=True)
     first = ch.groupBy("chunk_hash").agg(

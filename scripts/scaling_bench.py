@@ -3,8 +3,8 @@ input at two CLUSTER SIZES, emulated faithfully in this no-cluster sandbox.
 
 Methodology — why CPU pinning: on a real cluster, an executor's JVM task
 threads AND its Python UDF workers share that executor's core allocation.
-Plain `local[N]` on a 32-core box does NOT reproduce that: the JVM side of a
-local[4] run spills onto the 28 idle cores, overstating small-"cluster"
+Plain `local[N]` on a many-core box does NOT reproduce that: the JVM side of a
+local[4] run spills onto the idle cores, overstating small-"cluster"
 throughput and understating scaling efficiency.  So each level runs in its
 own subprocess pinned (sched_setaffinity, inherited by the JVM and every
 Python worker) to exactly N CPUs with `local[N]` — N total cores for
@@ -311,25 +311,6 @@ prints the like-for-like subtotal over the shared query set, normalizes
 per-query ratios by each file's hardware-control probe (the all-cores
 `control_par_texts_per_sec` leg when both files carry it, else the
 single-proc leg), and notes estimator provenance.
-
-**Estimator seam (r5 -> r6, adjudicated r7)**: late r6 (commit
-`5c2b819`) moved the per-query best-of-2 from back-to-back attempt
-pairs to two pass-separated full sweeps, without re-tagging the
-`estimator` field — BENCH_r06.json's stamp is corrected via
-`ESTIMATOR_ACTUAL` in `scripts/bench_regressions.py`, and the seam is
-recorded in `ESTIMATOR_SEAMS[6]` (cross-seam flags downgrade to
-informational).  The shift was quantified once in two sweep-faithful
-interleaved sessions (`scripts/estimator_shift.py`, results in
-`BENCH/estimator_shift.json`): pass-separated best-of-2 reads a
-**median ~1.12-1.16x** higher than back-to-back best-of-2 on six
-untouched queries (a back-to-back second attempt rides the first
-attempt's warm pages and co-tenant window; a pass-separated one
-weathers independent minutes).  Per-query factors are noisy
-(0.46-1.31) under co-tenancy — read the medians.  Combined with the
-r5-file's single-proc-only drift normalization (x1.28 on every ratio,
-adjudicated over-flagging in VERDICT r6 #3), this accounts for the 19
-r6 flags; BENCH_r07 onward compares like-for-like
-(`best_of_2_passes` both sides).
 """)
 
 

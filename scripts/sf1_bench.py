@@ -29,7 +29,6 @@ Writes BENCH/BENCH_sf1.json and prints its JSON line.
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 from pathlib import Path
@@ -98,11 +97,12 @@ def force(df) -> None:
 
 
 def main() -> None:
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf1_dir = str(ensure_sf1_inputs())
 
     from uk_ner_presidio_demo_spark.data.synth import ensure_transcripts
-    from uk_ner_presidio_demo_spark.session import get_spark
+    from uk_ner_presidio_demo_spark.session import default_cores, get_spark
+
+    cores = default_cores()
 
     ensure_transcripts(sf1_dir)
     ensure_transcripts("/root/testdata/sf0.1")

@@ -20,7 +20,6 @@ Usage: python scripts/skew_bench.py 2>/dev/null   (prints ONE JSON line)
 from __future__ import annotations
 
 import json
-import os
 import sys
 import urllib.request
 from pathlib import Path
@@ -76,18 +75,16 @@ def _new_heavy_stages(spark, before: set[int], min_tasks: int, top: int = 2):
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    cores = int(os.environ["SPARK_GRAFT_CPUS"])
-
     import __spark_entry__ as em
     from uk_ner_presidio_demo_spark.data.synth import (
         ensure_transcripts, sf_key_for_dir,
     )
-    from uk_ner_presidio_demo_spark.session import get_spark
+    from uk_ner_presidio_demo_spark.session import default_cores, get_spark
     from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
 
     from pyspark.sql import functions as F
 
+    cores = default_cores()
     spark = get_spark(app_name="skew-bench", cores=cores,
                       extra_conf={"spark.ui.enabled": "true"})
     qs = em.queries()

@@ -133,3 +133,20 @@ def test_local_labels_keep_string_type(spark):
     out = connected_components(nodes, edges)
     assert out.schema["label"].dataType == StringType()
     assert {r.label for r in out.collect()} == {"T:a"}
+
+
+def test_distributed_loop_raises_when_not_converged(spark):
+    """A 16-node path cannot converge in one round: the distributed loop
+    must raise at max_iter instead of returning part-propagated labels
+    (k_core fails the same way)."""
+    chain = [f"n{i:02d}" for i in range(16)]
+    nodes = spark.createDataFrame(
+        [("T", n) for n in chain], "entity_type string, norm_surface string"
+    )
+    edges = spark.createDataFrame(
+        [("T", a, b) for a, b in zip(chain, chain[1:])],
+        "entity_type string, src string, dst string",
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(nodes, edges, max_iter=1,
+                             local_max_edges=0).collect()

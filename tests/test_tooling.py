@@ -7,6 +7,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 SCRIPT = REPO / "scripts" / "bench_regressions.py"
 
@@ -24,7 +26,6 @@ def test_reads_driver_wrapped_bench_files():
     unwrap them and print the real totals + per-query lines."""
     old, new = REPO / "BENCH_r01.json", REPO / "BENCH_r02.json"
     if not (old.exists() and new.exists()):
-        import pytest
         pytest.skip("driver BENCH files not present")
     rc, out = _run(old, new)
     assert rc == 0, out
@@ -158,33 +159,10 @@ def test_tmpdir_is_per_process_and_reaps_only_dead_pids(tmp_path, monkeypatch):
     assert (live / "checkpoint").exists()  # live sibling untouched
 
 
-def test_recorded_estimator_seam_downgrades_not_fails(tmp_path):
-    """VERDICT r6 #1: the r5->r6 comparison crosses the recorded
-    best_of_2 -> best_of_2_passes seam (ESTIMATOR_SEAMS[6]; the r6
-    file's own stamp is corrected by ESTIMATOR_ACTUAL).  Flags across a
-    RECORDED seam downgrade to informational est-confounded lines and
-    exit 0 — the ratios measure the estimator delta, not kernel
-    changes."""
-    a = tmp_path / "BENCH_r05.json"
-    b = tmp_path / "BENCH_r06.json"
-    a.write_text(json.dumps({
-        "value": 1.0, "queries": {"q1": 1.0}, "estimator": "best_of_2",
-    }))
-    # r6 file mis-stamped best_of_2 (the actual bug being corrected)
-    b.write_text(json.dumps({
-        "value": 2.0, "queries": {"q1": 2.0}, "estimator": "best_of_2",
-    }))
-    rc, out = _run(a, b)
-    assert rc == 0, out
-    assert "recorded estimator seam" in out
-    assert "est-confounded q1" in out
-    assert "REGRESSION" not in out
-
-
 def test_unrecorded_estimator_change_still_fails(tmp_path):
-    """An estimator change with NO recorded seam (non-round filenames ->
-    no ESTIMATOR_SEAMS key) must keep the original warn-and-fail
-    behavior — recording a seam is a deliberate act."""
+    """An estimator change between the two files does not excuse a slower
+    query: the guard warns about the change and still fails on the
+    regression."""
     a = tmp_path / "a.json"
     b = tmp_path / "b.json"
     a.write_text(json.dumps({
@@ -197,21 +175,6 @@ def test_unrecorded_estimator_change_still_fails(tmp_path):
     rc, out = _run(a, b)
     assert rc == 1
     assert "REGRESSION q1" in out
-
-
-def test_live_r5_r6_comparison_is_green():
-    """The repo's own r5->r6 seam must stay adjudicated: every flag
-    either BY_DESIGN or est-confounded, exit 0 (VERDICT r6 #1 'done'
-    criterion)."""
-    old, new = REPO / "BENCH_r05.json", REPO / "BENCH_r06.json"
-    if not (old.exists() and new.exists()):
-        import pytest
-        pytest.skip("driver BENCH files not present")
-    rc, out = _run(old, new)
-    assert rc == 0, out
-    assert "by-design  ann_ivfpq_query_path" in out
-    assert "by-design  doc_span_excise" in out
-    assert "by-design  doc_partial_overlap" in out
 
 
 def test_parse_byte_conf_suffixes():
@@ -232,3 +195,55 @@ def test_parse_byte_conf_suffixes():
     assert parse_byte_conf("nope") is None
     assert parse_byte_conf("128x") is None
     assert parse_byte_conf("") is None
+
+
+def _load_script(name: str):
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        name, REPO / "scripts" / f"{name}.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_dump_plans_tag_writes_one_file_per_query(spark, sf001, tmp_path):
+    dump_plans = _load_script("dump_plans")
+    dump_plans.main(["--tag", "t", "--sf-dir", sf001, "kg_mentions"],
+                    spark=spark, root=tmp_path)
+    assert [p.name for p in (tmp_path / "plans" / "t").iterdir()] \
+        == ["kg_mentions.txt"]
+    assert "MapInPandas" in (tmp_path / "plans/t/kg_mentions.txt").read_text()
+    assert not (tmp_path / "PLANS.md").exists()
+
+
+def test_dump_plans_rejects_unknown_query(tmp_path, capsys):
+    with pytest.raises(SystemExit):
+        _load_script("dump_plans").main(["no_such_query"], root=tmp_path)
+    assert "unknown query no_such_query" in capsys.readouterr().err
+
+
+def test_bench_scale_guard_passes_on_its_fixture(spark, sf001):
+    from bench import check_scale
+
+    from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
+
+    assert check_scale(spark, sf001) == read_transcripts(spark, sf001).count()
+
+
+def test_bench_scale_guard_refuses_a_short_scan(spark, sf001, tmp_path,
+                                                monkeypatch):
+    """One bucket file missing from the cached transcripts: the scan
+    misses the declared conversation count and the bench must stop."""
+    import shutil
+
+    from bench import check_scale
+    from uk_ner_presidio_demo_spark.data import synth
+
+    src = synth.ensure_transcripts(sf001)
+    dst = tmp_path / "sf0.001" / "transcripts.parquet"
+    shutil.copytree(src, dst)
+    next(dst.glob("part-*.parquet")).unlink()
+    monkeypatch.setattr(synth, "DATA_ROOT", tmp_path)
+    with pytest.raises(SystemExit, match="declares 60"):
+        check_scale(spark, sf001)

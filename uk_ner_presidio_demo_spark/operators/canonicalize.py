@@ -14,7 +14,7 @@ truncate the exponentially-growing join lineage (SURVEY.md §4.3; classic
 iterative-dataflow practice), and convergence is checked with a cheap
 aggregate on the changed-count.  Alias/LSH components are shallow (diameter
 ~2-4), so the loop converges in a handful of iterations; `max_iter` bounds
-pathological chains.
+pathological chains, and a loop that hits it raises.
 """
 
 from __future__ import annotations
@@ -140,7 +140,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         .localCheckpoint(eager=True)
     )
 
-    for it in range(max_iter):
+    for _ in range(max_iter):
         # candidate labels flowing along edges
         neighbor_labels = (
             e_sym.join(labels, e_sym.src == labels.id)
@@ -183,6 +183,12 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         )
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds — raise max_iter (component "
+            "diameter exceeds the bound)"
+        )
 
     # ONE pass over the entity universe: endpoint nodes take their
     # converged label, singletons (the dominant case at scale — no label
@@ -213,8 +219,7 @@ def canonical_nodes(nodes: DataFrame, edges: DataFrame) -> DataFrame:
 
 
 def incremental_canonical_update(new_mentions: DataFrame,
-                                 existing_canon: DataFrame,
-                                 broadcast_canon: bool = True) -> DataFrame:
+                                 existing_canon: DataFrame) -> DataFrame:
     """Delta canonicalization — the operator a production KG runs BETWEEN
     full CC recomputes (the iterative CC is periodic/batch; SURVEY §2.8):
     assign canonical ids to a new micro-batch of mentions against the
@@ -228,15 +233,17 @@ def incremental_canonical_update(new_mentions: DataFrame,
         never split — which keeps the delta path monotone-safe.
 
     Output: (entity_type, norm_surface, canonical_id, provisional) one row
-    per distinct new entity.  `broadcast_canon` mirrors canonical_triples:
-    the canon dictionary broadcasts until it outgrows ~1 GB, then flip to
-    a shuffle join that AQE plans."""
+    per distinct new entity.  Like canonical_triples, the canon dictionary
+    is broadcast: an entity universe is small next to the mention stream.
+    One that outgrows broadcast size (~1 GB) needs the hint dropped so
+    AQE plans a shuffle join."""
     ents = new_mentions.select("entity_type", "norm_surface").distinct()
     canon_map = existing_canon.select(
         "entity_type", "norm_surface", "canonical_id"
     ).distinct()
-    side = F.broadcast(canon_map) if broadcast_canon else canon_map
-    joined = ents.join(side, ["entity_type", "norm_surface"], "left")
+    joined = ents.join(
+        F.broadcast(canon_map), ["entity_type", "norm_surface"], "left"
+    )
     prov_id = F.sha2(
         F.concat_ws(":", F.lit("prov"), "entity_type", "norm_surface"), 256
     )
@@ -248,15 +255,14 @@ def incremental_canonical_update(new_mentions: DataFrame,
     )
 
 
-def canonical_triples(triples: DataFrame, canon: DataFrame,
-                      broadcast_refs: bool = True) -> DataFrame:
+def canonical_triples(triples: DataFrame, canon: DataFrame) -> DataFrame:
     """Rewrite triple subj/obj entity refs ("TYPE:norm") to canonical ids
     (stage 8 input).  conv:/tool: refs pass through unchanged.
 
-    `broadcast_refs`: the entity-ref dictionary is usually tiny relative to
-    the triple stream, so it broadcasts by default; at entity universes
-    beyond broadcast size (~1 GB; SCALE.md delta table) pass False and the
-    rewrite becomes two shuffle joins that AQE plans."""
+    The entity-ref dictionary is tiny relative to the triple stream, so
+    both joins broadcast it.  An entity universe beyond broadcast size
+    (~1 GB; SCALE.md delta table) needs the hint dropped, which turns the
+    rewrite into two shuffle joins that AQE plans."""
     ref_map = canon.select(
         F.concat_ws(":", "entity_type", "norm_surface").alias("ref"),
         "canonical_id",
@@ -266,9 +272,8 @@ def canonical_triples(triples: DataFrame, canon: DataFrame,
         rm = ref_map.withColumnRenamed("ref", f"{col}_ref").withColumnRenamed(
             "canonical_id", f"{col}_canon"
         )
-        side = F.broadcast(rm) if broadcast_refs else rm
         t = t.join(
-            side, t[col] == rm[f"{col}_ref"], "left"
+            F.broadcast(rm), t[col] == rm[f"{col}_ref"], "left"
         ).withColumn(
             col, F.coalesce(F.col(f"{col}_canon"), F.col(col))
         ).drop(f"{col}_ref", f"{col}_canon")

@@ -47,11 +47,11 @@ _MENTION_COLS = ["mention_idx", "entity_type", "start", "norm_surface"]
 # sf1 (SCALE.md §7d): small enough frames to stay cache-friendly, few
 # enough keys that the ~1 ms/key crossing cost stays amortized.
 BUCKET_TARGET_BYTES = 64 * 1024
+# floor of the cogroup key space for inputs without scan-size metadata
+BUCKETS_PER_CORE = 2
 
 
-def emit_triples(transcripts: DataFrame, mentions: DataFrame,
-                 window: int = WINDOW_W,
-                 buckets_per_core: int = 2) -> DataFrame:
+def emit_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
     """transcripts: full turn rows; mentions: output of mentions_from_turns.
 
     The cogroup key is a HASH BUCKET of conv_id, not conv_id itself: Spark
@@ -76,7 +76,7 @@ def emit_triples(transcripts: DataFrame, mentions: DataFrame,
     spark = transcripts.sparkSession
     est = scan_bytes(transcripts) or 0
     n_buckets = max(8, spark.sparkContext.defaultParallelism
-                    * buckets_per_core,
+                    * BUCKETS_PER_CORE,
                     est // BUCKET_TARGET_BYTES)
     bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
@@ -110,7 +110,7 @@ def emit_triples(transcripts: DataFrame, mentions: DataFrame,
                         # kernel never reads them (see _MENTION_COLS)
                         Mention(int(mi), et, int(st), 0, 0.0, "", ns)
                     )
-            out = emit_triples_for_conv(conv_id, turns, by_turn, window)
+            out = emit_triples_for_conv(conv_id, turns, by_turn, WINDOW_W)
             rows.extend((conv_id, t, s, p, o) for (t, s, p, o) in out)
         return pd.DataFrame(
             rows, columns=["conv_id", "turn_idx", "subj", "pred", "obj"],
