@@ -22,12 +22,10 @@ from pyspark.sql.window import Window
 
 from uk_ner_presidio_demo_spark.data.synth import ensure_transcripts
 from uk_ner_presidio_demo_spark.oracle.reference_oracle import ensure_golden
-from uk_ner_presidio_demo_spark.operators.detect import (
-    anonymized_turns, detect_turns, mentions_from_turns,
-)
 from uk_ner_presidio_demo_spark.operators.graph import (
     pagerank_oracle_sql as _pagerank_oracle,
 )
+from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
 from uk_ner_presidio_demo_spark.semantics.lm import LM_KEEP_MIN_AVG_FP
 from uk_ner_presidio_demo_spark.sources.tables import read_tpch, read_transcripts
 
@@ -86,7 +84,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: detect mentions over the sf0.001 transcripts and rank
     entity surfaces (SURVEY.md §7 Phase 1 query)."""
     tr = read_transcripts(spark, "/root/testdata/sf0.001")
-    mentions = mentions_from_turns(detect_turns(tr, with_anonymized=False))
+    mentions = kg_chain(tr, "mentions")
     return (
         mentions.groupBy("entity_type", "norm_surface")
         .agg(F.count("*").alias("n_mentions"))
@@ -101,25 +99,20 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O-5..O-8, F-3, F-4, U-1, W-1/W-2 fused detection -> mentions table."""
-    tr = read_transcripts(spark, sf_dir)
-    m = mentions_from_turns(detect_turns(tr, with_anonymized=False))
+    m = kg_chain(read_transcripts(spark, sf_dir), "mentions")
     return m.withColumn("turn_idx", F.col("turn_idx").cast("long"))
 
 
 def _q_mentions_score_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-1 'score' conflict strategy (the library default,
     core/analyzer.py:96) — vs the UI's 'priority' used elsewhere."""
-    tr = read_transcripts(spark, sf_dir)
-    m = mentions_from_turns(
-        detect_turns(tr, strategy="score", with_anonymized=False)
-    )
+    m = kg_chain(read_transcripts(spark, sf_dir), "mentions", "score")
     return m.withColumn("turn_idx", F.col("turn_idx").cast("long"))
 
 
 def _q_anonymized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F-1 anonymization splice (per-turn text rewrite)."""
-    tr = read_transcripts(spark, sf_dir)
-    a = anonymized_turns(detect_turns(tr))
+    a = kg_chain(read_transcripts(spark, sf_dir), "anonymized")
     return a.withColumn("turn_idx", F.col("turn_idx").cast("long"))
 
 
@@ -166,11 +159,7 @@ def _q_valid_turn_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J-4 turn-window relation heuristic + triple emission (§2.10) via
     cogrouped applyInPandas."""
-    from uk_ner_presidio_demo_spark.operators.triples import emit_triples
-
-    tr = read_transcripts(spark, sf_dir)
-    m = mentions_from_turns(detect_turns(tr, with_anonymized=False))
-    return emit_triples(tr, m)
+    return kg_chain(read_transcripts(spark, sf_dir), "triples")
 
 
 def _q_triple_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,42 +230,13 @@ def _q_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_canonical_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J-1 broadcast alias link + J-2 MinHash/LSH blocking + J-3 iterative
     connected components -> stable canonical ids (F-9)."""
-    from uk_ner_presidio_demo_spark.operators.canonicalize import canonical_nodes
-    from uk_ner_presidio_demo_spark.operators.linking import link_entities
-    from uk_ner_presidio_demo_spark.sources.tables import read_aliases
-
-    tr = read_transcripts(spark, sf_dir)
-    m = mentions_from_turns(detect_turns(tr, with_anonymized=False))
-    nodes, edges = link_entities(m, read_aliases(spark))
-    return canonical_nodes(nodes, edges)
+    return kg_chain(read_transcripts(spark, sf_dir), "canonical_nodes")
 
 
 def _q_canonical_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage-8 rewrite: triple entity refs -> canonical ids, deduped."""
-    from uk_ner_presidio_demo_spark.operators.canonicalize import (
-        canonical_nodes, canonical_triples,
-    )
-    from uk_ner_presidio_demo_spark.operators.linking import link_entities
-    from uk_ner_presidio_demo_spark.operators.triples import emit_triples
-    from uk_ner_presidio_demo_spark.sources.tables import read_aliases
-
-    tr = read_transcripts(spark, sf_dir)
-    # lineage cut: `m` feeds BOTH link_entities (consumed eagerly by its
-    # entity-universe collect) and emit_triples — without it the
-    # detection kernel runs twice (the r2 cooccurrence defect, VERDICT #3).
-    # r8: checkpoint only the columns those two consumers read
-    # (link_entities: entity_type+norm_surface; emit_triples:
-    # + conv_id/turn_idx/mention_idx/start) — surface/end/score strings
-    # were dead weight in the materialized rows.
-    m = mentions_from_turns(
-        detect_turns(tr, with_anonymized=False)
-    ).select(
-        "conv_id", "turn_idx", "mention_idx", "entity_type", "start",
-        "norm_surface",
-    ).localCheckpoint(eager=True)
-    nodes, edges = link_entities(m, read_aliases(spark))
-    canon = canonical_nodes(nodes, edges)
-    return canonical_triples(emit_triples(tr, m), canon).distinct()
+    """Stage-8 rewrite: triple entity refs -> canonical ids, deduped
+    (kg_chain cuts the mentions that linking and triples both read)."""
+    return kg_chain(read_transcripts(spark, sf_dir), "canonical_triples")
 
 
 def _q_kg_edge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -793,13 +753,6 @@ def _q_ann_exact_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.unionByName(lsh)
 
 
-def _q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-cell-bucketed top-k (coarse-quantizer scale path, nprobe=2)."""
-    from uk_ner_presidio_demo_spark.operators.similarity import ann_topk_ivf
-
-    return ann_topk_ivf(read_tpch(spark, sf_dir, "embeddings"))
-
-
 def _q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k over a TRAINED coarse quantizer: deterministic distributed
     k-means (int64-quantized Lloyd sums, bit-identical to the oracle
@@ -1209,19 +1162,6 @@ def _q_mm_media_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Relational operators on the driver's TPC-H-ish tables (live SQL oracles)
 # --------------------------------------------------------------------------
-
-def _q_tpch_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O-5 filter + O-8 substring projection, pushdown-friendly."""
-    o = read_tpch(spark, sf_dir, "orders")
-    return (
-        o.filter(F.col("o_totalprice") > 100000.0)
-        .select(
-            "o_orderkey",
-            F.substring("o_orderpriority", 1, 1).alias("prio_code"),
-            (F.col("o_totalprice") * 0.9).alias("discounted"),
-        )
-    )
-
 
 def _q_tpch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-1..A-5: TPC-H Q1-shaped hash aggregate with partial aggregation."""

@@ -24,13 +24,15 @@ REPO = Path(__file__).resolve().parent.parent
 
 
 def _latest_two() -> tuple[Path, Path] | None:
-    rounds = sorted(
-        REPO.glob("BENCH_r*.json"),
-        key=lambda p: int(re.search(r"r(\d+)", p.name).group(1)),
-    )
+    # only round files: BENCH_r08_control.json and the like are side
+    # experiments that would tie with BENCH_r08.json on the round number
+    matches = (re.fullmatch(r"BENCH_r(\d+)\.json", p.name)
+               for p in REPO.glob("BENCH_r*.json"))
+    rounds = sorted((int(m.group(1)), REPO / m.group(0))
+                    for m in matches if m)
     if len(rounds) < 2:
         return None
-    return rounds[-2], rounds[-1]
+    return rounds[-2][1], rounds[-1][1]
 
 
 def main() -> int:

@@ -85,9 +85,7 @@ def child_main(cores: int, sf_dir: str, timed: int, replicate: int) -> None:
 
     from pyspark.sql import DataFrame
 
-    from uk_ner_presidio_demo_spark.operators.detect import (
-        detect_turns, mentions_from_turns,
-    )
+    from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
     from uk_ner_presidio_demo_spark.session import get_spark
     from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
 
@@ -96,7 +94,7 @@ def child_main(cores: int, sf_dir: str, timed: int, replicate: int) -> None:
     tr = functools.reduce(DataFrame.union, [base] * replicate)
     n_turns = tr.count()
 
-    job = mentions_from_turns(detect_turns(tr, with_anonymized=False))
+    job = kg_chain(tr, "mentions")
     force(job)  # warm-up pass
     walls = []
     for _ in range(timed):

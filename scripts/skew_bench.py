@@ -195,16 +195,13 @@ def main() -> None:
         from uk_ner_presidio_demo_spark.operators.canonicalize import (
             connected_components,
         )
-        from uk_ner_presidio_demo_spark.operators.detect import (
-            detect_turns, mentions_from_turns,
-        )
         from uk_ner_presidio_demo_spark.operators.linking import (
             distinct_entities, link_entities,
         )
+        from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
         from uk_ner_presidio_demo_spark.sources.tables import read_aliases
 
-        mentions = mentions_from_turns(detect_turns(tr, "priority")) \
-            .localCheckpoint(eager=True)
+        mentions = kg_chain(tr, "mentions").localCheckpoint(eager=True)
         mcols = mentions.columns
         hot_ment = spark.range(50_000).selectExpr(
             "concat('skewconv', CAST(id % 97 AS STRING)) AS conv_id",

@@ -1,15 +1,12 @@
-import os
-
 import pytest
-
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
 
 @pytest.fixture(scope="session")
 def spark():
     from uk_ner_presidio_demo_spark.session import get_spark
 
-    s = get_spark(app_name="tests", cores=int(os.environ["SPARK_GRAFT_CPUS"]))
+    # local[$SPARK_GRAFT_CPUS], else every CPU this process may run on
+    s = get_spark(app_name="tests")
     yield s
     s.stop()
 

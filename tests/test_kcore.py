@@ -78,6 +78,28 @@ def test_local_distributed_set_parity(spark, k):
     assert local == _brute_k_core(edges, k)
 
 
+@pytest.mark.parametrize("extra, local", [(0, True), (1, False)],
+                         ids=["at_gate", "gate_plus_one"])
+def test_gate_boundary(spark, monkeypatch, extra, local):
+    """Exactly local_max_edges undirected edges take the driver-local
+    peel; one edge more takes the distributed loop — with the same node
+    set either way."""
+    from uk_ner_presidio_demo_spark.operators import graph
+
+    calls = []
+    real = graph._local_k_core
+    monkeypatch.setattr(graph, "_local_k_core",
+                        lambda rows, k: calls.append(1) or real(rows, k))
+    edges = FIXED[3]  # 8 distinct undirected edges
+    df = _df(spark, edges)
+    got = {r.node for r in k_core(
+        df, 2, local_max_edges=len(edges) - extra).collect()}
+    assert bool(calls) == local
+    assert got == {r.node for r in k_core(
+        df, 2, local_max_edges=0).collect()}
+    assert got == _brute_k_core(edges, 2) == {"a", "b", "c", "d"}
+
+
 def test_core_nesting_property(spark):
     """(k+1)-core ⊆ k-core, and k=1 drops exactly the isolated side of
     the undirected simple graph."""

@@ -447,3 +447,86 @@ def test_unknown_scale_name_raises(sf_dir):
 
     with pytest.raises(ValueError, match="unknown scale"):
         sf_key_for_dir(sf_dir)
+
+
+CHAIN = STAGES[1:]  # the stages of plans/pipeline.py KG_CHAIN
+
+
+def _descendants(stage):
+    out = {stage}
+    for s in CHAIN:  # dependency order
+        if out & set(STAGE_INPUTS[s]):
+            out.add(s)
+    return out
+
+
+def test_kg_chain_matches_the_pipeline_checkpoints(spark, sf001, run_dirs,
+                                                   first_run):
+    """kg_chain(tr, s) holds the rows KGPipeline checkpointed for stage s.
+    Detection leaves out the anonymized text unless `anonymized` is
+    built, so detected_turns is compared on the columns it returns."""
+    from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
+    from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
+
+    ckpt, _ = run_dirs
+    tr = read_transcripts(spark, sf001)
+    for stage in CHAIN:
+        got = kg_chain(tr, stage)
+        want = spark.read.parquet(f"{ckpt}/{stage}/data")
+        missing = set(want.columns) - set(got.columns)
+        assert missing == ({"anonymized_text"} if stage == "detected_turns"
+                           else set()), stage
+        want = want.select(*got.columns)
+        assert got.schema.simpleString() == want.schema.simpleString(), stage
+        assert got.count() == want.count() > 0, stage
+        assert got.exceptAll(want).isEmpty(), stage
+        assert want.exceptAll(got).isEmpty(), stage
+    with pytest.raises(ValueError, match="unknown stage"):
+        kg_chain(tr, "nodes")
+
+
+def test_strategy_change_rebuilds_the_chain_only(spark, sf001, run_dirs,
+                                                 first_run, tmp_path):
+    """The detection strategy is detected_turns' lineage: a rerun with
+    another strategy over a priority checkpoint rebuilds every chain
+    stage, and validate_metrics, which does not read it, skips."""
+    ckpt, out = _copy_ckpt(run_dirs, tmp_path)
+    pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                      out_dir=out, strategy="score")
+    pipe.run()
+    assert [r.stage for r in pipe.results] == STAGES
+    assert {r.stage for r in pipe.results if not r.skipped} == set(CHAIN)
+
+
+def test_fingerprints_follow_the_stage_graph(spark, sf001, run_dirs,
+                                             first_run, monkeypatch):
+    """The manifests record the fingerprints derived from the stage table;
+    the table's graph is the one above; and changing one stage's
+    fingerprint (through a lineage it alone declares) changes exactly that
+    stage's and its descendants', while a new root changes every one."""
+    from uk_ner_presidio_demo_spark.plans import pipeline
+
+    ckpt, _ = run_dirs
+    pipe = KGPipeline(spark=spark, sf_dir=sf001, checkpoint_dir=ckpt,
+                      out_dir="")
+    fps = pipe.fingerprints()
+    assert list(fps) == STAGES
+    for stage in STAGES:
+        man = json.loads(pipe._manifest(stage).read_text())
+        assert man["input_fingerprint"] == fps[stage], stage
+    assert {s: tuple(e[0]) for s, e in pipeline.KG_CHAIN.items()} == {
+        s: STAGE_INPUTS[s] for s in CHAIN}
+
+    root = fps["validate_metrics"]
+    lineage = {"strategy": "strategy=priority", "aliases": "a.parquet:1:1",
+               "probe": "x"}
+    base = pipeline.chain_fingerprints(root, lineage)
+    moved = pipeline.chain_fingerprints(root + "|other", lineage)
+    assert all(moved[s] != base[s] for s in CHAIN)
+    for stage in CHAIN:
+        inputs, _, build = pipeline.KG_CHAIN[stage]
+        with monkeypatch.context() as m:
+            m.setitem(pipeline.KG_CHAIN, stage, (inputs, "probe", build))
+            probed = pipeline.chain_fingerprints(root, lineage)
+        assert {s for s in CHAIN if probed[s] != base[s]} == \
+            _descendants(stage), stage

@@ -109,6 +109,18 @@ def test_estimator_note_not_warning_for_prefield_files(tmp_path):
     assert "pre-estimator-field" in out
 
 
+def test_default_run_compares_the_last_two_rounds():
+    """With no arguments the script compares the two highest-numbered
+    BENCH_r<N>.json files; side files such as BENCH_r08_control.json
+    share a round number but are not rounds."""
+    old, new = REPO / "BENCH_r07.json", REPO / "BENCH_r08.json"
+    if not (old.exists() and new.exists()):
+        pytest.skip("BENCH_r07/r08 files not present")
+    p = subprocess.run([sys.executable, str(SCRIPT)],
+                       capture_output=True, text=True)
+    assert (p.returncode, p.stdout) == _run(old, new)
+
+
 def test_headline_count_single_source_of_truth():
     """BENCH/BASELINE.md's stated query count must equal len(bench.HEADLINE)
     (VERDICT r3 #8: one generated number, all documents agree)."""

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import driver_frame
+from ..session import collect_within, driver_frame
 
 
 def _node_id(etype_col: str, surface_col: str):
@@ -105,10 +105,8 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     if not edges.isLocal():
         e = e.localCheckpoint(eager=True)
 
-    # one action decides the gate AND fetches the rows: len <= gate iff
-    # count <= gate, and the driver never holds more than gate + 1 rows
-    rows = e.limit(local_max_edges + 1).collect()
-    if len(rows) <= local_max_edges:
+    rows = collect_within(e, local_max_edges)
+    if rows is not None:
         labels = driver_frame(nodes.sparkSession, _local_labels(rows),
                               LABELS_SCHEMA)
         return n.join(F.broadcast(labels), "id", "left").select(

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import driver_frame
+from ..session import collect_within, driver_frame
 
 EDGE_KEY = ["subj", "pred", "obj"]
 
@@ -195,12 +195,10 @@ def pagerank(edges: DataFrame, k: int = 8,
     if k < 1:
         raise ValueError(f"pagerank: k must be >= 1, got {k}")
 
-    # size-gated local strategy (see PR_LOCAL_MAX_EDGES): one action
-    # decides the gate AND fetches the rows (len <= gate iff count <=
-    # gate; the driver holds at most gate + 1 rows), then the fixed point
-    # is solved driver-side
-    rows = edges.limit(local_max_edges + 1).collect()
-    if len(rows) <= local_max_edges:
+    # size-gated local strategy (see PR_LOCAL_MAX_EDGES): the fixed point
+    # is solved driver-side over the collected rows
+    rows = collect_within(edges, local_max_edges)
+    if rows is not None:
         schema = T.StructType([
             T.StructField("node", edges.schema["subj"].dataType),
             T.StructField("rank_fp", T.LongType()),
@@ -368,15 +366,15 @@ def k_core(edges: DataFrame, k: int,
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    n_und = und.count()  # one action: gates the strategy AND seeds the loop
-    if n_und <= local_max_edges:
-        alive = sorted(_local_k_core(und.collect(), k))
+    rows = collect_within(und, local_max_edges)
+    if rows is not None:
+        alive = sorted(_local_k_core(rows, k))
         schema = T.StructType(
             [T.StructField("node", und.schema["u"].dataType)]
         )
         return driver_frame(spark, [(n,) for n in alive], schema)
 
-    cur, n_cur = und, n_und
+    cur, n_cur = und, und.count()
     for _ in range(max_iter):
         deg = (
             cur.select(F.col("u").alias("node"))

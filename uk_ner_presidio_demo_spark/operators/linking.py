@@ -4,9 +4,9 @@ blocking (J-2, F-8) with exact-Jaccard verification [north-rule].
 Linking operates on DISTINCT (entity_type, norm_surface) pairs, not on
 mentions: the entity universe is orders of magnitude smaller than the
 mention stream (SURVEY.md §4.3).  Its physical strategy is size-gated
-like connected components (LINK_LOCAL_MAX_ENTITIES); one
-`distinct().limit(gate + 1).collect()` decides the gate and fetches the
-rows.
+like connected components (LINK_LOCAL_MAX_ENTITIES); one bounded
+collect of the distinct universe (`session.collect_within`) decides the
+gate and fetches the rows.
 
   - at or under the gate (the driver path): the alias lookup, the band
     keys, the a<b candidate pairs of each (entity_type, band, bhash)
@@ -44,7 +44,7 @@ from ..semantics.minhash import (
     JACCARD_THRESHOLD, band_keys, jaccard, shingles,
     minhash_signatures_batch,
 )
-from ..session import driver_frame
+from ..session import collect_within, driver_frame
 
 # Strategy gate: entity universes of at most this many distinct
 # (entity_type, norm_surface) pairs are linked on the driver.  The driver
@@ -94,8 +94,12 @@ def _jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([jaccard(x, y) for x, y in zip(a, b)])
 
 
+# the mentions columns linking reads: the entity universe's key
+ENTITY_COLS = ("entity_type", "norm_surface")
+
+
 def distinct_entities(mentions: DataFrame) -> DataFrame:
-    return mentions.select("entity_type", "norm_surface").distinct()
+    return mentions.select(*ENTITY_COLS).distinct()
 
 
 def alias_match(ents: DataFrame, aliases: DataFrame) -> DataFrame:
@@ -152,10 +156,8 @@ def link_entities(mentions: DataFrame, aliases: DataFrame,
 
     `local_max_entities` is the strategy gate (LINK_LOCAL_MAX_ENTITIES);
     tests and benchmarks pass 0 to force the distributed path."""
-    # one action decides the gate AND fetches the rows: len <= gate iff
-    # count <= gate, and the driver never holds more than gate + 1 rows
-    rows = distinct_entities(mentions).limit(local_max_entities + 1).collect()
-    if len(rows) <= local_max_entities:
+    rows = collect_within(distinct_entities(mentions), local_max_entities)
+    if rows is not None:
         alias_rows = aliases.select(
             "entity_type", "alias_norm", "canonical_norm").collect()
         nodes, edges = _link_local(rows, alias_rows)

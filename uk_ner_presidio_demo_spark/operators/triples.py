@@ -34,13 +34,14 @@ TRIPLES_SCHEMA = T.StructType(
     ]
 )
 
-# Only the Mention fields the rule kernel actually reads cross the
-# cogroup shuffle (r8, guide-§2.3 project-before-exchange):
+# The mentions columns emit_triples reads; only these cross the cogroup
+# shuffle (r8, guide-§2.3 project-before-exchange): the turn key,
 # entity_type/norm_surface (refs), start (contacts_via tie-break), and
 # mention_idx (deterministic per-turn ordering).  end/score/surface are
 # never consumed by emit_triples_for_conv — surface strings were the
 # fattest shuffled column.
-_MENTION_COLS = ["mention_idx", "entity_type", "start", "norm_surface"]
+MENTION_COLS = ("conv_id", "turn_idx", "mention_idx", "entity_type", "start",
+                "norm_surface")
 
 # ~64 KB of transcript parquet per cogroup key ≈ 1.4k turns/bucket at
 # this corpus's bytes/turn — the measured flat spot at BOTH sf0.1 and
@@ -107,7 +108,7 @@ def emit_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
                 ):
                     by_turn.setdefault(int(ti), []).append(
                         # end/score/surface are placeholders: the rule
-                        # kernel never reads them (see _MENTION_COLS)
+                        # kernel never reads them (see MENTION_COLS)
                         Mention(int(mi), et, int(st), 0, 0.0, "", ns)
                     )
             out = emit_triples_for_conv(conv_id, turns, by_turn, WINDOW_W)
@@ -118,8 +119,7 @@ def emit_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
 
     turns_meta = transcripts.select("conv_id", "turn_idx", "tool",
                                     bucket.alias("bucket"))
-    m = mentions.select("conv_id", "turn_idx", *_MENTION_COLS,
-                        bucket.alias("bucket"))
+    m = mentions.select(*MENTION_COLS, bucket.alias("bucket"))
     return (
         turns_meta.groupBy("bucket")
         .cogroup(m.groupBy("bucket"))

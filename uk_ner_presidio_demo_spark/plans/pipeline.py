@@ -1,18 +1,21 @@
 """End-to-end staged KG pipeline with per-stage checkpoints, lineage
 manifests, and counter metrics — resumable reruns [north-rule].
 
-Stage graph (SURVEY.md §3.4); an arrow is "starts after ... has ended":
+The KG chain is the stage table `KG_CHAIN` (an arrow: "is read by"):
 
-    validate_metrics                      (scan + reject counters)
     detected_turns                        (scan + fused detection)
       -> mentions, anonymized
     mentions -> triples, canonical_nodes  (link + connected components)
     triples, canonical_nodes -> canonical_triples
-    canonical_nodes   -> nodes write
-    canonical_triples -> edges write
-    everything        -> metrics table append
 
-Concurrency contract: `KGPipeline.run` runs this graph on one thread pool
+`KGPipeline.run` checkpoints each of its stages, next to validate_metrics
+(scan + reject counters), the nodes write (after canonical_nodes), the
+edges write (after canonical_triples) and the metrics append (after
+everything).  `kg_chain(transcripts, upto)` builds stage `upto` lazily,
+and only its ancestors; the board queries in __spark_entry__.py project
+it.  Fingerprints and lineage cuts are derived from the table.
+
+Concurrency contract: `KGPipeline.run` runs its steps on one thread pool
 over the one session (`StagedPipeline._run_graph`): a step starts as soon
 as its inputs have ended, so validate_metrics overlaps detected_turns,
 mentions overlaps anonymized, triples overlaps canonical_nodes, and the
@@ -38,12 +41,13 @@ parquet back with that schema — the driver-level restatement of
 "resumable from checkpoint with per-partition lineage + metrics"
 (BASELINE.json north_rule).  A manifest without a schema is stale and
 the stage is rebuilt.  Every read of a file the pipeline wrote carries
-its schema: inference is a Spark job per read.  Fingerprints chain: a
-stage's fingerprint folds in its upstream stages', so editing an
-upstream invalidates everything downstream, deterministically.  The
-root fingerprint holds the semantics version (GOLDEN_VERSION), so an
-engine upgrade rebuilds every stage; the linking stage also folds in the
-alias dictionary it reads.
+its schema: inference is a Spark job per read.
+
+A chain stage's fingerprint (`chain_fingerprints`) digests the root,
+its declared non-frame lineage (strategy, alias file) and its inputs'
+fingerprints, so a change invalidates exactly the stages downstream of
+it.  The root, validate_metrics' fingerprint, is the input files plus
+the semantics version (GOLDEN_VERSION): an engine upgrade rebuilds all.
 
 Partitioned materialization: edges are written partitioned by `pred` and a
 `conv_bucket` (pmod(hash(conv_id), n)) — the parquet-layout equivalent of
@@ -54,12 +58,14 @@ edges for hot-entity downstream aggs (F-9 skew note).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+from functools import partial
 from pathlib import Path
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
@@ -72,8 +78,8 @@ from ..operators.canonicalize import canonical_nodes, canonical_triples
 from ..operators.detect import (
     anonymized_turns, detect_turns, mentions_from_turns,
 )
-from ..operators.linking import link_entities
-from ..operators.triples import emit_triples
+from ..operators.linking import ENTITY_COLS, link_entities
+from ..operators.triples import MENTION_COLS, emit_triples
 from ..session import driver_frame
 from ..sources.tables import read_aliases, read_transcripts, valid_text_predicate
 
@@ -110,6 +116,77 @@ def _partitioned_schema(schema: T.StructType, part: str) -> T.StructType:
     with: the data columns, then the partition column last."""
     return T.StructType([f for f in schema if f.name != part]
                         + [schema[part]])
+
+
+class ChainSource(NamedTuple):
+    """What the KG chain reads besides its own stage frames."""
+    transcripts: DataFrame
+    strategy: str        # detection's conflict strategy
+    anonymized: bool     # detection also returns the anonymized text
+
+
+# The KG chain: {stage: (inputs, lineage, build)} in dependency order.
+# ``inputs`` maps each input stage to the columns read from it (None: all);
+# ``lineage`` names the stage's non-frame input, "strategy" or "aliases";
+# ``build(src, frames)`` makes the stage's frame from a ChainSource and
+# its inputs' frames, calling the module globals (emit_triples, ...).
+KG_CHAIN = {
+    "detected_turns": ({}, "strategy", lambda s, f: detect_turns(
+        s.transcripts, s.strategy, with_anonymized=s.anonymized)),
+    "mentions": ({"detected_turns": None}, None,
+                 lambda s, f: mentions_from_turns(f["detected_turns"])),
+    "anonymized": ({"detected_turns": None}, None,
+                   lambda s, f: anonymized_turns(f["detected_turns"])),
+    "triples": ({"mentions": MENTION_COLS}, None,
+                lambda s, f: emit_triples(s.transcripts, f["mentions"])),
+    "canonical_nodes": ({"mentions": ENTITY_COLS}, "aliases",
+                        lambda s, f: canonical_nodes(*link_entities(
+                            f["mentions"],
+                            read_aliases(s.transcripts.sparkSession)))),
+    "canonical_triples": ({"triples": None, "canonical_nodes": None}, None,
+                          lambda s, f: canonical_triples(
+                              f["triples"], f["canonical_nodes"]).distinct()),
+}
+
+
+def chain_fingerprints(root: str, lineage: dict[str, str]) -> dict[str, str]:
+    """{stage: fingerprint} for KG_CHAIN: a digest of ``root``, the
+    ``lineage`` value of the stage's declared lineage and its inputs'
+    fingerprints, so a change reaches every descendant and no other."""
+    fps: dict[str, str] = {}
+    for stage, (inputs, lin, _) in KG_CHAIN.items():
+        parts = [root, lineage[lin] if lin else "", *(fps[i] for i in inputs)]
+        fps[stage] = hashlib.sha256("\n".join(parts).encode()).hexdigest()
+    return fps
+
+
+def kg_chain(transcripts: DataFrame, upto: str,
+             strategy: str = "priority") -> DataFrame:
+    """Stage ``upto`` of KG_CHAIN over ``transcripts``, building only its
+    ancestors.  A frame two or more of them read is cut once with
+    localCheckpoint(eager=True), pruned to the columns they read, so the
+    work upstream of it (detection) runs once: the CLAUDE.md two-consumer
+    invariant.  Detection returns the anonymized text only when
+    ``anonymized`` is built."""
+    if upto not in KG_CHAIN:
+        raise ValueError(f"kg_chain: unknown stage {upto!r}")
+    needed = {upto}
+    for stage in reversed(KG_CHAIN):
+        if stage in needed:
+            needed.update(KG_CHAIN[stage][0])
+    src = ChainSource(transcripts, strategy, "anonymized" in needed)
+    frames: dict[str, DataFrame] = {}
+    for stage in (s for s in KG_CHAIN if s in needed):
+        df = KG_CHAIN[stage][2](src, frames)
+        reads = [KG_CHAIN[c][0][stage] for c in needed
+                 if stage in KG_CHAIN[c][0]]
+        if len(reads) >= 2:
+            if None not in reads:
+                df = df.select(*[c for c in df.columns
+                                 if any(c in r for r in reads)])
+            df = df.localCheckpoint(eager=True)
+        frames[stage] = df
+    return frames[upto]
 
 
 @dataclass
@@ -253,18 +330,20 @@ class KGPipeline(StagedPipeline):
 
     # ---- run ---------------------------------------------------------------
 
-    def run(self) -> dict[str, DataFrame]:
-        spark = self.spark
+    def fingerprints(self) -> dict[str, str]:
+        """{stage: input fingerprint}; validate_metrics' is the root."""
         from ..data.synth import ensure_aliases, ensure_transcripts
         from ..oracle import reference_oracle
 
-        src_path = ensure_transcripts(self.sf_dir)
-        # the semantics version joins the input lineage: an engine whose
-        # outputs differ bumps it, so no stage resumes another's checkpoint
-        fp_src = (f"{_fingerprint_path(src_path)}"
-                  f"|semantics=v{reference_oracle.GOLDEN_VERSION}")
+        root = (f"{_fingerprint_path(ensure_transcripts(self.sf_dir))}"
+                f"|semantics=v{reference_oracle.GOLDEN_VERSION}")
+        lineage = {"strategy": f"strategy={self.strategy}",
+                   "aliases": _fingerprint_path(ensure_aliases())}
+        return {"validate_metrics": root, **chain_fingerprints(root, lineage)}
 
-        transcripts = read_transcripts(spark, self.sf_dir)
+    def run(self) -> dict[str, DataFrame]:
+        fps = self.fingerprints()
+        transcripts = read_transcripts(self.spark, self.sf_dir)
 
         # stage: validate metrics (reject counters — O-5 at scale filters,
         # never raises; the rejects become metrics rows).  perfbench/flow.py
@@ -278,46 +357,22 @@ class KGPipeline(StagedPipeline):
                 ),
             )
 
-        fp_detect = f"{fp_src}|strategy={self.strategy}"
-        fp_next = fp_detect + "|detected"
-        # linking reads the alias dictionary: editing it rebuilds the
-        # canonical nodes and, chained from them, the canonical triples
-        fp_link = f"{fp_next}|link|{_fingerprint_path(ensure_aliases())}"
+        def stage(name, inputs, build):  # run-or-resume after ``inputs``
+            return tuple(inputs), lambda r: self._stage(
+                name, fps[name], lambda: build(r))
 
-        def stage(name, fp, inputs, build):
-            """The graph step that runs or resumes stage ``name`` once the
-            steps named in ``inputs`` have ended; ``build`` gets their
-            outputs."""
-            return name, (inputs,
-                          lambda r: self._stage(name, fp, lambda: build(r)))
-
-        def build_canon(mentions):
-            nodes, edges = link_entities(mentions, read_aliases(spark))
-            return canonical_nodes(nodes, edges)
-
+        src = ChainSource(transcripts, self.strategy, anonymized=True)
         # the stage graph of the module docstring, in declaration order
-        out = self._run_graph(dict([
-            stage("validate_metrics", fp_src, (), lambda r: build_validate()),
-            # detect (fused): per-turn rows with mention arrays
-            stage("detected_turns", fp_detect, (),
-                  lambda r: detect_turns(transcripts, self.strategy)),
-            stage("mentions", fp_next, ("detected_turns",),
-                  lambda r: mentions_from_turns(r["detected_turns"])),
-            stage("anonymized", fp_next, ("detected_turns",),
-                  lambda r: anonymized_turns(r["detected_turns"])),
-            stage("triples", fp_next, ("mentions",),
-                  lambda r: emit_triples(transcripts, r["mentions"])),
-            stage("canonical_nodes", fp_link, ("mentions",),
-                  lambda r: build_canon(r["mentions"])),
-            stage("canonical_triples", fp_link + "|canon",
-                  ("triples", "canonical_nodes"),
-                  lambda r: canonical_triples(
-                      r["triples"], r["canonical_nodes"]).distinct()),
-            ("nodes", (("canonical_nodes",),
-                       lambda r: self._write_nodes(r["canonical_nodes"]))),
-            ("edges", (("canonical_triples",),
-                       lambda r: self._write_edges(r["canonical_triples"]))),
-        ]))
+        out = self._run_graph({
+            "validate_metrics": stage("validate_metrics", (),
+                                      lambda r: build_validate()),
+            **{name: stage(name, inputs, partial(build, src))
+               for name, (inputs, _, build) in KG_CHAIN.items()},
+            "nodes": (("canonical_nodes",),
+                      lambda r: self._write_nodes(r["canonical_nodes"])),
+            "edges": (("canonical_triples",),
+                      lambda r: self._write_edges(r["canonical_triples"])),
+        })
         self._write_metrics()
         return {"nodes": out["nodes"], "edges": out["edges"]}
 

@@ -100,3 +100,11 @@ def driver_frame(spark: SparkSession, rows, schema: T.StructType
         ),
         schema,
     )
+
+
+def collect_within(df: DataFrame, limit: int) -> list | None:
+    """``df``'s rows when it has at most ``limit`` of them, else None: one
+    bounded ``limit(limit + 1).collect()`` decides the size gate and
+    fetches the rows, and the driver never holds more than ``limit + 1``."""
+    rows = df.limit(max(limit + 1, 0)).collect()
+    return rows if len(rows) <= limit else None
