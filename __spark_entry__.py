@@ -1529,9 +1529,8 @@ def _q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan; the oracle counts triangles over the hash-identical golden
     parquet with an independent three-way normalized-edge self-join.
 
-    r7 adds `n_core5_nodes`: the 5-core size (operators/graph.py
-    k_core — iterative peel, size-gated with set-identical local/
-    distributed strategies, tests/test_kcore.py) vs an UNROLLED
+    `n_core5_nodes` is the 5-core size (operators/graph.py k_core — the
+    distributed iterative peel, tests/test_kcore.py) vs an UNROLLED
     chained-CTE peel in DuckDB (the pagerank-oracle pattern; 8 rounds
     >> the measured peel depth, and an unconverged unroll would
     hash-mismatch, so convergence is itself verified on the KG

@@ -1,7 +1,6 @@
-"""k-core peel (operators/graph.py k_core): uniqueness-based parity
-between the driver-local and distributed strategies, a networkx-free
-brute-force twin, hypothesis-style randomized graphs, and the KG-shaped
-use (prune weakly-attached entities from canonical triples)."""
+"""k-core peel (operators/graph.py k_core): a networkx-free brute-force
+twin on fixed and randomized graphs, the max_iter bound, and the
+KG-shaped use (prune weakly-attached entities from canonical triples)."""
 
 import random
 
@@ -12,8 +11,8 @@ from uk_ner_presidio_demo_spark.operators.graph import k_core
 
 
 def _brute_k_core(edges, k):
-    """Independent reference: recompute-from-scratch peel (no queue) —
-    a different algorithmic shape than the operator's twin."""
+    """Independent reference: a recompute-from-scratch peel over Python
+    sets, no Spark involved."""
     alive = {n for e in edges for n in e[:2]}
     und = {(min(a, b), max(a, b)) for a, b, *_ in edges if a != b}
     while True:
@@ -35,6 +34,11 @@ def _df(spark, edges):
     )
 
 
+_rng = random.Random(23)
+RANDOM_300 = [
+    (f"n{_rng.randrange(60)}", f"n{_rng.randrange(60)}") for _ in range(300)
+]
+
 FIXED = [
     # triangle + pendant: 2-core = the triangle
     [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")],
@@ -49,6 +53,8 @@ FIXED = [
     # self-loops and duplicate/reversed edges must not inflate degree
     [("a", "a"), ("a", "b"), ("b", "a"), ("b", "c"), ("c", "a"),
      ("a", "b")],
+    # random graph with hubs, chains, and pendants
+    RANDOM_300,
 ]
 
 
@@ -57,47 +63,6 @@ FIXED = [
 def test_matches_brute_reference(spark, edges, k):
     got = {r.node for r in k_core(_df(spark, edges), k).collect()}
     assert got == _brute_k_core(edges, k)
-
-
-@pytest.mark.parametrize("k", [2, 3])
-def test_local_distributed_set_parity(spark, k):
-    """The k-core is UNIQUE, so the driver-local peel and the
-    distributed loop must return the same node set on a random graph
-    with hubs, chains, and pendants."""
-    rng = random.Random(23)
-    edges = [
-        (f"n{rng.randrange(60)}", f"n{rng.randrange(60)}")
-        for _ in range(300)
-    ]
-    df = _df(spark, edges)
-    local = {r.node for r in k_core(df, k).collect()}
-    dist = {
-        r.node for r in k_core(df, k, local_max_edges=0).collect()
-    }
-    assert local == dist
-    assert local == _brute_k_core(edges, k)
-
-
-@pytest.mark.parametrize("extra, local", [(0, True), (1, False)],
-                         ids=["at_gate", "gate_plus_one"])
-def test_gate_boundary(spark, monkeypatch, extra, local):
-    """Exactly local_max_edges undirected edges take the driver-local
-    peel; one edge more takes the distributed loop — with the same node
-    set either way."""
-    from uk_ner_presidio_demo_spark.operators import graph
-
-    calls = []
-    real = graph._local_k_core
-    monkeypatch.setattr(graph, "_local_k_core",
-                        lambda rows, k: calls.append(1) or real(rows, k))
-    edges = FIXED[3]  # 8 distinct undirected edges
-    df = _df(spark, edges)
-    got = {r.node for r in k_core(
-        df, 2, local_max_edges=len(edges) - extra).collect()}
-    assert bool(calls) == local
-    assert got == {r.node for r in k_core(
-        df, 2, local_max_edges=0).collect()}
-    assert got == _brute_k_core(edges, 2) == {"a", "b", "c", "d"}
 
 
 def test_core_nesting_property(spark):
@@ -121,17 +86,26 @@ def test_empty_and_bad_k(spark):
     assert k_core(empty, 2).columns == ["node"]
     with pytest.raises(ValueError, match="k must be"):
         k_core(empty, 0)
-    # chain graph, k=2 -> empty via the distributed loop's zero branch
+    # chain graph, k=2 -> empty via the loop's no-edge-left exit
     chain = _df(spark, [("a", "b"), ("b", "c")])
-    assert k_core(chain, 2, local_max_edges=-1).count() == 0
-    assert k_core(chain, 2, local_max_edges=-1).columns == ["node"]
+    assert k_core(chain, 2).count() == 0
+    assert k_core(chain, 2).columns == ["node"]
+
+
+def test_loop_raises_when_not_converged(spark):
+    """A 6-edge path peels two ends per round: one round is no fixed
+    point, so the loop must raise at max_iter instead of returning a
+    part-peeled node set (as connected_components does)."""
+    path = _df(spark, [(f"p{i}", f"p{i + 1}") for i in range(6)])
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        k_core(path, 2, max_iter=1)
 
 
 @pytest.mark.parametrize("typ, nodes", [("string", ("a", "b", "c")),
                                         ("bigint", (1, 2, 3))])
 def test_local_result_keeps_node_type(spark, typ, nodes):
-    """The driver-built local result carries the edge frame's node type,
-    whether or not the core is empty."""
+    """The result carries the edge frame's node type, whether or not the
+    core is empty."""
     a, b, c = nodes
     tri = spark.createDataFrame([(a, b), (b, c), (c, a)],
                                 f"subj {typ}, obj {typ}")
@@ -152,12 +126,3 @@ def test_kg_shaped_use(spark, sf001):
                                   .withColumn("n_obs", F.lit(1)), 2)
            .collect()}
     assert got == _brute_k_core(edges, 2)
-    # distributed twin agrees on the real graph too
-    dist = {
-        r.node
-        for r in k_core(
-            ct.select("subj", "obj").withColumn("n_obs", F.lit(1)), 2,
-            local_max_edges=0,
-        ).collect()
-    }
-    assert dist == got

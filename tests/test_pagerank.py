@@ -80,11 +80,12 @@ def _rand_edges(n_nodes=120, n_edges=600, seed=7):
 
 
 def test_strategy_bit_parity(spark):
-    """The size gate is scheduling, not semantics (VERDICT r6 #2):
-    driver-local and distributed fixed points must be EXACTLY equal —
-    integer ranks, so the test is bit equality, on a graph large
-    enough to have hubs, chains, and dangling mass.  Multi-edges are
-    pre-aggregated per the operator contract."""
+    """The size gate is scheduling, not semantics: driver-local and
+    distributed fixed points must be EXACTLY equal — integer ranks, so
+    the test is bit equality, on a graph large enough to have hubs,
+    chains, and dangling mass.  k=9 and k=16 run the distributed loop
+    past its PR_CKPT_EVERY lineage cut.  Multi-edges are pre-aggregated
+    per the operator contract."""
     df = (
         spark.createDataFrame(
             _rand_edges(), "subj string, obj string, n_obs long"
@@ -92,7 +93,7 @@ def test_strategy_bit_parity(spark):
         .groupBy("subj", "obj")
         .agg(F.sum("n_obs").alias("n_obs"))
     )
-    for k in (1, 5):
+    for k in (1, 5, 9, 16):
         local = sorted(map(tuple, pagerank(df, k=k).collect()))
         dist = sorted(
             map(tuple, pagerank(df, k=k, local_max_edges=0).collect())
@@ -146,7 +147,8 @@ def test_duckdb_oracle_bit_parity(spark, edges_df, tmp_path, gate):
 
 def test_empty_graph_and_bad_k(spark):
     """Empty edge frame propagates emptiness (no driver-side division by
-    zero); k < 1 is rejected on both engine and oracle sides."""
+    zero); k < 1 is rejected on both engine and oracle sides, on the
+    engine side before any Spark job runs."""
     import pytest
 
     from uk_ner_presidio_demo_spark.operators.graph import (
@@ -163,9 +165,18 @@ def test_empty_graph_and_bad_k(spark):
         StructField("node", StringType()), StructField("rank_fp", LongType()),
     ])
     with pytest.raises(ValueError, match="k must be"):
-        pagerank(empty, k=0)
-    with pytest.raises(ValueError, match="k must be"):
         pagerank_oracle_sql("/nonexistent.parquet", k=0)
+    # a bad k is refused before any Spark job: the edge cut would run
+    # the whole upstream chain first
+    sc = spark.sparkContext
+    group = "test_empty_graph_and_bad_k"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="k must be"):
+            pagerank(empty, k=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 @pytest.mark.parametrize("extra, local", [(0, True), (1, False)],

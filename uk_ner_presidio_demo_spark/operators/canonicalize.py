@@ -9,12 +9,13 @@ order, so Spark's binary string comparison agrees with the Python oracle's
 min()).  Canonical surface = norm part of the min id; canonical_id =
 sha2("entity_type:canonical_norm", 256) — stable across runs (F-9).
 
-Lineage control: every iteration ends in `localCheckpoint(eager=True)` to
-truncate the exponentially-growing join lineage (SURVEY.md §4.3; classic
-iterative-dataflow practice), and convergence is checked with a cheap
-aggregate on the changed-count.  Alias/LSH components are shallow (diameter
-~2-4), so the loop converges in a handful of iterations; `max_iter` bounds
-pathological chains, and a loop that hits it raises.
+Lineage control: the loop runs in graph.iterate, which ends every round in
+`localCheckpoint(eager=True)` to truncate the exponentially-growing join
+lineage (SURVEY.md §4.3; classic iterative-dataflow practice); a round
+converges when no label changed (an anti-join emptiness check).  Alias/LSH
+components are shallow (diameter ~2-4), so the loop converges in a handful
+of iterations; `max_iter` bounds pathological chains, and a loop that hits
+it raises.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import collect_within, driver_frame
+from .graph import iterate
 
 
 def _node_id(etype_col: str, surface_col: str):
@@ -107,14 +109,24 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
 
     rows = collect_within(e, local_max_edges)
     if rows is not None:
-        labels = driver_frame(nodes.sparkSession, _local_labels(rows),
-                              LABELS_SCHEMA)
-        return n.join(F.broadcast(labels), "id", "left").select(
-            "entity_type",
-            "norm_surface",
-            F.coalesce("label", F.col("id")).alias("label"),
-        )
+        labels = F.broadcast(driver_frame(
+            nodes.sparkSession, _local_labels(rows), LABELS_SCHEMA))
+    else:
+        labels = _propagated_labels(e, max_iter)
+    # ONE pass over the entity universe: endpoint nodes take their
+    # converged label, singletons (the dominant case at scale — no label
+    # row) keep their own id via coalesce.
+    return n.join(labels, "id", "left").select(
+        "entity_type",
+        "norm_surface",
+        F.coalesce("label", F.col("id")).alias("label"),
+    )
 
+
+def _propagated_labels(e: DataFrame, max_iter: int) -> DataFrame:
+    """(id, label) for every endpoint of the (src, dst) edge list: the
+    distributed min-label propagation with pointer jumping, run to its
+    fixed point by graph.iterate."""
     e_sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().localCheckpoint(eager=True)
@@ -123,11 +135,11 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     # min(own id, min neighbor id) in ONE aggregation instead of an
     # identity-labels checkpoint followed by a full propagation round.
     # For star-shaped components (the dominant alias/LSH case, diameter 2)
-    # this is already the converged labeling, so the loop below runs a
-    # single no-change confirmation round.  Valid init for min-label
+    # this is already the converged labeling, so the loop runs a single
+    # no-change confirmation round.  Valid init for min-label
     # propagation: every label is a member of the node's own component and
     # >= the component min.
-    labels = (
+    init = (
         e_sym.select(F.col("dst").alias("id"), F.col("src").alias("label"))
         .unionByName(
             e_sym.select(F.col("src").alias("id"),
@@ -138,7 +150,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         .localCheckpoint(eager=True)
     )
 
-    for _ in range(max_iter):
+    def propagate(labels: DataFrame) -> DataFrame:
         # candidate labels flowing along edges
         neighbor_labels = (
             e_sym.join(labels, e_sym.src == labels.id)
@@ -158,45 +170,19 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
         prev = labels.select(
             F.col("id").alias("label"), F.col("label").alias("label2")
         )
-        new_labels = (
-            one_hop.join(prev, "label", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("label2", "label")
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        old = labels
-        labels = new_labels
-        # (with the fused init the first loop round CAN be a no-change
-        # confirmation — e.g. star components — so check every round)
-        changed = (
-            new_labels.alias("n")
-            .join(old.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components: labels still changing after "
-            f"max_iter={max_iter} rounds — raise max_iter (component "
-            "diameter exceeds the bound)"
+        return one_hop.join(prev, "label", "left").select(
+            "id",
+            F.least(
+                F.col("label"), F.coalesce("label2", "label")
+            ).alias("label"),
         )
 
-    # ONE pass over the entity universe: endpoint nodes take their
-    # converged label, singletons (the dominant case at scale — no label
-    # row) keep their own id via coalesce.  Replaces the previous
-    # anti-join + inner-join + union trio.
-    return n.join(labels, "id", "left").select(
-        "entity_type",
-        "norm_surface",
-        F.coalesce("label", F.col("id")).alias("label"),
-    )
+    def unchanged(old: DataFrame, new: DataFrame) -> bool:
+        # with the fused init the first round CAN be a no-change
+        # confirmation (star components), so every round is checked
+        return new.join(old, ["id", "label"], "left_anti").isEmpty()
+
+    return iterate(propagate, init, max_iter, unchanged)
 
 
 def canonical_nodes(nodes: DataFrame, edges: DataFrame) -> DataFrame:

@@ -77,6 +77,52 @@ def merge_edge_snapshots(prev: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
+# --- One loop driver for the graph fixed points --------------------------
+#
+# CC and the k-core peel run to a data-dependent fixed point, PageRank
+# for a fixed k; each supplies only its round and its convergence test.
+
+# Lineage-cut cadence of a FIXED-count loop: checkpoint every
+# PR_CKPT_EVERY rounds, not every round.  Uncut, the loop is ONE Spark
+# job of k sequential shuffle stages (the natural Pregel shape: no
+# intermediate materialization, recovery replays from shuffle files),
+# and each eager cut is a BLOCKING job whose fixed overhead dominates at
+# small graph sizes (measured sf0.01 warm PageRank loop wall for k=8:
+# cut-every-1 4.1 s, every-2 2.4 s, every-8 i.e. uncut 1.1 s).  The
+# cadence exists only to bound plan DEPTH for large k (Catalyst
+# optimization time grows with plan size).  Cadence is SCHEDULING, not
+# semantics: PageRank ranks are integer, so results are bit-identical at
+# any cadence (bit-parity gate in test_pagerank).
+PR_CKPT_EVERY = 8
+
+
+def iterate(step, state: DataFrame, max_iter: int,
+            converged=None) -> DataFrame:
+    """Apply ``step`` (one lazy round: state -> next state) to ``state``.
+
+    With ``converged(old, new)``: every round is cut with
+    localCheckpoint(eager=True), keeping the lineage one round deep, and
+    the first converged state is returned; no convergence within
+    ``max_iter`` rounds raises instead of returning a non-fixed point.
+    Without it: exactly ``max_iter`` rounds, cut every PR_CKPT_EVERY,
+    the last left lazy so the caller composes the real round plan."""
+    for i in range(max_iter):
+        new = step(state)
+        if converged is not None:
+            new = new.localCheckpoint(eager=True)
+            if converged(state, new):
+                return new
+        elif i < max_iter - 1 and (i + 1) % PR_CKPT_EVERY == 0:
+            new = new.localCheckpoint(eager=True)
+        state = new
+    if converged is None:
+        return state
+    raise RuntimeError(
+        f"{step.__qualname__}: no fixed point within max_iter={max_iter} "
+        "rounds — raise max_iter"
+    )
+
+
 # --- PageRank over the standing edge table -------------------------------
 #
 # FIXED-POINT INTEGER PageRank: ranks are BIGINT micro-units of
@@ -100,42 +146,27 @@ def merge_edge_snapshots(prev: DataFrame, delta: DataFrame) -> DataFrame:
 #
 # Scale shape (100 TB): the per-iteration cost is one join of the
 # edge table with the rank vector on src plus one groupBy(dst) sum —
-# the canonical distributed PageRank step.  K is fixed (bounded work);
-# lineage is cut every PR_CKPT_EVERY iterations (fixed-k loops don't
-# need the CC loop's per-iteration cuts — see the constant below); the
-# only driver scalar is N (one count, same gating shape as CC).  Hub
-# skew on the dst sum is absorbed by partial aggregation (sum is
-# algebraic — the same argument as the CC min-label groupBy, SCALE.md
-# §7b).
+# the canonical distributed PageRank step.  K is fixed (bounded work),
+# so `iterate` runs it without a convergence test, cut every
+# PR_CKPT_EVERY rounds; the only driver scalar is N (one count, same
+# gating shape as CC).  Hub skew on the dst sum is absorbed by partial
+# aggregation (sum is algebraic — the same argument as the CC min-label
+# groupBy, SCALE.md §7b).
 
 PR_SCALE = 10**12
 PR_DAMP_NUM = 85
 PR_DAMP_DEN = 100
 
-# Lineage-cut cadence: checkpoint every PR_CKPT_EVERY iterations, not
-# every iteration.  A FIXED-k loop doesn't need per-iteration cuts the
-# way the data-dependent CC loop does — uncut, the whole loop is ONE
-# Spark job of k sequential shuffle stages (the natural Pregel shape:
-# no intermediate rank materialization, recovery replays from shuffle
-# files), and each eager cut is a BLOCKING job whose fixed overhead
-# dominates at small graph sizes (measured sf0.01 warm loop wall for
-# k=8: cut-every-1 4.1 s, every-2 2.4 s, every-8 i.e. uncut 1.1 s).
-# The cadence exists only to bound plan DEPTH for large caller-supplied
-# k (Catalyst optimization time grows with plan size).  Cadence is
-# SCHEDULING, not semantics: ranks are integer, so results are
-# bit-identical at any cadence (bit-parity gate in test_pagerank).
-PR_CKPT_EVERY = 8
-
-# Physical-strategy gate (r7, VERDICT r6 #2 — the CC_LOCAL_MAX_EDGES
-# pattern, operators/canonicalize.py:64): at or below this many edges
-# the fixed point runs DRIVER-LOCAL on collected rows and the result is
-# broadcast back; above it, the distributed join+agg loop runs.  Ranks
-# are INTEGER, so the two strategies are bit-identical (exact-equality
+# Physical-strategy gate (the CC_LOCAL_MAX_EDGES pattern,
+# operators/canonicalize.py): at or below this many edges the fixed
+# point runs DRIVER-LOCAL on collected rows and the result is broadcast
+# back; above it, the distributed join+agg loop runs.  Ranks are
+# INTEGER, so the two strategies are bit-identical (exact-equality
 # property test in tests/test_pagerank.py) — the gate is scheduling,
 # not semantics.  Motivation: at sf0.1 the canonical-triples graph is
-# ~468 nodes, and 8 distributed shuffle stages of fixed overhead were
-# 22% of the r6 headline wall; a production 10^9-edge graph takes the
-# distributed path exactly as before.
+# ~468 nodes, where 8 distributed shuffle stages of fixed overhead cost
+# several times the driver-local solve; a production 10^9-edge graph
+# takes the distributed path.
 PR_LOCAL_MAX_EDGES = 200_000
 
 
@@ -186,14 +217,14 @@ def pagerank(edges: DataFrame, k: int = 8,
     later iterations); the oracle implements the same decay, so the
     gates agree — just don't read these ranks as order-equivalent to
     redistribution PageRank on dangling-heavy graphs."""
+    if k < 1:
+        raise ValueError(f"pagerank: k must be >= 1, got {k}")
     # edges feeds THREE consumers (nodes, out_w, the join) — cut once so
     # any expensive upstream (the KG detection kernel) runs exactly once
     # (CLAUDE.md two-consumer invariant).
     edges = edges.select(
         "subj", "obj", F.col("n_obs").cast("long").alias("w")
     ).localCheckpoint(eager=True)
-    if k < 1:
-        raise ValueError(f"pagerank: k must be >= 1, got {k}")
 
     # size-gated local strategy (see PR_LOCAL_MAX_EDGES): the fixed point
     # is solved driver-side over the collected rows
@@ -206,12 +237,8 @@ def pagerank(edges: DataFrame, k: int = 8,
         return driver_frame(edges.sparkSession,
                             _local_pagerank(rows, k) if rows else [], schema)
 
-    nodes = (
-        edges.select(F.col("subj").alias("node"))
-        .union(edges.select(F.col("obj").alias("node")))
-        .distinct()
+    nodes = _degrees(edges, "subj", "obj").select("node") \
         .localCheckpoint(eager=True)
-    )
     n = nodes.count()
     if n == 0:
         # empty graph: propagate emptiness instead of dividing by zero
@@ -220,15 +247,12 @@ def pagerank(edges: DataFrame, k: int = 8,
     out_w = edges.groupBy("subj").agg(F.sum("w").alias("out_w"))
     ed = edges.join(out_w, "subj").localCheckpoint(eager=True)
 
-    # cast: a Python int small enough for int32 becomes an IntegerType
-    # literal, and ANSI-mode int32 `rank_fp * 85` overflows at 2^31 —
-    # ranks must be BIGINT end-to-end
-    ranks = nodes.withColumn("rank_fp", F.lit(PR_SCALE // n).cast("long"))
     damp = F.expr(f"rank_fp * {PR_DAMP_NUM} div {PR_DAMP_DEN}")
     contrib = F.expr(
         "(_damp div out_w) * w + ((_damp % out_w) * w) div out_w"
     )
-    for i in range(k):
+
+    def rank_round(ranks: DataFrame) -> DataFrame:
         in_mass = (
             ed.join(ranks, ed.subj == ranks.node)
             .withColumn("_damp", damp)
@@ -236,20 +260,19 @@ def pagerank(edges: DataFrame, k: int = 8,
             .groupBy("node")
             .agg(F.sum("c").alias("in_mass"))
         )
-        ranks = nodes.join(in_mass, "node", "left").select(
+        return nodes.join(in_mass, "node", "left").select(
             "node",
             (
                 F.lit(base).cast("long")
                 + F.coalesce("in_mass", F.lit(0).cast("long"))
             ).alias("rank_fp"),
         )
-        # cut lineage every PR_CKPT_EVERY iterations (the CC-loop
-        # pattern, relaxed — see the constant above) — and leave the
-        # LAST iteration lazy so the caller composes/inspects the real
-        # iteration plan instead of a checkpoint scan
-        if i < k - 1 and (i + 1) % PR_CKPT_EVERY == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+
+    # cast: a Python int small enough for int32 becomes an IntegerType
+    # literal, and ANSI-mode int32 `rank_fp * 85` overflows at 2^31 —
+    # ranks must be BIGINT end-to-end
+    return iterate(rank_round, nodes.withColumn(
+        "rank_fp", F.lit(PR_SCALE // n).cast("long")), k)
 
 
 def pagerank_oracle_sql(ct_parquet: str, k: int = 8) -> str:
@@ -302,62 +325,14 @@ def pagerank_oracle_sql(ct_parquet: str, k: int = 8) -> str:
     """
 
 
-# --- k-core of the undirected KG ------------------------------------------
+# --- k-core and triangles of the undirected KG ---------------------------
 
-# Same physical-strategy gate family as CC / PageRank: small edge sets
-# peel driver-side, large ones run the distributed loop; the k-core of
-# a graph is UNIQUE (order-independent peeling), so the two strategies
-# are set-identical — exact-equality property test in
-# tests/test_kcore.py.
-KCORE_LOCAL_MAX_EDGES = 200_000
-
-
-def _local_k_core(edge_rows, k: int) -> set:
-    """Driver-local peel twin: repeatedly drop nodes with undirected
-    degree < k; returns the surviving node set (unique fixed point)."""
-    adj: dict = {}
-    for r in edge_rows:
-        adj.setdefault(r.u, set()).add(r.v)
-        adj.setdefault(r.v, set()).add(r.u)
-    alive = set(adj)
-    queue = [n for n in alive if len(adj[n]) < k]
-    while queue:
-        n = queue.pop()
-        if n not in alive:
-            continue
-        alive.discard(n)
-        for m in adj[n]:
-            if m in alive:
-                adj[m].discard(n)
-                if len(adj[m]) < k:
-                    queue.append(m)
-    return alive
-
-
-def k_core(edges: DataFrame, k: int,
-           max_iter: int = 50,
-           local_max_edges: int = KCORE_LOCAL_MAX_EDGES) -> DataFrame:
-    """Nodes of the k-core of the UNDIRECTED simple graph under a
-    (subj, obj) edge frame: the unique maximal subgraph where every
-    node keeps degree >= k after everything below is peeled away — the
-    standard KG noise filter (entities attached to the graph by fewer
-    than k distinct strong links drop out, however the peel is
-    ordered).  Returns (node) rows.
-
-    Scale shape: the distributed loop is degree-compute (one groupBy) +
-    node filter + edge semi-restriction per round — the CC pattern
-    (data-dependent loop, lineage cut per iteration, convergence check
-    via count).  Rounds are bounded by the peel DEPTH (degeneracy
-    ordering layers), which is small for real KGs; `max_iter` is the
-    explicit bound, and exceeding it raises rather than silently
-    returning a non-fixed-point.  Physical strategy is size-gated
-    (KCORE_LOCAL_MAX_EDGES): the k-core is unique, so local and
-    distributed peels agree exactly (property-tested)."""
-    if k < 1:
-        raise ValueError(f"k_core: k must be >= 1, got {k}")
-    und = (
-        edges.select("subj", "obj")
-        .filter(F.col("subj") != F.col("obj"))
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(u, v) with u < v: one row per edge of the UNDIRECTED simple graph
+    under a (subj, obj) edge frame (direction, duplicates and self-loops
+    collapse), cut so the upstream plan runs once."""
+    return (
+        edges.filter(F.col("subj") != F.col("obj"))
         .select(
             F.least("subj", "obj").alias("u"),
             F.greatest("subj", "obj").alias("v"),
@@ -365,47 +340,55 @@ def k_core(edges: DataFrame, k: int,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    spark = edges.sparkSession
-    rows = collect_within(und, local_max_edges)
-    if rows is not None:
-        alive = sorted(_local_k_core(rows, k))
-        schema = T.StructType(
-            [T.StructField("node", und.schema["u"].dataType)]
-        )
-        return driver_frame(spark, [(n,) for n in alive], schema)
 
-    cur, n_cur = und, und.count()
-    for _ in range(max_iter):
-        deg = (
-            cur.select(F.col("u").alias("node"))
-            .unionByName(cur.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        keep = deg.filter(F.col("deg") >= k).select("node") \
-            .localCheckpoint(eager=True)
-        nxt = (
-            cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-        n_nxt = nxt.count()
-        if n_nxt == n_cur:
-            # fixed point: a sub-k node with edges would have dropped
-            # them in the semi-restriction, so unchanged edge count
-            # means every remaining node already holds degree >= k
-            return keep.select(F.col("node"))
-        if n_nxt == 0:
-            return driver_frame(spark, [], keep.schema)
-        cur, n_cur = nxt, n_nxt
-    raise RuntimeError(
-        f"k_core: no fixed point within max_iter={max_iter} rounds — "
-        "raise max_iter (peel depth exceeds the bound)"
+
+def _degrees(edges: DataFrame, a: str = "u", b: str = "v") -> DataFrame:
+    """(node, deg): how many of the ``a``/``b`` endpoint slots of
+    ``edges`` each node fills (its undirected degree on a (u, v) frame
+    from _undirected)."""
+    return (
+        edges.select(F.col(a).alias("node"))
+        .union(edges.select(F.col(b).alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("deg"))
     )
 
 
-# --- Triangle counting over the undirected KG ----------------------------
+def k_core(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
+    """Nodes of the k-core of the UNDIRECTED simple graph under a
+    (subj, obj) edge frame: the unique maximal subgraph where every
+    node keeps degree >= k after everything below is peeled away — the
+    standard KG noise filter (entities attached to the graph by fewer
+    than k distinct strong links drop out, however the peel is
+    ordered).  Returns (node) rows.
+
+    Scale shape: one peel round is a degree groupBy plus two left-semi
+    edge restrictions, run by `iterate` with a lineage cut and an edge
+    count per round.  Rounds are bounded by the peel DEPTH (degeneracy
+    ordering layers), which is small for real KGs; `max_iter` is the
+    explicit bound, and exceeding it raises rather than silently
+    returning a non-fixed-point."""
+    if k < 1:
+        raise ValueError(f"k_core: k must be >= 1, got {k}")
+    und = _undirected(edges)
+    sizes = [und.count()]
+
+    def peel(cur: DataFrame) -> DataFrame:
+        keep = _degrees(cur).filter(F.col("deg") >= k).select("node")
+        return (
+            cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
+            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+        )
+
+    def peeled(old: DataFrame, new: DataFrame) -> bool:
+        # a sub-k node with edges drops them in the semi-restriction, so
+        # an unchanged edge count means every remaining node already
+        # holds degree >= k; no edge left is the (empty) fixed point too
+        sizes.append(new.count())
+        return sizes[-1] in (sizes[-2], 0)
+
+    return _degrees(iterate(peel, und, max_iter, peeled)).select("node")
+
 
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count of the UNDIRECTED simple graph underlying a
@@ -421,22 +404,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     Suri-Vassilvitskii / Cohen MR-triangle argument).  Hub nodes that
     would explode a naive a-b-c join are exactly the ones oriented
     INWARD."""
-    und = (
-        edges.select("subj", "obj")
-        .filter(F.col("subj") != F.col("obj"))
-        .select(
-            F.least("subj", "obj").alias("u"),
-            F.greatest("subj", "obj").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+    und = _undirected(edges)
+    deg = _degrees(und)
     # orient: lower (deg, node) -> higher (deg, node); total order, so
     # the oriented graph is acyclic and each triangle is counted ONCE
     d_u = deg.withColumnRenamed("node", "u").withColumnRenamed("deg", "du")
