@@ -70,8 +70,8 @@ def main(argv: list[str] | None = None) -> int:
         )
     if args.pipeline == "corpus":
         print(
-            f"train_clean={out['train_clean'].count()} "
-            f"packs={out['pack_stats'].count()}"
+            f"decontaminate={out['decontaminate'].count()} "
+            f"pack_stats={out['pack_stats'].count()}"
         )
     else:
         print(f"nodes={out['nodes'].count()} edges={out['edges'].count()}")

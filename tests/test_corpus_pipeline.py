@@ -16,6 +16,8 @@ from uk_ner_presidio_demo_spark.semantics.sparkhash import (
     pmod, xxhash64_long,
 )
 
+from tests.test_pipeline import _copy_ckpt, _jobs_in_group
+
 STAGES = ["profile", "clean", "split", "decontaminate", "excise",
           "scrub", "pack", "pack_stats"]
 
@@ -69,7 +71,7 @@ def test_decontaminated_train_is_disjoint_from_eval_leaks(first_run):
     text (the exact contamination level, re-checked independently)."""
     _, tables = first_run
     train_ids = {r["doc_id"] for r in
-                 tables["train_clean"].select("doc_id").collect()}
+                 tables["decontaminate"].select("doc_id").collect()}
     eval_ids = {r["doc_id"] for r in tables["split"]
                 .filter(F.col("split") == "eval").select("doc_id").collect()}
     assert train_ids.isdisjoint(eval_ids)
@@ -120,14 +122,14 @@ def test_bpe_pack_flag_budgets_on_trained_counts(spark, sf01,
         out_dir=str(base / "out"), bpe_pack=True,
     )
     tables = pipe.run()
-    scrubbed = tables["scrubbed"].select("doc_id", "text").toPandas()
-    merges = bpe_train(tables["scrubbed"].select("doc_id", "text"))
+    scrubbed = tables["scrub"].select("doc_id", "text").toPandas()
+    merges = bpe_train(tables["scrub"].select("doc_id", "text"))
     cache: dict = {}
     want = {
         int(r.doc_id): len(encode_text(r.text, merges, _cache=cache))
         for r in scrubbed.itertuples(index=False)
     }
-    packs = tables["packs"].toPandas()
+    packs = tables["pack"].toPandas()
     assert len(packs) == len(want)
     for r in packs.itertuples(index=False):
         assert int(r.n_tokens) == want[int(r.doc_id)]
@@ -151,9 +153,9 @@ def test_shingle_tail_flag_reaches_excision(spark, sf01,
         out_dir=str(base / "out"), shingle_tail=True,
     )
     tables = pipe.run()
-    got = tables["excised"].toPandas().set_index("doc_id").sort_index()
+    got = tables["excise"].toPandas().set_index("doc_id").sort_index()
     want = (
-        excise_duplicate_spans(tables["train_clean"], shingle_tail=True)
+        excise_duplicate_spans(tables["decontaminate"], shingle_tail=True)
         .select("doc_id", "n_excised_tokens",
                 F.col("clean_text").alias("text"))
         .toPandas().set_index("doc_id").sort_index()
@@ -162,7 +164,7 @@ def test_shingle_tail_flag_reaches_excision(spark, sf01,
     assert (got["text"] == want["text"]).all()
 
     default = (
-        excise_duplicate_spans(tables["train_clean"])
+        excise_duplicate_spans(tables["decontaminate"])
         .agg(F.sum("n_excised_tokens")).collect()[0][0]
     )
     assert int(got["n_excised_tokens"].sum()) >= int(default)
@@ -170,3 +172,85 @@ def test_shingle_tail_flag_reaches_excision(spark, sf01,
     # from what a default run would fingerprint
     excise_res = [r for r in pipe.results if r.stage == "excise"]
     assert len(excise_res) == 1 and not excise_res[0].skipped
+
+
+def _rerun(spark, sf01, ckpt, out, **flags):
+    """{stage: skipped} of a CorpusPipeline run over ``ckpt``."""
+    pipe = CorpusPipeline(spark=spark, sf_dir=sf01, checkpoint_dir=ckpt,
+                          out_dir=out, **flags)
+    pipe.run()
+    return {r.stage: r.skipped for r in pipe.results}
+
+
+@pytest.mark.parametrize("module, attr", [
+    ("docs_golden", "DOCS_GOLDEN_VERSION"),
+    ("reference_oracle", "GOLDEN_VERSION"),
+])
+def test_corpus_semantics_version_rebuilds_every_stage(
+        spark, sf01, run_dirs, first_run, tmp_path, monkeypatch,
+        module, attr):
+    """A checkpoint written under another documents or detection
+    semantics version is not resumed: every stage rebuilds (scrub runs
+    the detection semantics, the other stages the documents ones)."""
+    import importlib
+
+    mod = importlib.import_module(
+        f"uk_ner_presidio_demo_spark.oracle.{module}")
+    ckpt, out = _copy_ckpt(run_dirs, tmp_path)
+    _rerun(spark, sf01, ckpt, out)  # complete, whatever ran before
+    monkeypatch.setattr(mod, attr, getattr(mod, attr) + 1)
+    status = _rerun(spark, sf01, ckpt, out)
+    assert list(status) == STAGES
+    assert not any(status.values()), status
+
+
+# the stages a flag rebuilds over a default checkpoint
+FLAG_REBUILDS = {
+    "shingle_tail": {"excise", "scrub", "pack", "pack_stats"},
+    "bpe_pack": {"pack", "pack_stats"},
+    "lm_filter": {"lm_filter", "split", "decontaminate", "excise", "scrub",
+                  "pack", "pack_stats"},
+}
+
+
+@pytest.mark.parametrize("flag", FLAG_REBUILDS)
+def test_flag_rebuilds_exactly_its_descendants(spark, sf01, run_dirs,
+                                               first_run, tmp_path, flag):
+    """Setting one flag over a default checkpoint rebuilds the stage that
+    reads it (lm_filter: the stage it adds) and everything downstream of
+    that stage; every other stage skips."""
+    rebuilt = FLAG_REBUILDS[flag]
+    ckpt, out = _copy_ckpt(run_dirs, tmp_path)
+    assert all(_rerun(spark, sf01, ckpt, out).values())
+    status = _rerun(spark, sf01, ckpt, out, **{flag: True})
+    assert set(status) == set(STAGES) | rebuilt
+    assert {s for s, skipped in status.items() if not skipped} == rebuilt
+
+
+def test_corpus_full_skip_job_budget(spark, sf01, run_dirs, first_run):
+    """A full-skip rerun reads every stage back with its recorded schema:
+    measured 2 Spark jobs on a local[4] test session (the documents
+    scan's schema and the metrics append), before and after the corpus
+    chain moved onto the stage-graph runner."""
+    ckpt, out = run_dirs
+    # make sure every stage is checkpointed, whatever ran before
+    _rerun(spark, sf01, ckpt, out)
+    pipe = CorpusPipeline(spark=spark, sf_dir=sf01, checkpoint_dir=ckpt,
+                          out_dir=out)
+    n = _jobs_in_group(spark, "test_corpus_full_skip_job_budget", pipe.run)
+    assert all(r.skipped for r in pipe.results), pipe.results
+    assert 2 <= n <= 4, f"{n} Spark jobs for a full-skip corpus rerun"
+
+
+def test_corpus_cold_run_job_budget(spark, sf01, tmp_path):
+    """A cold run's stage jobs all carry the caller's job group, however
+    the stage graph schedules them: the hand-chained serial run measured
+    57 Spark jobs on a local[4] test session, the stage-table run 56 (its
+    decontaminate no longer re-joins the split with the clean ids).  A
+    stage thread that loses the group counts none of its jobs."""
+    pipe = CorpusPipeline(spark=spark, sf_dir=sf01,
+                          checkpoint_dir=str(tmp_path / "ckpt"),
+                          out_dir=str(tmp_path / "out"))
+    n = _jobs_in_group(spark, "test_corpus_cold_run_job_budget", pipe.run)
+    assert not any(r.skipped for r in pipe.results), pipe.results
+    assert 55 <= n <= 59, f"{n} Spark jobs for a cold corpus run"

@@ -316,7 +316,7 @@ def test_pipeline_lm_filter_stage(spark, sf001, tmp_path):
         int(d): t for d, t in full.values if int(d) in cleaned_ids
     }
     want_keep = {d for d, _n, _lp, k in lm_scores(texts) if k}
-    got_keep = set(tables["lm_kept"].toPandas()["doc_id"])
+    got_keep = set(tables["lm_filter"].toPandas()["doc_id"])
     assert got_keep == want_keep
     # downstream: the split stage only holds kept docs
     split_ids = set(tables["split"].toPandas()["doc_id"])

@@ -520,13 +520,15 @@ def test_fingerprints_follow_the_stage_graph(spark, sf001, run_dirs,
     root = fps["validate_metrics"]
     lineage = {"strategy": "strategy=priority", "aliases": "a.parquet:1:1",
                "probe": "x"}
-    base = pipeline.chain_fingerprints(root, lineage)
-    moved = pipeline.chain_fingerprints(root + "|other", lineage)
+    base = pipeline.chain_fingerprints(pipeline.KG_CHAIN, root, lineage)
+    moved = pipeline.chain_fingerprints(pipeline.KG_CHAIN, root + "|other",
+                                         lineage)
     assert all(moved[s] != base[s] for s in CHAIN)
     for stage in CHAIN:
         inputs, _, build = pipeline.KG_CHAIN[stage]
         with monkeypatch.context() as m:
             m.setitem(pipeline.KG_CHAIN, stage, (inputs, "probe", build))
-            probed = pipeline.chain_fingerprints(root, lineage)
+            probed = pipeline.chain_fingerprints(pipeline.KG_CHAIN, root,
+                                                 lineage)
         assert {s for s in CHAIN if probed[s] != base[s]} == \
             _descendants(stage), stage

@@ -15,9 +15,10 @@ everything).  `kg_chain(transcripts, upto)` builds stage `upto` lazily,
 and only its ancestors; the board queries in __spark_entry__.py project
 it.  Fingerprints and lineage cuts are derived from the table.
 
-Concurrency contract: `KGPipeline.run` runs its steps on one thread pool
-over the one session (`StagedPipeline._run_graph`): a step starts as soon
-as its inputs have ended, so validate_metrics overlaps detected_turns,
+Concurrency contract: `KGPipeline.run`, like the corpus pipeline, runs its
+steps on one thread pool over the one session (`StagedPipeline._run_graph`,
+chain stages made steps by `_chain_steps`): a step starts as soon as its
+inputs have ended, so validate_metrics overlaps detected_turns,
 mentions overlaps anonymized, triples overlaps canonical_nodes, and the
 nodes write overlaps canonical_triples.  Each step's thread starts through
 `pyspark.inheritable_thread_target(spark)`, so the caller's job group,
@@ -63,7 +64,6 @@ import json
 import time
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
-from functools import partial
 from pathlib import Path
 from typing import Any, Callable, NamedTuple
 
@@ -149,12 +149,13 @@ KG_CHAIN = {
 }
 
 
-def chain_fingerprints(root: str, lineage: dict[str, str]) -> dict[str, str]:
-    """{stage: fingerprint} for KG_CHAIN: a digest of ``root``, the
+def chain_fingerprints(chain: dict, root: str,
+                       lineage: dict[str, str]) -> dict[str, str]:
+    """{stage: fingerprint} for a stage table: a digest of ``root``, the
     ``lineage`` value of the stage's declared lineage and its inputs'
     fingerprints, so a change reaches every descendant and no other."""
     fps: dict[str, str] = {}
-    for stage, (inputs, lin, _) in KG_CHAIN.items():
+    for stage, (inputs, lin, _) in chain.items():
         parts = [root, lineage[lin] if lin else "", *(fps[i] for i in inputs)]
         fps[stage] = hashlib.sha256("\n".join(parts).encode()).hexdigest()
     return fps
@@ -309,6 +310,14 @@ class StagedPipeline:
                                       key=lambda r: order[r.stage])
         return {name: done[name] for name in steps}
 
+    def _chain_steps(self, chain: dict, src, fps: dict[str, str]) -> dict:
+        """The stage table ``chain`` as `_run_graph` steps: each stage runs
+        or resumes through `_stage` under its fingerprint in ``fps``, its
+        build called with ``src`` and the frames returned so far."""
+        return {name: (tuple(inputs), lambda r, name=name, build=build:
+                       self._stage(name, fps[name], lambda: build(src, r)))
+                for name, (inputs, _, build) in chain.items()}
+
     # ---- metrics / lineage (shared) -----------------------------------------
 
     def _write_metrics(self) -> None:
@@ -339,7 +348,8 @@ class KGPipeline(StagedPipeline):
                 f"|semantics=v{reference_oracle.GOLDEN_VERSION}")
         lineage = {"strategy": f"strategy={self.strategy}",
                    "aliases": _fingerprint_path(ensure_aliases())}
-        return {"validate_metrics": root, **chain_fingerprints(root, lineage)}
+        return {"validate_metrics": root,
+                **chain_fingerprints(KG_CHAIN, root, lineage)}
 
     def run(self) -> dict[str, DataFrame]:
         fps = self.fingerprints()
@@ -357,17 +367,12 @@ class KGPipeline(StagedPipeline):
                 ),
             )
 
-        def stage(name, inputs, build):  # run-or-resume after ``inputs``
-            return tuple(inputs), lambda r: self._stage(
-                name, fps[name], lambda: build(r))
-
         src = ChainSource(transcripts, self.strategy, anonymized=True)
         # the stage graph of the module docstring, in declaration order
         out = self._run_graph({
-            "validate_metrics": stage("validate_metrics", (),
-                                      lambda r: build_validate()),
-            **{name: stage(name, inputs, partial(build, src))
-               for name, (inputs, _, build) in KG_CHAIN.items()},
+            "validate_metrics": ((), lambda r: self._stage(
+                "validate_metrics", fps["validate_metrics"], build_validate)),
+            **self._chain_steps(KG_CHAIN, src, fps),
             "nodes": (("canonical_nodes",),
                       lambda r: self._write_nodes(r["canonical_nodes"])),
             "edges": (("canonical_triples",),
