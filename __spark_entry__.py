@@ -157,8 +157,8 @@ def _q_valid_turn_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J-4 turn-window relation heuristic + triple emission (§2.10) via
-    cogrouped applyInPandas."""
+    """J-4 turn-window relation heuristic + triple emission (§2.10): a
+    Catalyst uses_tool leg + a grouped applyInPandas over mention rows."""
     return kg_chain(read_transcripts(spark, sf_dir), "triples")
 
 

@@ -65,6 +65,12 @@ def explain(df, mode: str) -> str:
     return buf.getvalue().strip()
 
 
+# every Python node kind of a physical plan; no name holds another
+PY_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+            "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas",
+            "AggregateInPandas")
+
+
 def summary(df) -> str:
     """Exchanges and Python stages, counted on the physical plan tree (the
     formatted text lists every node twice: once in the tree and once in the
@@ -74,8 +80,7 @@ def summary(df) -> str:
             + tree.count("Exchange rangepartitioning")
             + tree.count("Exchange SinglePartition"))
     n_bc = tree.count("BroadcastExchange")
-    n_py = tree.count("MapInPandas") + tree.count("ArrowEvalPython") \
-        + tree.count("FlatMapCoGroupsInPandas")
+    n_py = sum(tree.count(node) for node in PY_NODES)
     return f"shuffles={n_sh}  broadcasts={n_bc}  python_stages={n_py}"
 
 

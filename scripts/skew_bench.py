@@ -1,14 +1,16 @@
-"""Skew evidence for the triples cogroup and the salted hot-key aggregate
-(VERDICT r2 #7): measured max vs median task wall inside the relevant
-stages, plus the underlying per-bucket row skew, at two sfs.
+"""Skew evidence for the triples grouped map and the salted hot-key
+aggregate (VERDICT r2 #7): measured max vs median task wall inside the
+relevant stages, plus the underlying per-bucket row skew, at two sfs.
 
 The synth corpus deliberately plants skew (data/synth.py): one ~200-turn
-hot conversation (conv skew -> one cogroup bucket gets heavier) and one
+hot conversation (conv skew -> one triples bucket gets heavier) and one
 celebrity entity surface (key skew -> one reducer in a naive groupBy).
 This script quantifies what that does to task walls:
 
-  - `triples_bucket_rows`: rows per cogroup hash bucket (deterministic —
-    the skew itself, independent of host noise).
+  - `triples_bucket_rows`: mention rows per triples group key, over the
+    engine's own key count (`operators.triples.triple_buckets`) — the rows
+    the grouped map receives (deterministic — the skew itself,
+    independent of host noise).
   - per-stage `executorRunTime` quantiles from the Spark status REST API
     (max/median task ratio — the stage-wall amplification the skew causes;
     noisy on this drifting host, so read ratios, not absolute ms).
@@ -51,6 +53,15 @@ def _task_quantiles(spark, stage_id: int, attempt: int):
             "max_over_median": round(hi / med, 2) if med else None}
 
 
+def _key_rows(df, *keys):
+    """Max and median row count per ``keys`` group of ``df`` (mx, med)."""
+    from pyspark.sql import functions as F
+
+    return df.groupBy(*keys).count().agg(
+        F.max("count").alias("mx"),
+        F.expr("percentile_approx(count, 0.5)").alias("med")).first()
+
+
 def _force(df):
     df.write.format("noop").mode("overwrite").save()
 
@@ -79,6 +90,8 @@ def main() -> None:
     from uk_ner_presidio_demo_spark.data.synth import (
         ensure_transcripts, sf_key_for_dir,
     )
+    from uk_ner_presidio_demo_spark.operators.triples import triple_buckets
+    from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
     from uk_ner_presidio_demo_spark.session import default_cores, get_spark
     from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
 
@@ -94,25 +107,14 @@ def main() -> None:
         key = sf_key_for_dir(sf_dir)
         ensure_transcripts(sf_dir)
 
-        # deterministic bucket-skew: rows per cogroup hash bucket, plus the
-        # per-conversation turn skew that causes it
+        # deterministic bucket-skew: mention rows per triples group key,
+        # plus the per-conversation turn skew that causes it
         tr = read_transcripts(spark, sf_dir)
-        n_buckets = max(8, spark.sparkContext.defaultParallelism * 2)
+        mentions = kg_chain(tr, "mentions").localCheckpoint(eager=True)
+        n_buckets = triple_buckets(tr)
         bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-        brows = (
-            tr.groupBy(bucket.alias("b")).count()
-            .agg(
-                F.max("count").alias("mx"),
-                F.expr("percentile_approx(count, 0.5)").alias("med"),
-            ).first()
-        )
-        conv_rows = (
-            tr.groupBy("conv_id").count()
-            .agg(
-                F.max("count").alias("mx"),
-                F.expr("percentile_approx(count, 0.5)").alias("med"),
-            ).first()
-        )
+        brows = _key_rows(mentions, bucket.alias("b"))
+        conv_rows = _key_rows(tr, "conv_id")
 
         # warm the python workers once so the first measured stage isn't
         # paying interpreter spin-up
@@ -120,7 +122,8 @@ def main() -> None:
 
         before = set(_completed_stages(spark))
         _force(qs["kg_triples"](spark, sf_dir))
-        triples_stages = _new_heavy_stages(spark, before, min_tasks=8)
+        # the triples grouped map runs one task per core
+        triples_stages = _new_heavy_stages(spark, before, min_tasks=cores)
 
         before = set(_completed_stages(spark))
         _force(em._q_top_surfaces(spark, sf_dir))
@@ -138,13 +141,7 @@ def main() -> None:
         from uk_ner_presidio_demo_spark.sources.tables import read_tpch
 
         docs = read_tpch(spark, sf_dir, "documents")
-        band_rows = (
-            _band_rows(docs).groupBy("band", "bhash").count()
-            .agg(
-                F.max("count").alias("mx"),
-                F.expr("percentile_approx(count, 0.5)").alias("med"),
-            ).first()
-        )
+        band_rows = _key_rows(_band_rows(docs), "band", "bhash")
         before = set(_completed_stages(spark))
         _force(qs["doc_neardup_minhash"](spark, sf_dir))
         neardup_stages = _new_heavy_stages(spark, before, min_tasks=4)
@@ -166,13 +163,7 @@ def main() -> None:
             "doc_id long, text string",
         )
         spiked = docs.select("doc_id", "text").unionByName(hot)
-        spiked_rows = (
-            _band_rows(spiked).groupBy("band", "bhash").count()
-            .agg(
-                F.max("count").alias("mx"),
-                F.expr("percentile_approx(count, 0.5)").alias("med"),
-            ).first()
-        )
+        spiked_rows = _key_rows(_band_rows(spiked), "band", "bhash")
         before = set(_completed_stages(spark))
         _force(neardup_minhash(spiked))
         spiked_stages = _new_heavy_stages(spark, before, min_tasks=4)
@@ -198,10 +189,8 @@ def main() -> None:
         from uk_ner_presidio_demo_spark.operators.linking import (
             distinct_entities, link_entities,
         )
-        from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
         from uk_ner_presidio_demo_spark.sources.tables import read_aliases
 
-        mentions = kg_chain(tr, "mentions").localCheckpoint(eager=True)
         mcols = mentions.columns
         hot_ment = spark.range(50_000).selectExpr(
             "concat('skewconv', CAST(id % 97 AS STRING)) AS conv_id",
@@ -228,13 +217,7 @@ def main() -> None:
         ).select(*mcols)
         spiked_m = mentions.unionByName(hot_ment).unionByName(var_ment) \
             .localCheckpoint(eager=True)
-        ment_rows = (
-            spiked_m.groupBy("entity_type", "norm_surface").count()
-            .agg(
-                F.max("count").alias("mx"),
-                F.expr("percentile_approx(count, 0.5)").alias("med"),
-            ).first()
-        )
+        ment_rows = _key_rows(spiked_m, "entity_type", "norm_surface")
         before = set(_completed_stages(spark))
         _force(distinct_entities(spiked_m))
         distinct_stages = _new_heavy_stages(spark, before, min_tasks=8,
@@ -255,15 +238,9 @@ def main() -> None:
             F.concat_ws(":", "entity_type", "src").alias("src"),
             F.concat_ws(":", "entity_type", "dst").alias("dst"),
         )
-        cc_key_rows = (
+        cc_key_rows = _key_rows(
             e_sym.select(F.col("dst").alias("id"))
-            .unionByName(e_sym.select(F.col("src").alias("id")))
-            .groupBy("id").count()
-            .agg(
-                F.max("count").alias("mx"),
-                F.expr("percentile_approx(count, 0.5)").alias("med"),
-            ).first()
-        )
+            .unionByName(e_sym.select(F.col("src").alias("id"))), "id")
         before = set(_completed_stages(spark))
         _force(connected_components(nodes_s, edges_s, local_max_edges=0))
         # min_tasks=1: AQE coalesces each iteration's ~5k-edge shuffle to
@@ -296,13 +273,7 @@ def main() -> None:
             "CAST(NULL AS STRING) AS props",
         ).select(*ev.columns)
         spiked_ev = ev.unionByName(hot_ev).localCheckpoint(eager=True)
-        asof_key_rows = (
-            spiked_ev.groupBy("user_id").count()
-            .agg(
-                F.max("count").alias("mx"),
-                F.expr("percentile_approx(count, 0.5)").alias("med"),
-            ).first()
-        )
+        asof_key_rows = _key_rows(spiked_ev, "user_id")
         clicks_s = spiked_ev.filter(F.col("event_type") == "click")
         views_s = spiked_ev.filter(F.col("event_type") == "view").select(
             "user_id", "ts", F.col("event_id").alias("view_id"), "value"
@@ -345,6 +316,7 @@ def main() -> None:
             "spiked_neardup_stages": spiked_stages,
             "conv_rows_max": conv_rows["mx"],
             "conv_rows_median": conv_rows["med"],
+            "triples_buckets": n_buckets,
             "triples_bucket_rows_max": brows["mx"],
             "triples_bucket_rows_median": brows["med"],
             "triples_bucket_ratio": round(brows["mx"] / brows["med"], 2),

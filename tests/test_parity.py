@@ -115,3 +115,44 @@ def test_norm_surface_expr_matches_python(spark):
     got = df.select(norm_surface_expr("s").alias("n")).toPandas()["n"].tolist()
     want = [norm_surface(s) for s in surfaces]
     assert got == want
+
+
+def test_triples_parity_on_tool_edge_rows(spark):
+    """emit_triples takes uses_tool from the transcript rows (Catalyst)
+    and the window predicates from the mentions alone.  On the tool rows
+    the fixtures lack it must still equal the oracle's triples: None, ''
+    and NaN tools, a tool on a turn with no mentions and on one with
+    invalid text, a turn listed twice with two tools, and a row repeated
+    whole."""
+    from uk_ner_presidio_demo_spark.operators.triples import emit_triples
+    from uk_ner_presidio_demo_spark.oracle.reference_oracle import run_oracle
+    from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
+    from uk_ner_presidio_demo_spark.sources.tables import TRANSCRIPTS_SCHEMA
+
+    contact = ("Контакт: Тарас Шевченко, email ivan.rudenko@example.com, "
+               "телефон +380636770619.")
+    rows = [  # conv_id, turn_idx, text, tool
+        ("a", 0, contact, None),
+        ("a", 1, contact, ""),
+        ("a", 2, contact, float("nan")),
+        ("a", 3, "Дякую, все зрозуміло.", "search"),
+        ("a", 4, "   ", "calculator"),
+        ("a", 5, contact, "browser"),
+        ("a", 5, None, "email_client"),
+        ("a", 5, None, "email_client"),
+        ("b", 0, None, "db_query"),
+        ("b", 1, "Тарас Шевченко читає Кобзар.", ""),
+    ]
+    pdf = pd.DataFrame(
+        [(c, t, "user", x, tool, pd.Timestamp("2024-03-01"))
+         for c, t, x, tool in rows],
+        columns=TRANSCRIPTS_SCHEMA.fieldNames(),
+    ).astype({"turn_idx": "int32"})
+    tr = spark.createDataFrame(pdf, TRANSCRIPTS_SCHEMA)
+    got = emit_triples(tr, kg_chain(tr, "mentions")).toPandas()
+    want = run_oracle(pdf)["golden_triples"]
+    tools = want[want["pred"] == "uses_tool"]
+    assert sorted(zip(tools["conv_id"], tools["turn_idx"])) == \
+        [("a", 3), ("a", 4), ("a", 5), ("a", 5), ("b", 0)]
+    assert sorted(got[list(want.columns)].itertuples(index=False)) == \
+        sorted(want.itertuples(index=False))

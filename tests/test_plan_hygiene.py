@@ -264,7 +264,37 @@ def test_canonical_triples_runs_detection_once(spark, sf01):
     cooccurrence double-kernel defect pattern)."""
     plan = _plan(em.queries()["kg_canonical_triples"](spark, sf01))
     assert plan.count("MapInPandas") == 0
-    assert plan.count("FlatMapCoGroupsInPandas") == 1  # the triples cogroup
+    assert plan.count("FlatMapGroupsInPandas") == 1  # the triples window
+    assert plan.count("FlatMapCoGroupsInPandas") == 0
+
+
+def test_triples_reads_mentions_only(spark, sf01):
+    """kg_triples: uses_tool is a Catalyst leg over a transcripts scan of
+    (conv_id, turn_idx, tool) with the tool filter pushed down; only the
+    mention columns and the bucket key cross into Python, in ONE grouped
+    map fed by ONE exchange, hash-partitioned on the bucket to
+    defaultParallelism (so AQE cannot coalesce the reduce side to one
+    task).  No cogroup: transcript rows never cross."""
+    import re
+
+    from uk_ner_presidio_demo_spark.operators.triples import MENTION_COLS
+
+    plan = _plan(em.queries()["kg_triples"](spark, sf01))
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    width = spark.sparkContext.defaultParallelism
+    assert re.findall(r"Exchange hashpartitioning\(bucket#\d+, (\d+)\)",
+                      plan) == [str(width)]
+    below = plan[plan.index("FlatMapGroupsInPandas"):]
+    assert re.match(r"Exchange hashpartitioning\(bucket#",
+                    below[below.index("Exchange"):])
+    args = re.search(r"window_triples\(([^)]*)\)", plan).group(1)
+    assert re.sub(r"#\d+L?", "", args).split(", ") == \
+        [*MENTION_COLS, "bucket"]
+    assert re.search(
+        r"FileScan parquet \[conv_id#\d+,turn_idx#\d+,tool#\d+\].*"
+        r"PushedFilters: \[IsNotNull\(tool\), Not\(EqualTo\(tool,\)\)\], "
+        r"ReadSchema: struct<conv_id:string,turn_idx:int,tool:string>", plan)
 
 
 def test_edge_upsert_merge_plan(spark, sf01):

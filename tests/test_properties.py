@@ -401,3 +401,66 @@ class TestTriplesWindowEquivalence:
         assert (5, "ORG:zeta", "contacts_via", "URL:u") in got
         assert got == _triples_all_pairs("c", [(5, None), (4, None)],
                                          mentions, 2)
+
+
+@st.composite
+def _turn_rows(draw):
+    """One conversation as transcript rows (turn_idx, tool), where a turn
+    may be listed twice with two string tools, and its mentions, which sit
+    only on listed turns (emit_triples' precondition); a listed turn may
+    have a tool and no mentions.  (A turn listed with a null and a string
+    tool is left out: the reference kernel cannot sort those rows.)"""
+    from uk_ner_presidio_demo_spark.semantics.detect import Mention
+
+    twice = st.lists(st.sampled_from(["", "search", "mail"]),
+                     min_size=2, max_size=2)
+    listed = draw(st.lists(_turn_idx, unique=True, max_size=8))
+    turns = [(t, tool) for t in listed
+             for tool in draw(st.one_of(_tool.map(lambda x: [x]), twice))]
+    mentioned = draw(st.lists(st.sampled_from(listed), unique=True)) \
+        if listed else []
+    mentions = {
+        t: [Mention(i, et, s, s + 1, 0.0, n, n)
+            for i, (et, s, n) in enumerate(draw(st.lists(
+                _mention, min_size=1, max_size=6)))]
+        for t in mentioned
+    }
+    return turns, mentions
+
+
+class TestTriplesMentionsOnly:
+    """emit_triples splits the rule kernel: uses_tool is a Catalyst filter
+    + projection over transcript rows, the other predicates run in
+    `window_triples` over mention rows alone.  Per conversation their
+    union MUST equal emit_triples_for_conv over the turn rows (with a NaN
+    tool read as null, as pandas carries a null string)."""
+
+    @given(st.lists(_turn_rows(), min_size=1, max_size=3))
+    @settings(max_examples=300, deadline=None)
+    def test_window_triples_plus_uses_tool_equals_kernel(self, convs):
+        import pandas as pd
+
+        from uk_ner_presidio_demo_spark.operators.triples import (
+            MENTION_COLS, window_triples,
+        )
+        from uk_ner_presidio_demo_spark.semantics import triples as tr
+
+        rows = [(f"c{k}", t, m.mention_idx, m.entity_type, m.start,
+                 m.norm_surface)
+                for k, (_, mentions) in enumerate(convs)
+                for t, ms in mentions.items() for m in ms]
+        got = window_triples(pd.DataFrame(rows, columns=list(MENTION_COLS)))
+        for k, (turns, mentions) in enumerate(convs):
+            cid = f"c{k}"
+            sub = got[got["conv_id"] == cid]
+            union = set(zip(sub["turn_idx"], sub["subj"], sub["pred"],
+                            sub["obj"]))
+            # uses_tool: tool IS NOT NULL AND tool != '', then distinct
+            union |= {(t, tr.conv_ref(cid), tr.PRED_USES_TOOL,
+                       tr.tool_ref(tool))
+                      for t, tool in turns
+                      if isinstance(tool, str) and tool != ""}
+            turn_rows = [(t, tool if isinstance(tool, str) else None)
+                         for t, tool in turns]
+            assert sorted(union) == tr.emit_triples_for_conv(
+                cid, turn_rows, mentions, tr.WINDOW_W)

@@ -229,6 +229,20 @@ def test_dump_plans_tag_writes_one_file_per_query(spark, sf001, tmp_path):
     assert not (tmp_path / "PLANS.md").exists()
 
 
+def test_dump_plans_counts_every_python_stage(spark, sf001):
+    """python_stages counts each Python node kind: doc_packing's grouped
+    map read 0 while only MapInPandas, ArrowEvalPython and the cogroup
+    were counted; kg_triples is detection plus the triples grouped map."""
+    import __spark_entry__ as em
+
+    summary = _load_script("dump_plans").summary
+    qs = em.queries()
+    assert summary(qs["doc_packing"](spark, sf001)).endswith(
+        "python_stages=1")
+    assert summary(qs["kg_triples"](spark, sf001)).endswith(
+        "python_stages=2")
+
+
 def test_dump_plans_rejects_unknown_query(tmp_path, capsys):
     with pytest.raises(SystemExit):
         _load_script("dump_plans").main(["no_such_query"], root=tmp_path)

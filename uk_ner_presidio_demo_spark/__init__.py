@@ -14,7 +14,7 @@ oracle/      plain-Python reference oracle (per-turn, single-process — the
              golden-output materialization.
 data/        deterministic transcript/alias synthesizers (seeded).
 operators/   Spark operators: fused detection (mapInPandas), anonymize
-             splice (pandas_udf), triple emitter (cogrouped applyInPandas),
+             splice (pandas_udf), triple emitter (grouped applyInPandas),
              entity linking (broadcast + MinHash/LSH), connected-components
              canonicalization, dedup family, ANN similarity, text analysis.
 plans/       end-to-end staged pipeline with checkpoint manifests + metrics.

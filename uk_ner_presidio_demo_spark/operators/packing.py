@@ -6,7 +6,7 @@ Determinism at any cluster size: packing is greedy WITHIN a hash bucket of
 doc_id (`pmod(xxhash64(doc_id), n_buckets)`), docs ordered by doc_id inside
 the bucket.  The bucket key — not Spark's physical partitioning — defines
 the packing groups, so the output is identical on 1 core or 1000 executors
-(same reasoning as the triples cogroup bucket, operators/triples.py).
+(same reasoning as the triples group bucket, operators/triples.py).
 
 Scale shape: one shuffle on the bucket key, one applyInPandas pass whose
 state is a single running counter per group; pack ids are

@@ -61,7 +61,7 @@ def _local_file_sizes(df: DataFrame) -> list[int] | None:
 def scan_bytes(df: DataFrame) -> int | None:
     """Total bytes of the frame's file scan, from metadata only (None
     when the source is not local files) — the sizing input for
-    data-scaled bucket counts (e.g. the triples cogroup key space),
+    data-scaled bucket counts (e.g. the triples group key space),
     so a 10x corpus gets ~10x group keys instead of 10x-fatter pandas
     frames."""
     sizes = _local_file_sizes(df)

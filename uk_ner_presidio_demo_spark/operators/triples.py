@@ -1,12 +1,13 @@
 """Triple emission (stage 5) — turn-window relation heuristic [north-rule].
 
-Cogrouped `applyInPandas` over `groupBy(conv_id)` (SURVEY.md §2.9): the turn
-metadata (all turns, including invalid ones — they carry tool info) and the
-resolved mentions are cogrouped per conversation, and the shared pure-Python
-rule kernel `semantics.triples.emit_triples_for_conv` emits the
-(turn_idx, subj, pred, obj) set.  The turn-window co-occurrence (J-4) is thus
-a window-not-join formulation: one shuffle by conv_id on each input, no
-range self-join, no driver collect.
+`uses_tool` reads one transcript row and needs no Python: it is a Catalyst
+filter + projection over the transcripts.  The other three predicates read
+mentions only, so the mentions alone cross into Python: one grouped
+`applyInPandas` over a hash bucket of conv_id (SURVEY.md §2.9) runs the
+shared pure-Python rule kernel `semantics.triples.emit_triples_for_conv`
+per conversation.  The turn-window co-occurrence (J-4) is thus a
+window-not-join formulation: one shuffle of the mention rows, no range
+self-join, no driver collect.
 
 Skew note: the hot conversation (conv skew) lands on one task, but the
 kernel reads only each turn's +-W window through a per-conv turn index —
@@ -22,7 +23,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..semantics.detect import Mention
-from ..semantics.triples import WINDOW_W, emit_triples_for_conv
+from ..semantics.triples import (
+    PRED_USES_TOOL, WINDOW_W, conv_ref, emit_triples_for_conv, tool_ref,
+)
+from .partitioning import scan_bytes
 
 TRIPLES_SCHEMA = T.StructType(
     [
@@ -34,8 +38,8 @@ TRIPLES_SCHEMA = T.StructType(
     ]
 )
 
-# The mentions columns emit_triples reads; only these cross the cogroup
-# shuffle (r8, guide-§2.3 project-before-exchange): the turn key,
+# The mentions columns emit_triples reads; only these (and the bucket key)
+# cross into Python (guide-§2.3 project-before-exchange): the turn key,
 # entity_type/norm_surface (refs), start (contacts_via tie-break), and
 # mention_idx (deterministic per-turn ordering).  end/score/surface are
 # never consumed by emit_triples_for_conv — surface strings were the
@@ -43,88 +47,80 @@ TRIPLES_SCHEMA = T.StructType(
 MENTION_COLS = ("conv_id", "turn_idx", "mention_idx", "entity_type", "start",
                 "norm_surface")
 
-# ~64 KB of transcript parquet per cogroup key ≈ 1.4k turns/bucket at
-# this corpus's bytes/turn — the measured flat spot at BOTH sf0.1 and
-# sf1 (SCALE.md §7d): small enough frames to stay cache-friendly, few
-# enough keys that the ~1 ms/key crossing cost stays amortized.
+# ~64 KB of transcript parquet per group key ≈ 1.4k turns/bucket at this
+# corpus's bytes/turn — the measured flat spot at BOTH sf0.1 and sf1
+# (SCALE.md §7d): small enough frames to stay cache-friendly, few enough
+# keys that the ~1 ms/key crossing cost stays amortized.
 BUCKET_TARGET_BYTES = 64 * 1024
-# floor of the cogroup key space for inputs without scan-size metadata
+# floor of the group key space for inputs without scan-size metadata
 BUCKETS_PER_CORE = 2
+
+
+def triple_buckets(transcripts: DataFrame) -> int:
+    """The triples group-key count: one key per ~BUCKET_TARGET_BYTES of
+    transcript scan (metadata only; ~64 at sf0.1, ~640 at sf1), floored at
+    BUCKETS_PER_CORE per core and at 8.  Keys are not shuffle partitions:
+    more keys only bound each pandas frame (a fixed per-core key space
+    made sf1's frames 10x fatter: 14.8 s vs 9.5 s scaled)."""
+    cores = transcripts.sparkSession.sparkContext.defaultParallelism
+    return max(8, cores * BUCKETS_PER_CORE,
+               (scan_bytes(transcripts) or 0) // BUCKET_TARGET_BYTES)
+
+
+def window_triples(mentions_pdf: pd.DataFrame) -> pd.DataFrame:
+    """The rule kernel over MENTION_COLS rows of one or more conversations:
+    every predicate but uses_tool.  Each conversation's turns are its
+    mention turns, each with tool None (uses_tool is emitted in Catalyst)."""
+    rows: list[tuple] = []
+    for conv_id, msub in mentions_pdf.groupby("conv_id"):
+        by_turn: dict[int, list[Mention]] = {}
+        msub = msub.sort_values(["turn_idx", "mention_idx"])
+        for ti, mi, et, st, ns in zip(
+            msub["turn_idx"].to_numpy(), msub["mention_idx"].to_numpy(),
+            msub["entity_type"].to_numpy(), msub["start"].to_numpy(),
+            msub["norm_surface"].to_numpy(),
+        ):
+            # end/score/surface are placeholders: the rule kernel never
+            # reads them (see MENTION_COLS)
+            by_turn.setdefault(int(ti), []).append(
+                Mention(int(mi), et, int(st), 0, 0.0, "", ns))
+        out = emit_triples_for_conv(
+            conv_id, [(t, None) for t in by_turn], by_turn, WINDOW_W)
+        rows.extend((conv_id, t, s, p, o) for (t, s, p, o) in out)
+    return pd.DataFrame(rows, columns=TRIPLES_SCHEMA.fieldNames())
 
 
 def emit_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
     """transcripts: full turn rows; mentions: output of mentions_from_turns.
 
-    The cogroup key is a HASH BUCKET of conv_id, not conv_id itself: Spark
-    pays a fixed pandas-frame cost per cogroup key (~1 ms), which at one
-    key per conversation dominated the stage (4000 convs ≈ 4 s at sf0.1).
-    The kernel iterates its bucket's conversations with an in-pandas
-    groupby — per-conv semantics identical, ~60x fewer group crossings,
-    still one shuffle by the bucket key.  Skew is unchanged: a hot conv
-    bounds a task either way.
+    Precondition: every mention's (conv_id, turn_idx) is a row of
+    ``transcripts``; a mention on an unlisted turn would emit triples the
+    turn-row rule does not.
 
-    The bucket count scales with the INPUT, not just the core count
-    (VERDICT r5 #5 — the fixed 2/core key space under-partitioned sf1:
-    10x rows made each bucket's pandas frame 10x fatter, measured 14.8 s
-    vs 9.5 s at a scaled key space on the same input).  Keys come from
-    scan bytes at ~BUCKET_TARGET_BYTES per key (metadata only; at sf0.1
-    this reproduces the old 64, at sf1 it yields ~640) with the 2/core
-    floor for non-file inputs — group KEYS are not shuffle partitions,
-    so more keys only bound the per-frame size, they don't fragment
-    tasks."""
-    from .partitioning import scan_bytes
-
+    uses_tool is a distinct projection of the rows with a non-null,
+    non-empty tool.  The window predicates group the mention rows by a
+    HASH BUCKET of conv_id, not conv_id: Spark pays ~1 ms per group key,
+    which at one key per conversation dominated the stage (4000 convs ≈
+    4 s at sf0.1).  The buckets are hash-partitioned to
+    defaultParallelism first, so AQE cannot coalesce a small input's
+    reduce side into one task that runs the rule body serially."""
     spark = transcripts.sparkSession
-    est = scan_bytes(transcripts) or 0
-    n_buckets = max(8, spark.sparkContext.defaultParallelism
-                    * BUCKETS_PER_CORE,
-                    est // BUCKET_TARGET_BYTES)
-    bucket = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
-
-    def kernel(key: tuple, turns_pdf: pd.DataFrame,
-               mentions_pdf: pd.DataFrame) -> pd.DataFrame:
-        rows: list[tuple] = []
-        ment_by_conv = (
-            {cid: sub for cid, sub in mentions_pdf.groupby("conv_id")}
-            if len(mentions_pdf) else {}
-        )
-        for conv_id, tsub in turns_pdf.groupby("conv_id"):
-            turns = [
-                (int(t), None if (tool is None or tool != tool) else tool)
-                for t, tool in zip(tsub["turn_idx"], tsub["tool"])
-            ]
-            by_turn: dict[int, list[Mention]] = {}
-            msub = ment_by_conv.get(conv_id)
-            if msub is not None:
-                # column-wise zip instead of itertuples (r8: ~15% less
-                # kernel wall, output-identical — A/B in the round log)
-                msub = msub.sort_values(["turn_idx", "mention_idx"])
-                for ti, mi, et, st, ns in zip(
-                    msub["turn_idx"].to_numpy(),
-                    msub["mention_idx"].to_numpy(),
-                    msub["entity_type"].to_numpy(),
-                    msub["start"].to_numpy(),
-                    msub["norm_surface"].to_numpy(),
-                ):
-                    by_turn.setdefault(int(ti), []).append(
-                        # end/score/surface are placeholders: the rule
-                        # kernel never reads them (see MENTION_COLS)
-                        Mention(int(mi), et, int(st), 0, 0.0, "", ns)
-                    )
-            out = emit_triples_for_conv(conv_id, turns, by_turn, WINDOW_W)
-            rows.extend((conv_id, t, s, p, o) for (t, s, p, o) in out)
-        return pd.DataFrame(
-            rows, columns=["conv_id", "turn_idx", "subj", "pred", "obj"],
-        )
-
-    turns_meta = transcripts.select("conv_id", "turn_idx", "tool",
-                                    bucket.alias("bucket"))
-    m = mentions.select(*MENTION_COLS, bucket.alias("bucket"))
-    return (
-        turns_meta.groupBy("bucket")
-        .cogroup(m.groupBy("bucket"))
-        .applyInPandas(kernel, schema=TRIPLES_SCHEMA)
+    tools = (
+        transcripts.filter(F.col("tool").isNotNull() & (F.col("tool") != ""))
+        .select("conv_id", F.col("turn_idx").cast("long"),
+                F.concat(F.lit(conv_ref("")), "conv_id").alias("subj"),
+                F.lit(PRED_USES_TOOL).alias("pred"),
+                F.concat(F.lit(tool_ref("")), "tool").alias("obj"))
+        .distinct()
     )
+    bucket = F.pmod(F.xxhash64("conv_id"),
+                    F.lit(triple_buckets(transcripts))).cast("int")
+    windowed = (
+        mentions.select(*MENTION_COLS, bucket.alias("bucket"))
+        .repartition(spark.sparkContext.defaultParallelism, "bucket")
+        .groupBy("bucket").applyInPandas(window_triples, schema=TRIPLES_SCHEMA)
+    )
+    return tools.unionByName(windowed)
 
 
 def triple_counts(triples: DataFrame) -> DataFrame:

@@ -56,7 +56,7 @@ from ..operators.packing import pack_documents, pack_stats
 from ..operators.sampling import train_eval_split
 from ..operators.scrub import scrub_documents
 from ..operators.textstats import lang_quality, text_profile
-from ..sources.tables import read_tpch
+from ..sources.tables import DOCUMENTS_SCHEMA
 from .pipeline import StagedPipeline, _fingerprint_path, chain_fingerprints
 
 PACK_BUDGET = 256
@@ -154,15 +154,18 @@ class CorpusPipeline(StagedPipeline):
         """Run or resume every stage; {stage: frame} in chain order."""
         from ..oracle import docs_golden, reference_oracle
 
-        root = (f"{_fingerprint_path(Path(self.sf_dir) / 'documents.parquet')}"
+        docs = Path(self.sf_dir) / "documents.parquet"
+        root = (f"{_fingerprint_path(docs)}"
                 f"|docs=v{docs_golden.DOCS_GOLDEN_VERSION}"
                 f"|semantics=v{reference_oracle.GOLDEN_VERSION}")
         chain = corpus_chain(self.lm_filter)
         fps = chain_fingerprints(chain, root, {
             "shingle_tail": f"shingle_tail={self.shingle_tail}",
             "bpe_pack": f"bpe_pack={self.bpe_pack}"})
-        src = CorpusSource(read_tpch(self.spark, self.sf_dir, "documents"),
-                           self.bpe_pack, self.shingle_tail)
+        # read with its schema: inference is a Spark job per run
+        src = CorpusSource(
+            self.spark.read.schema(DOCUMENTS_SCHEMA).parquet(str(docs)),
+            self.bpe_pack, self.shingle_tail)
         out = self._run_graph(self._chain_steps(chain, src, fps))
         self._write_metrics()
         return out

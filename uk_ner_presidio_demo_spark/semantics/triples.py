@@ -4,7 +4,7 @@ The predicate vocabulary comes from BASELINE.json (mentions_person, uses_tool,
 contacts_via, shares_pii_with); the mention semantics the predicates consume
 come from the reference recognizers.  Window size, tie-breaks, PII set, and
 entity-reference encoding are constants HERE so the plain-Python oracle and
-the Spark cogrouped-applyInPandas emitter share them literally.
+the Spark grouped-map emitter (operators/triples.py) share them literally.
 
 Entity references (pre-canonicalization) are "TYPE:norm_surface"; the
 canonicalization stage later rewrites them to stable canonical ids.

@@ -36,6 +36,10 @@ ALIASES_SCHEMA = T.StructType(
     ]
 )
 
+# the fixture directories' documents table (<sf_dir>/documents.parquet)
+DOCUMENTS_SCHEMA = ("doc_id long, text string, lang string, source string, "
+                    "n_chars long")
+
 
 def read_transcripts(spark: SparkSession, sf_dir: str,
                      table: str | None = None) -> DataFrame:
