@@ -103,13 +103,6 @@ def _q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.withColumn("turn_idx", F.col("turn_idx").cast("long"))
 
 
-def _q_mentions_score_strategy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W-1 'score' conflict strategy (the library default,
-    core/analyzer.py:96) — vs the UI's 'priority' used elsewhere."""
-    m = kg_chain(read_transcripts(spark, sf_dir), "mentions", "score")
-    return m.withColumn("turn_idx", F.col("turn_idx").cast("long"))
-
-
 def _q_anonymized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F-1 anonymization splice (per-turn text rewrite)."""
     a = kg_chain(read_transcripts(spark, sf_dir), "anonymized")
@@ -140,33 +133,10 @@ def _q_top_surfaces(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_valid_turn_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O-5 validity filter + A-2/A-5/A-6 conditional aggregates, per role."""
-    from uk_ner_presidio_demo_spark.sources.tables import valid_text_predicate
-
-    tr = read_transcripts(spark, sf_dir)
-    return (
-        tr.groupBy("role")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.sum(F.when(valid_text_predicate(), 1).otherwise(0)).alias("n_valid"),
-            F.sum(F.when(valid_text_predicate(), F.length("text")).otherwise(0))
-            .alias("valid_chars"),
-        )
-    )
-
-
 def _q_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J-4 turn-window relation heuristic + triple emission (§2.10): a
     Catalyst uses_tool leg + a grouped applyInPandas over mention rows."""
     return kg_chain(read_transcripts(spark, sf_dir), "triples")
-
-
-def _q_triple_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A-1 aggregate over the triples output, per predicate."""
-    from uk_ner_presidio_demo_spark.operators.triples import triple_counts
-
-    return triple_counts(_q_triples(spark, sf_dir))
 
 
 def _q_triple_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -424,7 +394,7 @@ def _q_doc_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces every decision through the bit-exact xxhash64 twin
     (semantics/sparkhash.py), like the pack ids."""
     from uk_ner_presidio_demo_spark.operators.sampling import (
-        GRANULARITY, hash_sample, train_eval_split,
+        hash_sample, train_eval_split,
     )
     from uk_ner_presidio_demo_spark.oracle.docs_golden import (
         SAMPLE_FRACTION, SPLIT_EVAL_FRACTION,
@@ -505,10 +475,9 @@ def _q_doc_span_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r4 #6): maximal duplicated runs vs owner docs cut
     token-exactly via SAM matching statistics (oracle: the quadratic DP
     twin in docs_golden, property-tested equal), intra-doc repeats at
-    chunk granularity.  The chunk-rounded twin excise_duplicate_chunks
-    keeps its own golden + pytest coverage (tests/test_chunking.py).
-    Bench note: doc_span_excise gained the pair matching-statistics
-    stage in r5 — a by-design per-query work change vs r4."""
+    chunk granularity.  Bench note: doc_span_excise gained the pair
+    matching-statistics stage in r5 — a by-design per-query work change
+    vs r4."""
     from uk_ner_presidio_demo_spark.operators.chunking import (
         excise_duplicate_spans,
     )
@@ -530,11 +499,9 @@ def _q_ann_ivfpq_query_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     train-once/encode-once/query-many shape of a real ANN deployment — so
     under bench.py's best-of-2 the reported wall is the pure QUERY path,
     which scans only (vec_id, cell, codes) and never touches raw
-    embeddings (plan-gated in tests/test_similarity.py).  The board slot
-    came from ann_ivf_kmeans_topk (same trainer lineage — the distributed
+    embeddings (plan-gated in tests/test_similarity.py).  The distributed
     k-means centroids inside build_pq_index stay bit-identical-tested vs
-    the oracle trainer); its standalone oracle check moved to
-    tests/test_demoted_queries.py.
+    the oracle trainer.
 
     Since r6 the row also exercises INCREMENTAL index maintenance
     (VERDICT r5 #3 fold): the index is built on the base split
@@ -592,15 +559,6 @@ def _q_doc_partial_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("shared_chunks").cast("long").alias("shared_chunks"),
         "common_span_tokens",
     )
-
-
-def _q_doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup: hash-groupBy on md5(text), keeper = min doc_id.
-    Demoted r6 (board slot went to txt_bpe_counts, VERDICT r5 #2); keeps
-    the SAME live md5 SQL oracle in tests/test_demoted_queries.py."""
-    from uk_ner_presidio_demo_spark.operators.dedup import exact_dedup
-
-    return exact_dedup(read_tpch(spark, sf_dir, "documents"))
 
 
 def _q_txt_bpe_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -662,13 +620,6 @@ def _q_doc_neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uk_ner_presidio_demo_spark.operators.dedup import neardup_minhash
 
     return neardup_minhash(read_tpch(spark, sf_dir, "documents"))
-
-
-def _q_doc_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-pairs n-gram-Jaccard near-dup (quadratic correctness baseline)."""
-    from uk_ner_presidio_demo_spark.operators.dedup import neardup_exact
-
-    return neardup_exact(read_tpch(spark, sf_dir, "documents"))
 
 
 def _q_doc_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,20 +704,6 @@ def _q_ann_exact_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.unionByName(lsh)
 
 
-def _q_ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k over a TRAINED coarse quantizer: deterministic distributed
-    k-means (int64-quantized Lloyd sums, bit-identical to the oracle
-    trainer) replaces the seeded-centroid stand-in.  Demoted r5 (board
-    slot went to ann_ivfpq_query_path, VERDICT r4 #5); keeps its exact
-    golden-parquet oracle in tests/test_demoted_queries.py, and the
-    trainer itself stays board-verified through both IVF-PQ rows."""
-    from uk_ner_presidio_demo_spark.operators.similarity import (
-        ann_topk_ivf_kmeans,
-    )
-
-    return ann_topk_ivf_kmeans(read_tpch(spark, sf_dir, "embeddings"))
-
-
 def _q_doc_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup APPLICATION (not just pair discovery): MinHash/LSH dup pairs
     -> connected components -> keep the min doc_id per cluster.  Oracle =
@@ -785,23 +722,6 @@ def _q_doc_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from uk_ner_presidio_demo_spark.operators.dedup import clean_corpus
 
     return clean_corpus(read_tpch(spark, sf_dir, "documents"), lang="lat")
-
-
-def _q_txt_stopword_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-ratio quality feature (C4-shape; frozen UK stopword list)."""
-    from uk_ner_presidio_demo_spark.operators.textstats import stopword_stats
-
-    return stopword_stats(read_tpch(spark, sf_dir, "documents"))
-
-
-def _q_txt_unigram_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM scoring substrate (corpus-count join; no UDF).
-    Demoted r4 (board slot went to doc_pii_scrub) — keeps its live SQL
-    oracle in tests/test_demoted_queries.py; txt_freq_profile remains
-    the board's corpus-frequency evidence."""
-    from uk_ner_presidio_demo_spark.operators.textstats import unigram_probs
-
-    return unigram_probs(read_tpch(spark, sf_dir, "documents"))
 
 
 def _q_txt_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1197,26 +1117,6 @@ def _q_tpch_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_tpch_semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J-6 semi AND anti in one board row (merged from the former
-    tpch_semi_join / tpch_anti_join rows — VERDICT r3 #1 board
-    rotation): both legs partition `customer` by "has an URGENT order",
-    each keeping its own payload column (NULL on the other leg)."""
-    o = read_tpch(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    c = read_tpch(spark, sf_dir, "customer")
-    semi = c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
-        F.lit("semi").alias("leg"), "c_custkey", "c_mktsegment",
-        F.lit(None).cast("double").alias("c_acctbal"),
-    )
-    anti = c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        F.lit("anti").alias("leg"), "c_custkey",
-        F.lit(None).cast("string").alias("c_mktsegment"), "c_acctbal",
-    )
-    return semi.unionByName(anti)
-
-
 def _q_doc_token_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distributed order statistics (operators/quantiles.py
     exact_int_quantiles — the VALUE-HISTOGRAM method: one
@@ -1282,33 +1182,6 @@ def _q_tpch_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_tpch_union_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U-1 bag union of two recognizer-family-shaped branches + A-6
-    conditional aggregates over the union (merges the former tpch_union and
-    tpch_conditional_agg rows into one board slot — both were green in r1;
-    the registry outgrew the driver's 50-row cap in r2)."""
-    o = read_tpch(spark, sf_dir, "orders")
-    hi = o.filter(F.col("o_totalprice") > 250000.0).select(
-        "o_orderkey", F.lit("high").alias("bucket"),
-        "o_orderstatus", "o_totalprice",
-    )
-    urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        "o_orderkey", F.lit("urgent").alias("bucket"),
-        "o_orderstatus", "o_totalprice",
-    )
-    return (
-        hi.unionByName(urgent)
-        .groupBy("bucket", "o_orderstatus")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_value"),
-            F.sum(
-                F.when(F.col("o_totalprice") > 300000.0, 1).otherwise(0)
-            ).alias("n_jumbo"),
-        )
-    )
-
-
 def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W-4 sessionization, two legs:
       'events'  — lag-window inter-event gaps + cumulative sum over
@@ -1359,150 +1232,6 @@ def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return events_leg.unionByName(windows_leg)
-
-
-def _q_tpch_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective join + grouped revenue + top-k."""
-    c = read_tpch(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    o = read_tpch(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1995-03-15")
-    )
-    li = read_tpch(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1995-03-15")
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "l_orderkey")
-        .limit(20)
-    )
-
-
-def _q_tpch_rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A-family extension: multi-level ROLLUP aggregate (per flag+status,
-    per flag, grand total) — the OLAP cube shape Catalyst expands to a
-    single Expand+Aggregate (one shuffle, no per-level rescans)."""
-    li = read_tpch(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        )
-    )
-
-
-def _q_tpch_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: the full dimension snowflake (region -> nation ->
-    customer AND supplier) joined to the fact chain with the LOCAL
-    supplier condition (c_nationkey == s_nationkey) — the multi-way
-    broadcast-dim / streaming-fact star-join plan a 100-TB warehouse
-    wants: every dimension broadcasts, the lineitem scan never shuffles
-    for a dim join.  Pytest-resident coverage row (live DuckDB oracle in
-    tests/test_demoted_queries.py, never on the board): exercises the
-    region/nation/supplier tables the board otherwise leaves cold."""
-    r = read_tpch(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = read_tpch(spark, sf_dir, "nation")
-    c = read_tpch(spark, sf_dir, "customer")
-    s = read_tpch(spark, sf_dir, "supplier")
-    o = read_tpch(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01"))
-    )
-    li = read_tpch(spark, sf_dir, "lineitem")
-    nr = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (li.l_suppkey == s.s_suppkey)
-            & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(nr), s.s_nationkey == nr.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-                2,
-            ).alias("revenue")
-        )
-    )
-
-
-def _q_tpch_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: fact-to-dim broadcast join + conditional
-    aggregate — one ship month's promo revenue share.  The two rounded
-    multi-row sums are the contract-safe outputs (CLAUDE.md floats
-    rule); the pct divides the ALREADY-ROUNDED sums, so both engines
-    divide identical doubles (IEEE division is deterministic).
-    Pytest-resident coverage row: exercises the part table."""
-    p = read_tpch(spark, sf_dir, "part")
-    li = read_tpch(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-09-01"))
-        & (F.col("l_shipdate") < F.lit("1996-10-01"))
-    )
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                F.sum(
-                    F.when(F.col("p_type") == "ECONOMY", rev).otherwise(
-                        F.lit(0.0)
-                    )
-                ),
-                2,
-            ).alias("promo_revenue"),
-            F.round(F.sum(rev), 2).alias("total_revenue"),
-        )
-        .select(
-            "promo_revenue",
-            "total_revenue",
-            (
-                F.lit(100.0)
-                * F.col("promo_revenue")
-                / F.col("total_revenue")
-            ).alias("promo_pct"),
-        )
-    )
-
-
-def _q_kg_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph analytics over the materialized KG: per-node degree (subject
-    or object of a canonical triple) and the degree histogram shape —
-    grouped by ref kind (canonical-entity vs conv:/tool: literals).
-
-    Input is the ENGINE's canonical-triples plan (the same plan
-    kg_canonical_triples hash-verifies against the golden parquet), so this
-    row evidences the full detect->link->CC->rewrite path plus the degree
-    aggregation — not just Spark-vs-DuckDB agg parity over the oracle's own
-    output (VERDICT r2 #5).  The oracle SQL reads the golden parquet, which
-    is hash-identical by the kg_canonical_triples gate.  The triples frame
-    is lineage-cut before the subj/obj self-union so the KG pipeline runs
-    once, not twice."""
-    ct = _q_canonical_triples(spark, sf_dir).localCheckpoint(eager=True)
-    nodes = ct.select(F.col("subj").alias("ref")).unionAll(
-        ct.select(F.col("obj").alias("ref"))
-    )
-    deg = nodes.groupBy("ref").agg(F.count("*").alias("degree"))
-    kind = (
-        F.when(F.col("ref").startswith("conv:"), F.lit("conv"))
-        .when(F.col("ref").startswith("tool:"), F.lit("tool"))
-        .otherwise(F.lit("entity"))
-    )
-    return (
-        deg.groupBy(kind.alias("ref_kind"), "degree")
-        .agg(F.count("*").alias("n_nodes"))
-    )
 
 
 def _q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -201,30 +201,12 @@ def main() -> None:
     import __spark_entry__ as entrymod
 
     qmap = dict(entrymod.queries())
-    # two r1/r2 headline queries left the 50-slot driver registry in r3
-    # (kg_top_surfaces: identical oracle to the salted twin; events_sessions:
-    # merged into events_sessionize) — keep benching the same callables so
-    # round-over-round per-query comparisons stay name-stable
+    # headline queries with no board row: bench keeps timing the same
+    # callables under the same names, so per-query ratios stay comparable
     qmap.setdefault("kg_top_surfaces", entrymod._q_top_surfaces)
     qmap.setdefault("events_sessions", entrymod._q_events_sessions)
-    # name-stable callables for queries that merged/rotated off the 50-slot
-    # board (r3: board slots; r4: ann_topk merged into ann_exact_lsh_topk,
-    # the r3 off-board six promoted) — bench keeps timing the SAME work
-    # under the SAME name so round-over-round per-query ratios stay valid.
-    # Exceptions by design in r4: doc_partial_overlap now times the
-    # VERIFIED operator (chunk blocking + exact-span verify — the r3
-    # number covered blocking only), and txt_quality absorbed the
-    # stopword-stats explode+agg (board merge) — expect both to read
-    # "slower" vs r3 under like-for-like comparison.
     qmap.setdefault("ann_topk", entrymod._q_ann_topk)
     qmap.setdefault("ann_pq_topk", entrymod._q_ann_pq_topk)
-    qmap.setdefault("doc_pii_scrub", entrymod._q_doc_pii_scrub)
-    qmap.setdefault("doc_span_excise", entrymod._q_doc_span_excise)
-    # deployment query path: run 1 builds+caches the PQ index (train/encode
-    # once), run 2 hits the cache — best-of-2 reports the pure query-path
-    # wall over the codes table (no raw-embedding scan)
-    qmap.setdefault("ann_ivfpq_query_path",
-                    entrymod._q_ann_ivfpq_query_path)
     headline = [q for q in HEADLINE if q in qmap]
 
     # Warm the python workers / JVM once: a small detection pass spawns the

@@ -94,32 +94,6 @@ class TestFileSources:
         assert {"PERS", "ORG"} <= by_file["a.txt"]
         assert {"EMAIL_ADDRESS", "PHONE_NUMBER"} <= by_file["b.txt"]
 
-    def test_distributed_enabled_sets(self, spark, sf001):
-        """O-6 at the DataFrame surface: restricting the pattern family to
-        EMAIL_ADDRESS and disabling NER yields only email mentions, and
-        matches the oracle run with the same sets per turn."""
-        from uk_ner_presidio_demo_spark.operators.detect import (
-            detect_turns, mentions_from_turns,
-        )
-        from uk_ner_presidio_demo_spark.semantics.detect import detect_mentions
-        from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
-
-        tr = read_transcripts(spark, sf001).limit(400)
-        m = mentions_from_turns(
-            detect_turns(tr, ner_enabled=frozenset(),
-                         pattern_enabled=frozenset({"EMAIL_ADDRESS"}))
-        ).toPandas()
-        assert set(m["entity_type"].unique()) <= {"EMAIL_ADDRESS"}
-        # spot-check one turn against the shared kernel with the same sets
-        src = tr.select("conv_id", "turn_idx", "text").toPandas()
-        row = src[src.text.str.contains("@", na=False)].iloc[0]
-        want, _ = detect_mentions(
-            row.text, ner_enabled=frozenset(),
-            pattern_enabled=frozenset({"EMAIL_ADDRESS"}),
-        )
-        got = m[(m.conv_id == row.conv_id) & (m.turn_idx == row.turn_idx)]
-        assert len(got) == len(want)
-
     def test_cp1251_fallback_matches_utf8_twin(self, spark, tmp_path):
         """O-1 encoding cascade: the same Ukrainian text written as cp1251
         and as UTF-8 must ingest to identical strings (reference

@@ -186,101 +186,6 @@ class TestLcsEquivalence:
         assert wall < 1.0, f"verify took {wall:.2f}s"
 
 
-def test_partial_overlap_dedup_apply_keeps_min_and_unrelated(spark):
-    """The substring-level dedup APPLY drops the later doc of a verified
-    overlapping pair and keeps singletons — pairs->CC->keep-min, same
-    clustering as doc_dedup_apply."""
-    from uk_ner_presidio_demo_spark.operators.chunking import (
-        partial_overlap_dedup_apply,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, _PREFIX + " " + _SHARED), (2, _SHARED + " " + _SUFFIX),
-         (3, " ".join(f"інше{i}" for i in range(120)))],
-        "doc_id long, text string",
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in partial_overlap_dedup_apply(docs).select("doc_id").collect()
-    )
-    assert kept == [1, 3]  # 2 clustered with 1 (min keeps), 3 singleton
-
-
-class TestExciseDuplicateChunks:
-    """Span-level dedup apply: the global-first occurrence of every chunk
-    survives, later occurrences are cut out of their docs."""
-
-    @staticmethod
-    def _twin(texts: dict[int, str]) -> dict[int, tuple[int, int, str]]:
-        owner: dict[str, tuple[int, int]] = {}
-        chunks = {d: token_chunks(t) for d, t in sorted(texts.items())}
-        for d in sorted(chunks):
-            for idx, (_, _, h) in enumerate(chunks[d]):
-                if h not in owner:
-                    owner[h] = (d, idx)
-        out = {}
-        for d, t in texts.items():
-            toks = t.split()
-            drop: set[int] = set()
-            for idx, (s, e, h) in enumerate(chunks[d]):
-                if owner[h] != (d, idx):
-                    drop.update(range(s, e))
-            kept = [tk for i, tk in enumerate(toks) if i not in drop]
-            out[d] = (len(toks), len(toks) - len(kept), " ".join(kept))
-        return out
-
-    def test_planted_shared_span_is_excised_from_later_doc(self, spark):
-        from uk_ner_presidio_demo_spark.operators.chunking import (
-            excise_duplicate_chunks,
-        )
-
-        texts = {
-            1: _PREFIX + " " + _SHARED,
-            2: _SHARED + " " + _SUFFIX,
-            3: " ".join(f"інше{i}" for i in range(120)),
-        }
-        docs = spark.createDataFrame(
-            list(texts.items()), "doc_id long, text string"
-        )
-        got = {r["doc_id"]: r for r in excise_duplicate_chunks(docs).collect()}
-        # owner doc keeps everything (no earlier occurrence exists)
-        assert got[1]["n_excised_tokens"] == 0
-        assert got[1]["clean_text"] == texts[1]
-        # later doc loses (most of) the shared span but SURVIVES
-        assert got[2]["n_excised_tokens"] >= 100
-        assert "хвіст0" in got[2]["clean_text"]     # unique tail kept
-        # unrelated doc untouched
-        assert got[3]["n_excised_tokens"] == 0
-        # token accounting + exact twin
-        want = self._twin(texts)
-        for d, r in got.items():
-            n, ex, clean = want[d]
-            assert (r["n_tokens"], r["n_excised_tokens"],
-                    r["clean_text"]) == (n, ex, clean)
-
-    def test_matches_python_twin_on_corpus(self, spark, sf01):
-        from uk_ner_presidio_demo_spark.operators.chunking import (
-            excise_duplicate_chunks,
-        )
-
-        texts = dict(
-            pd.read_parquet(f"{sf01}/documents.parquet")[["doc_id", "text"]]
-            .itertuples(index=False)
-        )
-        got = excise_duplicate_chunks(
-            read_tpch(spark, sf01, "documents")
-        ).toPandas().set_index("doc_id").sort_index()
-        want = self._twin(texts)
-        assert len(got) == len(want)
-        total_excised = 0
-        for d, (n, ex, clean) in want.items():
-            row = got.loc[d]
-            assert (row["n_tokens"], row["n_excised_tokens"],
-                    row["clean_text"]) == (n, ex, clean)
-            total_excised += ex
-        assert total_excised > 0  # non-vacuous on this corpus
-
-
 def test_verified_partial_overlap_confirms_span(spark):
     """The verify stage keeps the planted prefix+shared/shared+suffix pair
     (150-token common span) and reports a span >= the threshold; raising
@@ -380,14 +285,14 @@ class TestMatchingStatsEquivalence:
 
 class TestExactSpanExcision:
     """excise_duplicate_spans (r5): token-exact boundaries per Lee et
-    al., vs the chunk-rounded twin and the DP golden."""
+    al., vs a planted span and the DP golden."""
 
     def test_planted_span_is_cut_token_exactly(self, spark):
         """Doc 2 embeds a 60-token span of doc 1 at NON-chunk-aligned
-        offsets: the exact operator cuts exactly those 60 tokens (the
-        chunk version would miss the partial head/tail chunks)."""
+        offsets: the exact operator cuts exactly those 60 tokens (a
+        chunk-rounded cut would miss the partial head/tail chunks)."""
         from uk_ner_presidio_demo_spark.operators.chunking import (
-            excise_duplicate_chunks, excise_duplicate_spans,
+            excise_duplicate_spans,
         )
 
         rng_tokens = [f"own{i}x{i % 7}" for i in range(200)]
@@ -404,12 +309,6 @@ class TestExactSpanExcision:
         assert got[1]["n_excised_tokens"] == 0   # owner keeps everything
         assert got[2]["n_excised_tokens"] == 60  # exactly the span
         assert got[2]["clean_text"] == " ".join(prefix + suffix)
-        # the chunk-rounded twin cuts LESS here (partial-edge chunks of
-        # the span hash differently inside doc 2) — the r5 gain, shown
-        chunk = {r["doc_id"]: r
-                 for r in excise_duplicate_chunks(docs).collect()}
-        assert chunk[2]["n_excised_tokens"] < 60
-        assert chunk[2]["n_excised_tokens"] > 0
 
     def test_matches_dp_golden_on_corpus(self, spark, sf01):
         from uk_ner_presidio_demo_spark.operators.chunking import (
@@ -481,31 +380,6 @@ class TestExciseOwnerCap:
                   cross_owner_spans(docs, max_owners=2)
                   .toPandas().itertuples(index=False)}
         assert capped <= full
-
-
-def test_excise_owner_cap_metrics_surface_truncation(spark):
-    """No silent caps: when a doc's owner list exceeds max_owners, the
-    lineage metrics must say so (the VERDICT r3 #7 principle applied to
-    the r5 owner cap)."""
-    from uk_ner_presidio_demo_spark.operators.chunking import (
-        excise_owner_cap_metrics,
-    )
-
-    blocks = {o: " ".join(f"блок{o}т{i}х{i % 7}" for i in range(60))
-              for o in (1, 2, 3)}
-    docs = spark.createDataFrame(
-        [(o, blocks[o]) for o in (1, 2, 3)]
-        + [(10, " ".join(blocks.values()))],
-        "doc_id long, text string",
-    )
-    m = {r["metric"]: r["value"]
-         for r in excise_owner_cap_metrics(docs, max_owners=1).collect()}
-    assert m["n_owner_pairs"] == 3      # doc 10 vs owners 1, 2, 3
-    assert m["n_owner_pairs_dropped"] == 2
-    assert m["n_docs_capped"] == 1
-    m2 = {r["metric"]: r["value"]
-          for r in excise_owner_cap_metrics(docs).collect()}
-    assert m2["n_owner_pairs_dropped"] == 0 and m2["n_docs_capped"] == 0
 
 
 class TestShingleTailPass:

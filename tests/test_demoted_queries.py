@@ -1,28 +1,15 @@
-"""Pytest coverage for operators demoted from the 50-slot driver board in
-r3/r4 (the registry must fit the driver's cap, VERDICT r2 #1) — each
-demoted query keeps the SAME oracle check here that it had on the board:
+"""Pytest coverage for work that holds no row on the 50-slot driver board
+but still ships:
 
-  kg_top_surfaces       — identical oracle to kg_top_surfaces_salted
-  ann_ivf_topk          — superseded on the board by the trained variant
-  txt unit operators    — merged into txt_text_profile / txt_quality
+  kg_top_surfaces / events_sessions — off-board callables bench.py still
+                          times; each keeps the oracle it had on the board
+  ann_ivf_topk          — the seeded-centroid IVF path (the board row runs
+                          the trained variant); exact vs its golden
+  lang_id / quality_score — the clean_corpus legs; equal to the fused
+                          lang_quality row
   tpch_filter_project   — merged into tpch_window_topk
-  tpch_union / cond_agg — merged into tpch_union_agg
-  events_sessions       — merged into events_sessionize
-  doc_neardup_exact     — labeled quadratic baseline (VERDICT r2: "never
-                          promote"); board slot went to doc_contamination
-  kg_triple_counts      — trivial derivation of the hash-verified
-                          kg_triples; board slot went to doc_packing
-  kg_mentions_score_strategy — demoted r4 (board slot went to the r3
-                          off-board operators); the score-vs-priority
-                          strategy divergence anchor keeps its golden
-                          oracle here
-  ann_topk / ann_lsh_topk / mm_resize_plan / mm_frame_sample /
-  tpch_semi_join / tpch_anti_join / kg_confirmed / kg_rejected /
-  sink_json — MERGED (not demoted) r4: their exact old evidence is a
-              projection of the merged board rows
-              (ann_exact_lsh_topk, mm_media_plan, tpch_semi_anti_join,
-              kg_review_mentions, sink_report_roundtrip), so the driver
-              still hash-verifies them; no separate mirror needed
+  score strategy        — `driver.py --strategy score`: the mentions stage
+                          under the W-1 'score' resolution vs its golden
 """
 
 import pytest
@@ -57,23 +44,6 @@ def test_ann_ivf_seeded_matches_golden(spark, sf01):
     assert not compare_frames(got, want)
 
 
-def test_unit_textstats_match_fused_profile(spark, sf01):
-    """token_count / token_count_bpe / fingerprint (unit operators) must
-    agree column-for-column with the fused one-scan text_profile."""
-    from uk_ner_presidio_demo_spark.operators.textstats import (
-        fingerprint, text_profile, token_count, token_count_bpe,
-    )
-
-    docs = read_tpch(spark, sf01, "documents")
-    fused = text_profile(docs).toPandas().set_index("doc_id").sort_index()
-    tc = token_count(docs).toPandas().set_index("doc_id").sort_index()
-    bpe = token_count_bpe(docs).toPandas().set_index("doc_id").sort_index()
-    fp = fingerprint(docs).toPandas().set_index("doc_id").sort_index()
-    assert (fused["n_tokens"] == tc["n_tokens"]).all()
-    assert (fused["n_bpe_tokens"] == bpe["n_bpe_tokens"]).all()
-    assert (fused["fp"] == fp["fp"]).all()
-
-
 def test_unit_lang_and_quality_match_fused(spark, sf01):
     from uk_ner_presidio_demo_spark.operators.textstats import (
         lang_id, lang_quality, quality_score,
@@ -93,52 +63,6 @@ def test_unit_lang_and_quality_match_fused(spark, sf01):
     "qfn,sql",
     [
         (
-            # demoted late-r6: board slot went to kg_pagerank (which runs
-            # over the same canonical-triples graph and subsumes the
-            # structural evidence).  SAME live SQL oracle it held on the
-            # board.
-            em._q_kg_degree_distribution,
-            f"""
-            WITH refs AS (
-                SELECT subj AS ref
-                FROM read_parquet('{em._golden("golden_canonical_triples")}')
-                UNION ALL
-                SELECT obj AS ref
-                FROM read_parquet('{em._golden("golden_canonical_triples")}')
-            ), deg AS (
-                SELECT ref, count(*) AS degree FROM refs GROUP BY ref
-            )
-            SELECT CASE WHEN ref LIKE 'conv:%' THEN 'conv'
-                        WHEN ref LIKE 'tool:%' THEN 'tool'
-                        ELSE 'entity' END AS ref_kind,
-                   degree,
-                   count(*) AS n_nodes
-            FROM deg GROUP BY 1, 2
-            """,
-        ),
-        (
-            # demoted late-r6: board slot went to kg_edge_upsert; its
-            # validity-filter counts are recomputed verbatim by
-            # pipeline_stage_rows' validate/detected legs.  SAME live SQL
-            # oracle it held on the board.
-            em._q_valid_turn_stats,
-            f"""
-            SELECT role,
-                   count(*) AS n_turns,
-                   CAST(sum(CASE WHEN text IS NOT NULL
-                            AND length(text) <= 100000
-                            AND regexp_matches(text, '\\S')
-                       THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-                   CAST(sum(CASE WHEN text IS NOT NULL
-                            AND length(text) <= 100000
-                            AND regexp_matches(text, '\\S')
-                       THEN length(text) ELSE 0 END) AS BIGINT)
-                       AS valid_chars
-            FROM read_parquet('{em._transcripts_glob()}')
-            GROUP BY role
-            """,
-        ),
-        (
             em._q_events_sessions,
             """
             SELECT event_id, user_id,
@@ -149,196 +73,10 @@ def test_unit_lang_and_quality_match_fused(spark, sf01):
             FROM events
             """,
         ),
-        (
-            # merged into txt_quality r4 (same per-doc grain); the unit
-            # operator keeps its standalone live SQL oracle here
-            em._q_txt_stopword_stats,
-            """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(regexp_split_to_array(trim(lower(text)),
-                                                    '\\s+')) AS token
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(count(*) AS BIGINT) AS n_tokens,
-                   CAST(sum(CASE WHEN token IN ('і', 'й', 'та', 'або', 'але', 'що', 'як', 'до', 'на', 'у', 'в', 'з', 'із', 'зі', 'за', 'від', 'про', 'по', 'при', 'для', 'без', 'це', 'цей', 'ця', 'ці', 'той', 'те', 'він', 'вона', 'воно', 'вони', 'ми', 'ви', 'я', 'ти', 'не', 'ні', 'так', 'же', 'б', 'би', 'його', 'її', 'їх', 'а', 'о', 'є', 'був', 'була', 'було', 'були', 'бути')
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_stopwords,
-                   sum(CASE WHEN token IN ('і', 'й', 'та', 'або', 'але', 'що', 'як', 'до', 'на', 'у', 'в', 'з', 'із', 'зі', 'за', 'від', 'про', 'по', 'при', 'для', 'без', 'це', 'цей', 'ця', 'ці', 'той', 'те', 'він', 'вона', 'воно', 'вони', 'ми', 'ви', 'я', 'ти', 'не', 'ні', 'так', 'же', 'б', 'би', 'його', 'її', 'їх', 'а', 'о', 'є', 'був', 'була', 'було', 'були', 'бути') THEN 1 ELSE 0 END)
-                       / (count(*) * 1.0) AS stopword_ratio
-            FROM toks WHERE token != ''
-            GROUP BY doc_id
-            """,
-        ),
-        (
-            # demoted late-r6: board slot went to txt_lm_score; the
-            # U-1/A-6 union+conditional-agg evidence stays on the board
-            # via kg_mentions' recognizer fusion and txt_quality.  SAME
-            # live SQL oracle it held on the board.
-            em._q_tpch_union_agg,
-            """
-            WITH u AS (
-                SELECT o_orderkey, 'high' AS bucket, o_orderstatus,
-                       o_totalprice
-                FROM orders WHERE o_totalprice > 250000.0
-                UNION ALL
-                SELECT o_orderkey, 'urgent' AS bucket, o_orderstatus,
-                       o_totalprice
-                FROM orders WHERE o_orderpriority = '1-URGENT'
-            )
-            SELECT bucket, o_orderstatus,
-                   count(*) AS n_orders,
-                   round(sum(o_totalprice), 2) AS total_value,
-                   CAST(sum(CASE WHEN o_totalprice > 300000.0
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_jumbo
-            FROM u GROUP BY bucket, o_orderstatus
-            """,
-        ),
-        (
-            # demoted late-r6: board slot went to events_asof_view; the
-            # join+agg+topk decomposition stays board-verified via
-            # tpch_broadcast_join + tpch_agg + tpch_window_topk.  SAME
-            # live SQL oracle it held on the board.
-            em._q_tpch_shipping_priority,
-            """
-            SELECT l_orderkey, o_orderdate, o_orderpriority,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2)
-                       AS revenue
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            WHERE c_mktsegment = 'BUILDING'
-              AND o_orderdate < TIMESTAMP '1995-03-15'
-              AND l_shipdate > TIMESTAMP '1995-03-15'
-            GROUP BY l_orderkey, o_orderdate, o_orderpriority
-            ORDER BY revenue DESC, l_orderkey
-            LIMIT 20
-            """,
-        ),
-        (
-            # pytest-resident coverage row (late r6, never on the
-            # board): TPC-H Q5 snowflake — exercises the otherwise-cold
-            # region/nation/supplier tables through the local-supplier
-            # multi-broadcast star join.
-            em._q_tpch_local_supplier_volume,
-            """
-            SELECT n_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2)
-                       AS revenue
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN supplier ON l_suppkey = s_suppkey
-                         AND c_nationkey = s_nationkey
-            JOIN nation   ON s_nationkey = n_nationkey
-            JOIN region   ON n_regionkey = r_regionkey
-            WHERE r_name = 'ASIA'
-              AND o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate <  TIMESTAMP '1998-01-01'
-            GROUP BY n_name
-            """,
-        ),
-        (
-            # pytest-resident coverage row (late r6): TPC-H Q14 promo
-            # share — exercises the otherwise-cold part table; the pct
-            # divides the two ROUNDED sums so both engines divide
-            # identical doubles.
-            em._q_tpch_promo_share,
-            """
-            WITH s AS (
-                SELECT round(sum(CASE WHEN p_type = 'ECONOMY'
-                                 THEN l_extendedprice * (1 - l_discount)
-                                 ELSE 0.0 END), 2) AS promo_revenue,
-                       round(sum(l_extendedprice * (1 - l_discount)), 2)
-                           AS total_revenue
-                FROM lineitem JOIN part ON l_partkey = p_partkey
-                WHERE l_shipdate >= TIMESTAMP '1996-09-01'
-                  AND l_shipdate <  TIMESTAMP '1996-10-01'
-            )
-            SELECT promo_revenue, total_revenue,
-                   100.0 * promo_revenue / total_revenue AS promo_pct
-            FROM s
-            """,
-        ),
-        (
-            # demoted r7 (VERDICT r6 #3): board slot went to
-            # doc_token_quantiles; J-6 semi/anti evidence also lives in
-            # kg_review_mentions (left-semi) and the dedup-apply plan
-            # gates (left-anti).  SAME live SQL oracle it held on the
-            # board.
-            em._q_tpch_semi_anti_join,
-            """
-            SELECT 'semi' AS leg, c_custkey, c_mktsegment,
-                   CAST(NULL AS DOUBLE) AS c_acctbal
-            FROM customer
-            WHERE c_custkey IN (
-                SELECT o_custkey FROM orders
-                WHERE o_orderpriority = '1-URGENT'
-            )
-            UNION ALL
-            SELECT 'anti', c_custkey, CAST(NULL AS VARCHAR), c_acctbal
-            FROM customer c
-            WHERE NOT EXISTS (
-                SELECT 1 FROM orders o
-                WHERE o.o_custkey = c.c_custkey
-                  AND o.o_orderpriority = '1-URGENT'
-            )
-            """,
-        ),
-        (
-            # demoted late-r6: board slot went to kg_triangles; the
-            # Expand+Aggregate ROLLUP shape keeps this mirror, A-6
-            # conditional aggregation stays board-verified via
-            # txt_quality.  SAME live SQL oracle it held on the board.
-            em._q_tpch_rollup_agg,
-            """
-            SELECT l_returnflag, l_linestatus,
-                   count(*) AS n_items,
-                   round(sum(l_quantity), 2) AS sum_qty
-            FROM lineitem
-            GROUP BY ROLLUP (l_returnflag, l_linestatus)
-            """,
-        ),
-        (
-            # demoted r4: board slot went to doc_pii_scrub; SAME live
-            # SQL oracle it held on the board
-            em._q_txt_unigram_probs,
-            """
-            WITH toks AS (
-                SELECT doc_id,
-                       unnest(regexp_split_to_array(trim(lower(text)),
-                                                    '\\s+')) AS token
-                FROM documents
-            ), toks2 AS (
-                SELECT * FROM toks WHERE token != ''
-            ), counts AS (
-                SELECT token, count(*) AS tok_count FROM toks2 GROUP BY token
-            ), total AS (
-                SELECT sum(tok_count) AS tt FROM counts
-            )
-            SELECT t.doc_id, t.token,
-                   CAST(c.tok_count AS BIGINT) AS tok_count,
-                   c.tok_count / (SELECT tt * 1.0 FROM total) AS p_unigram
-            FROM toks2 t JOIN counts c USING (token)
-            """,
-        ),
     ],
 )
 def test_demoted_query_still_matches_its_oracle(spark, sf01, qfn, sql):
     assert not run_query_pair(spark, sf01, qfn, sql)
-
-
-def test_exact_dedup_matches_live_sql_oracle(spark, sf01):
-    """doc_exact_dedup (demoted r6; board slot went to txt_bpe_counts)
-    keeps the SAME live md5 SQL oracle it held on the board."""
-    assert not run_query_pair(
-        spark, sf01, em._q_doc_exact_dedup,
-        """
-        SELECT md5(text) AS text_md5, count(*) AS n_copies,
-               min(doc_id) AS keeper_id
-        FROM documents GROUP BY md5(text)
-        """,
-    )
 
 
 def test_filter_project_shape_lives_in_window_topk(spark, sf01):
@@ -351,30 +89,20 @@ def test_filter_project_shape_lives_in_window_topk(spark, sf01):
     assert len(row["prio_code"]) == 1
 
 
-def test_neardup_exact_matches_golden(spark, sf01):
-    """doc_neardup_exact (demoted r3 — labeled quadratic baseline) keeps
-    its golden-parquet oracle check."""
-    from uk_ner_presidio_demo_spark.oracle.docs_golden import (
-        ensure_docs_golden,
-    )
-
-    dg = ensure_docs_golden(sf01)
-    got = em._q_doc_neardup_exact(spark, sf01).toPandas()
-    want = __import__("pandas").read_parquet(
-        f"{dg}/golden_neardup_exact.parquet"
-    )
-    assert not compare_frames(got, want)
-
-
 def test_mentions_score_strategy_matches_golden(spark, sf01):
-    """kg_mentions_score_strategy (demoted r4) keeps its golden oracle:
-    W-1 score-strategy resolution vs the score-strategy golden parquet,
-    and it must genuinely DIVERGE from the priority-strategy output
-    (the reason the row existed)."""
+    """The 'score' conflict strategy (the library default,
+    core/analyzer.py:96; `driver.py --strategy score`): W-1 score-strategy
+    resolution vs the score-strategy golden parquet, and it must genuinely
+    DIVERGE from the priority-strategy output."""
     import duckdb
 
+    from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
+    from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
+
     gm_score = em._golden("golden_mentions", strategy="score")
-    got = em._q_mentions_score_strategy(spark, sf01).toPandas()
+    got = kg_chain(
+        read_transcripts(spark, sf01), "mentions", "score"
+    ).withColumn("turn_idx", F.col("turn_idx").cast("long")).toPandas()
     want = duckdb.execute(
         f'SELECT conv_id, turn_idx, mention_idx, entity_type, start, '
         f'"end", score, surface, norm_surface '
@@ -385,34 +113,3 @@ def test_mentions_score_strategy_matches_golden(spark, sf01):
     assert compare_frames(got, prio), (
         "score and priority strategies should diverge somewhere"
     )
-
-
-def test_triple_counts_matches_golden_aggregate(spark, sf01):
-    """kg_triple_counts (demoted r3) still equals the per-predicate
-    aggregate over the golden triples."""
-    import duckdb
-
-    gt = em._golden("golden_triples")
-    got = em._q_triple_counts(spark, sf01).toPandas()
-    want = duckdb.execute(
-        f"SELECT pred, count(*) AS n_triples "
-        f"FROM read_parquet('{gt}') GROUP BY pred"
-    ).fetchdf()
-    assert not compare_frames(got, want)
-
-
-def test_ann_ivf_kmeans_matches_golden(spark, sf01):
-    """ann_ivf_kmeans_topk (demoted r5; board slot went to the
-    deployment-shaped ann_ivfpq_query_path) keeps its exact
-    golden-parquet oracle: trained-kmeans IVF top-k vs the single-process
-    twin golden."""
-    from uk_ner_presidio_demo_spark.oracle.docs_golden import (
-        ensure_docs_golden,
-    )
-
-    dg = ensure_docs_golden(sf01)
-    got = em._q_ann_ivf_kmeans_topk(spark, sf01).toPandas()
-    want = __import__("pandas").read_parquet(
-        f"{dg}/golden_ann_ivf_kmeans_topk.parquet"
-    )
-    assert not compare_frames(got, want)

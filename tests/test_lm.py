@@ -171,122 +171,6 @@ def test_ilog_lookup_is_bounded(spark, sf001):
         assert v == ilog_fp(k)
 
 
-def test_model_top_matches_twin_prune(spark, sf001):
-    """lm_model_top's (c2 desc, w1, w2) TakeOrdered selects exactly the
-    twin prune_model slice, including the tie boundary."""
-    from uk_ner_presidio_demo_spark.operators.lm import lm_model_top
-    from uk_ner_presidio_demo_spark.semantics.lm import prune_model
-
-    docs = spark.read.parquet(f"{sf001}/documents.parquet")
-    model_df = lm_bigram_model(docs)
-    texts = dict(
-        pd.read_parquet(f"{sf001}/documents.parquet")[
-            ["doc_id", "text"]
-        ].values
-    )
-    tmodel = {}
-    for t in texts.values():
-        for bg in doc_bigrams(t):
-            tmodel[bg] = tmodel.get(bg, 0) + 1
-    for m in (1, 50, 500):
-        rows = lm_model_top(model_df, m)
-        assert len(rows) == min(m, len(tmodel))
-        want = prune_model(tmodel, m)
-        assert {(w1, w2) for w1, w2, _ in rows} == set(want)
-        # and lp values are the model's, not recomputed
-        c1 = {}
-        for (w1, _), c in tmodel.items():
-            c1[w1] = c1.get(w1, 0) + c
-        for w1, w2, lp in rows[:20]:
-            assert lp == ilog_fp(tmodel[(w1, w2)]) - ilog_fp(c1[w1])
-
-
-def test_streaming_lm_filter_matches_twin(spark, sf001, tmp_path):
-    """The ingest gate: stream target docs through streaming_lm_filter
-    with a bounded model trained on a reference corpus; survivors must
-    be exactly the FROZEN-LP twin's keep set under the same pruned key
-    set, with row contents untouched (schema-preserving filter).
-
-    m is chosen to GENUINELY prune (asserted below) — and the test also
-    pins the estimator choice: scoring pruned COUNTS through lm_scores
-    renormalizes c1 and must NOT equal the gate (prune_model's
-    caution)."""
-    from uk_ner_presidio_demo_spark.operators.lm import lm_model_top
-    from uk_ner_presidio_demo_spark.semantics.lm import (
-        frozen_lp_model, lm_scores, lm_scores_frozen, prune_model,
-    )
-    from uk_ner_presidio_demo_spark.streaming.corpus_stream import (
-        streaming_lm_filter,
-    )
-
-    full = pd.read_parquet(f"{sf001}/documents.parquet")[
-        ["doc_id", "text"]
-    ]
-    ref = full[full.doc_id % 2 == 0]   # reference corpus trains the model
-    target = full[full.doc_id % 2 == 1]
-
-    model_df = lm_bigram_model(
-        spark.createDataFrame(ref, "doc_id long, text string")
-    )
-    m = 800  # must cut through w1 continuation sets (asserted below)
-    rows = lm_model_top(model_df, m)
-
-    src = tmp_path / "src"
-    src.mkdir()
-    for k in range(3):
-        part = target[target.doc_id % 3 == k].copy()
-        part["text"] = part["text"].astype("string")
-        part.to_parquet(src / f"part-{k}.parquet", index=False)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        streaming_lm_filter(stream, rows)
-        .writeStream.format("memory")
-        .queryName("lm_gate")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM lm_gate").toPandas()
-
-    texts = dict(target.values)
-    tmodel = {}
-    for t in pd.Series(list(dict(ref.values).values())):
-        for bg in doc_bigrams(t):
-            tmodel[bg] = tmodel.get(bg, 0) + 1
-    assert len(tmodel) > m  # pruning must be REAL, not vacuous
-    pruned = prune_model(tmodel, m)
-    lp_frozen = frozen_lp_model(tmodel, pruned.keys())
-    # the gate's rows carry exactly the frozen-lp slice
-    assert {(w1, w2): lp for w1, w2, lp in rows} == lp_frozen
-    want_keep = {
-        d for d, _n, _lp, k in lm_scores_frozen(texts, lp_frozen) if k
-    }
-    assert set(got["doc_id"]) == want_keep
-    assert 0 < len(want_keep) < len(target)  # both branches live
-    # estimator pin: renormalized-c1 scoring (pruned COUNTS through
-    # lm_scores) is a DIFFERENT model and must not silently replace the
-    # frozen-lp gate — at this m the two disagree on lp sums
-    renorm = {d: lp for d, _n, lp, _k in lm_scores(texts, pruned)}
-    frozen = {d: lp for d, _n, lp, _k in lm_scores_frozen(texts, lp_frozen)}
-    assert renorm != frozen
-    # schema-preserving: surviving rows byte-equal the input rows
-    merged = got.sort_values("doc_id").reset_index(drop=True)
-    src_rows = (
-        target[target.doc_id.isin(want_keep)]
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        merged[["doc_id", "text"]], src_rows[["doc_id", "text"]]
-    )
-
-
 def test_pipeline_lm_filter_stage(spark, sf001, tmp_path):
     """CorpusPipeline(lm_filter=True): the stage lands between clean and
     split, keeps exactly the twin's keep set over the CLEANED corpus,

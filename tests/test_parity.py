@@ -122,8 +122,8 @@ def test_triples_parity_on_tool_edge_rows(spark):
     and the window predicates from the mentions alone.  On the tool rows
     the fixtures lack it must still equal the oracle's triples: None, ''
     and NaN tools, a tool on a turn with no mentions and on one with
-    invalid text, a turn listed twice with two tools, and a row repeated
-    whole."""
+    invalid text, a turn listed twice with two tools, a turn listed twice
+    with a null and an empty tool, and a row repeated whole."""
     from uk_ner_presidio_demo_spark.operators.triples import emit_triples
     from uk_ner_presidio_demo_spark.oracle.reference_oracle import run_oracle
     from uk_ner_presidio_demo_spark.plans.pipeline import kg_chain
@@ -142,6 +142,8 @@ def test_triples_parity_on_tool_edge_rows(spark):
         ("a", 5, None, "email_client"),
         ("b", 0, None, "db_query"),
         ("b", 1, "Тарас Шевченко читає Кобзар.", ""),
+        ("c", 0, contact, None),
+        ("c", 0, contact, ""),
     ]
     pdf = pd.DataFrame(
         [(c, t, "user", x, tool, pd.Timestamp("2024-03-01"))

@@ -376,19 +376,6 @@ def test_triangles_and_asof_plan_hygiene(spark, sf01):
     assert asof.count("MapInPandas") == 0
 
 
-def test_q5_star_join_all_dims_broadcast(spark, sf01):
-    """The Q5 snowflake coverage row: every dimension side must reach
-    the plan as a broadcast hash join (the fact scan never shuffles for
-    a dim join — the star-join shape the 100-TB warehouse needs), with
-    no cartesian/NLJ anywhere."""
-    plan = _plan(em._q_tpch_local_supplier_volume(spark, sf01))
-    # customer, supplier, nation⋈region: three explicit broadcasts
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_span_excision_plan_hygiene(spark, sf01):
     """Exact-boundary excision (r5): the chunk kernel is cut behind its
     localCheckpoint, leaving exactly TWO Python stages in the final plan

@@ -406,14 +406,13 @@ class TestTriplesWindowEquivalence:
 @st.composite
 def _turn_rows(draw):
     """One conversation as transcript rows (turn_idx, tool), where a turn
-    may be listed twice with two string tools, and its mentions, which sit
-    only on listed turns (emit_triples' precondition); a listed turn may
-    have a tool and no mentions.  (A turn listed with a null and a string
-    tool is left out: the reference kernel cannot sort those rows.)"""
+    may be listed twice with any two tools (a null beside a string
+    included), and its mentions, which sit only on listed turns
+    (emit_triples' precondition); a listed turn may have a tool and no
+    mentions."""
     from uk_ner_presidio_demo_spark.semantics.detect import Mention
 
-    twice = st.lists(st.sampled_from(["", "search", "mail"]),
-                     min_size=2, max_size=2)
+    twice = st.lists(_tool, min_size=2, max_size=2)
     listed = draw(st.lists(_turn_idx, unique=True, max_size=8))
     turns = [(t, tool) for t in listed
              for tool in draw(st.one_of(_tool.map(lambda x: [x]), twice))]

@@ -3,10 +3,9 @@ reproducible by the single-process twin (semantics.sparkhash) and
 invariant to physical partitioning."""
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from uk_ner_presidio_demo_spark.operators.sampling import (
-    GRANULARITY, hash_sample, stratified_sample, train_eval_split,
+    GRANULARITY, hash_sample, train_eval_split,
 )
 from uk_ner_presidio_demo_spark.semantics.sparkhash import (
     pmod, xxhash64_long,
@@ -47,25 +46,3 @@ def test_sampling_is_partitioning_invariant(spark, sf01):
     b = {r["doc_id"] for r in
          hash_sample(docs.repartition(7), 0.3).select("doc_id").collect()}
     assert a == b
-
-
-def test_stratified_sample_matches_twin_and_broadcasts(spark, sf01):
-    docs = read_tpch(spark, sf01, "documents").withColumn(
-        "domain",
-        F.when(F.col("doc_id") % 3 == 0, "web").otherwise("books"),
-    )
-    fractions = {"web": 0.25, "books": 1.0}
-    df = stratified_sample(docs, fractions, "domain")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    got = {r["doc_id"] for r in df.select("doc_id").collect()}
-    want = set()
-    for d in _ids(sf01):
-        frac = fractions["web" if d % 3 == 0 else "books"]
-        if _u(d) < int(frac * GRANULARITY):
-            want.add(d)
-    assert got == want
-    # absent stratum drops: empty fractions for 'web' removes all web docs
-    only_books = stratified_sample(docs, {"books": 1.0}, "domain")
-    ob = {r["doc_id"] for r in only_books.select("doc_id").collect()}
-    assert ob == {d for d in _ids(sf01) if d % 3 != 0}

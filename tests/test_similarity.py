@@ -1,14 +1,12 @@
-"""Embedding near-dup: the shipped LSH-blocked path vs its golden, the
-quadratic baseline vs the all-pairs golden, and the containment property
-linking the two (blocked results are exactly the all-pairs results whose
-pair collided in >=1 LSH table)."""
+"""Embedding near-dup: the shipped LSH-blocked path vs its golden, and
+the containment property linking the blocked golden to the all-pairs
+golden (blocked results are exactly the all-pairs results whose pair
+collided in >=1 LSH table)."""
 
 import pandas as pd
 
 from tests.harness import compare_frames
-from uk_ner_presidio_demo_spark.operators.similarity import (
-    emb_neardup, emb_neardup_lsh,
-)
+from uk_ner_presidio_demo_spark.operators.similarity import emb_neardup_lsh
 from uk_ner_presidio_demo_spark.oracle.docs_golden import ensure_docs_golden
 
 
@@ -23,14 +21,6 @@ def test_emb_neardup_lsh_matches_golden(spark, sf01):
     got = emb_neardup_lsh(_read_emb(spark, sf01)).toPandas()
     assert not compare_frames(got, golden)
     assert len(got) > 0  # non-degenerate: blocking finds planted pairs
-
-
-def test_emb_neardup_quadratic_matches_allpairs_golden(spark, sf01):
-    golden = pd.read_parquet(
-        ensure_docs_golden(sf01) / "golden_emb_neardup_allpairs.parquet"
-    )
-    got = emb_neardup(_read_emb(spark, sf01)).toPandas()
-    assert not compare_frames(got, golden)
 
 
 def test_lsh_results_are_subset_of_allpairs(spark, sf01):

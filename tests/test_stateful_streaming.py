@@ -1,70 +1,10 @@
-"""Custom stateful streaming operator (applyInPandasWithState): running
-per-conversation counters across micro-batches; the LAST update per conv
-must equal the batch ground truth."""
+"""Custom stateful streaming operator (applyInPandasWithState): the
+incremental exact-dedup keeper across micro-batches must equal the batch
+ground truth, and its state TTL must readmit an expired key."""
 
-import pytest
-
-from uk_ner_presidio_demo_spark.data.synth import ensure_transcripts
 from uk_ner_presidio_demo_spark.streaming.detect_stream import (
-    conversation_state_stream, detect_mentions_stream,
-    read_transcripts_stream, run_available_now,
+    run_available_now,
 )
-
-
-def test_stateful_conv_counters_match_batch(spark, sf001, tmp_path):
-    # Re-split the transcripts by turn parity so every conversation SPANS
-    # micro-batches (the synth layout buckets whole convs per file, which
-    # would let each conv finish within one batch and never exercise state).
-    import pandas as pd
-
-    src_dir = ensure_transcripts(sf001)
-    full = pd.concat(
-        [pd.read_parquet(p) for p in sorted(src_dir.glob("part-*.parquet"))]
-    )
-    split_dir = tmp_path / "src"
-    split_dir.mkdir()
-    for k in range(3):
-        full[full["turn_idx"] % 3 == k].to_parquet(
-            split_dir / f"part-{k}.parquet", index=False
-        )
-    path = str(split_dir)
-    stream = read_transcripts_stream(spark, path, max_files_per_trigger=1)
-    counters = conversation_state_stream(detect_mentions_stream(stream))
-    got = run_available_now(
-        counters, "conv_state", str(tmp_path / "ck"), "update"
-    ).toPandas()
-
-    # multiple micro-batches emit successive updates; the final (max)
-    # running total per conv is the converged value
-    final = got.groupby("conv_id")[["total_mentions", "n_person"]].max()
-
-    from uk_ner_presidio_demo_spark.operators.detect import (
-        detect_turns, mentions_from_turns,
-    )
-    from uk_ner_presidio_demo_spark.sources.tables import read_transcripts
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    batch = (
-        mentions_from_turns(
-            detect_turns(read_transcripts(spark, sf001),
-                         with_anonymized=False)
-        )
-        .groupBy("conv_id")
-        .agg(
-            F.count("*").alias("total_mentions"),
-            F.sum(F.when(F.col("entity_type") == "PERS", 1).otherwise(0))
-            .alias("n_person"),
-        )
-        .toPandas()
-        .set_index("conv_id")[["total_mentions", "n_person"]]
-    )
-    merged = final.join(batch, how="outer", lsuffix="_s", rsuffix="_b")
-    assert merged.notna().all().all()
-    assert (merged["total_mentions_s"] == merged["total_mentions_b"]).all()
-    assert (merged["n_person_s"] == merged["n_person_b"]).all()
-    # state really spanned micro-batches: some conv got >1 update row
-    assert (got.groupby("conv_id").size() > 1).any()
 
 
 def test_streaming_exact_dedup_matches_batch(spark, tmp_path):

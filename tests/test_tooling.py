@@ -135,6 +135,29 @@ def test_headline_count_single_source_of_truth():
     assert int(m.group(1)) == len(HEADLINE)
 
 
+def test_every_query_callable_is_on_the_board_or_timed():
+    """A `_q_*` callable in __spark_entry__.py is either a queries() row
+    or named by bench.py / scripts/ (which still time it).  A query that
+    leaves the board is deleted with its test mirror otherwise."""
+    import ast
+    import re
+
+    sys.path.insert(0, str(REPO))
+    import __spark_entry__ as em
+
+    tree = ast.parse((REPO / "__spark_entry__.py").read_text())
+    defined = {n.name for n in tree.body
+               if isinstance(n, ast.FunctionDef) and n.name.startswith("_q_")}
+    on_board = {fn.__name__ for fn in em.queries().values()}
+    timed = set()
+    for path in [REPO / "bench.py", *sorted((REPO / "scripts").glob("*.py"))]:
+        timed |= set(re.findall(r"\b_q_\w+", path.read_text()))
+    assert not defined - on_board - timed, (
+        f"off-board query callables nothing times: "
+        f"{sorted(defined - on_board - timed)}"
+    )
+
+
 def test_errors_on_empty_query_dict(tmp_path):
     a = tmp_path / "a.json"
     b = tmp_path / "b.json"

@@ -81,8 +81,8 @@ def bpe_token_counts(docs: DataFrame,
                      merges: list[tuple[str, str]]) -> DataFrame:
     """(doc_id, n_ws_tokens, n_bpe_tokens): trained-tokenizer token
     accounting per document — the budget number packing and billing
-    actually need (the regex `token_count_bpe` remains the untrained
-    approximation).  One Arrow crossing; the merge list rides in the
+    actually need (text_profile's regex `n_bpe_tokens` remains the
+    untrained approximation).  One Arrow crossing; the merge list rides in the
     closure (a few KB); per-batch word cache amortizes repeated words."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

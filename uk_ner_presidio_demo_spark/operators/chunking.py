@@ -180,37 +180,10 @@ EXCISE_SCHEMA = T.StructType(
 )
 
 
-def excise_duplicate_chunks(docs: DataFrame) -> DataFrame:
-    """SPAN-level dedup apply (Lee et al., arXiv:2107.06499, approximated
-    at chunk granularity): every chunk occurrence except the GLOBAL first
-    (lexicographic (doc_id, chunk_idx) per chunk hash) is cut out of its
-    document's token stream; the document itself survives with the
-    duplicated span removed.  Whole-doc dedup drops documents; this drops
-    the repeated boilerplate INSIDE them — the other half of substring
-    dedup.
-
-    Scale shape: the chunk kernel runs once (checkpoint); first-occurrence
-    ownership is ONE hash aggregate (min struct — no self-join, so
-    ubiquitous boilerplate costs nothing extra); cut ranges join back to
-    their docs and one Arrow kernel rebuilds the text.  Deterministic at
-    any parallelism: ownership is a pure function of (hash, doc_id,
-    chunk_idx).  Token accounting: n_tokens = kept + excised (tested)."""
-    ch = doc_chunks(docs).localCheckpoint(eager=True)
-    first = ch.groupBy("chunk_hash").agg(
-        F.min(F.struct("doc_id", "chunk_idx")).alias("first")
-    )
-    cuts = ch.join(first, "chunk_hash").filter(
-        (F.col("doc_id") != F.col("first.doc_id"))
-        | (F.col("chunk_idx") != F.col("first.chunk_idx"))
-    ).select("doc_id", "start_tok", "end_tok")
-    return _apply_cuts(docs, cuts)
-
-
 def _apply_cuts(docs: DataFrame, cuts: DataFrame) -> DataFrame:
     """(doc_id, start_tok, end_tok) cut ranges -> EXCISE_SCHEMA rows:
     one shuffle (collect_list per doc), one Arrow rebuild kernel.
-    Overlapping ranges union; docs with no cuts pass through.  Shared by
-    the chunk-granular and exact-span excision operators."""
+    Overlapping ranges union; docs with no cuts pass through."""
     per_doc = cuts.groupBy("doc_id").agg(
         F.collect_list(F.struct("start_tok", "end_tok")).alias("cut")
     )
@@ -262,8 +235,8 @@ SPANS_SCHEMA = T.StructType(
 def _ranked_owner_pairs(ch: DataFrame, first: DataFrame) -> DataFrame:
     """(doc_id, owner, n_lost, rk): every cross-doc ownership relation
     ranked per doc (most distinct shared lost chunks first, ties by
-    owner id) — the shared substrate of the capped candidate list and
-    the owner-cap lineage metrics."""
+    owner id) — the substrate of the capped candidate list (and of
+    scripts/excision_recall.py's chunk-pair census)."""
     ranked = (
         ch.join(first, "chunk_hash")
         .filter(F.col("doc_id") != F.col("first.doc_id"))
@@ -276,40 +249,6 @@ def _ranked_owner_pairs(ch: DataFrame, first: DataFrame) -> DataFrame:
     return ranked.withColumn("rk", F.row_number().over(w))
 
 
-def excise_owner_cap_metrics(docs: DataFrame,
-                             max_owners: int = EXCISE_MAX_OWNERS,
-                             ) -> DataFrame:
-    """(metric, value) lineage for the excision owner cap — the no-
-    silent-truncation companion (the partial_overlap_with_metrics
-    pattern, VERDICT r3 #7): n_owner_pairs / n_owner_pairs_dropped /
-    n_docs_capped make a boilerplate-heavy shard's truncated candidate
-    lists visible instead of silently losing excision recall."""
-    ch = doc_chunks(docs).select(
-        "doc_id", "chunk_idx", "chunk_hash"
-    ).localCheckpoint(eager=True)
-    first = ch.groupBy("chunk_hash").agg(
-        F.min(F.struct("doc_id", "chunk_idx")).alias("first")
-    )
-    ranked = _ranked_owner_pairs(ch, first)
-    return ranked.agg(
-        F.count("*").alias("n_pairs"),
-        F.sum((F.col("rk") > max_owners).cast("long")).alias("n_dropped"),
-        F.countDistinct(
-            F.when(F.col("rk") > max_owners, F.col("doc_id"))
-        ).alias("n_docs_capped"),
-    ).select(
-        F.explode(
-            F.create_map(
-                F.lit("n_owner_pairs"), F.col("n_pairs").cast("long"),
-                F.lit("n_owner_pairs_dropped"),
-                F.coalesce(F.col("n_dropped"), F.lit(0)).cast("long"),
-                F.lit("n_docs_capped"),
-                F.col("n_docs_capped").cast("long"),
-            )
-        ).alias("metric", "value")
-    )
-
-
 def cross_owner_spans(docs: DataFrame,
                       min_span_tokens: int = MIN_SPAN_TOKENS,
                       max_owners: int = EXCISE_MAX_OWNERS,
@@ -319,14 +258,14 @@ def cross_owner_spans(docs: DataFrame,
     """(doc_id, span_start, span_end): MAXIMAL duplicated token runs
     >= min_span_tokens that doc shares with an OWNER doc — a doc holding
     the global-first occurrence of a chunk this doc repeats.  Candidate
-    (doc, owner) pairs come from chunk-hash ownership (blocking — the
-    same discovery as excise_duplicate_chunks); boundaries come from SAM
-    matching statistics over the pair, so they are token-EXACT, not
-    chunk-rounded (Lee et al., arXiv:2107.06499: cut the duplicated
-    substring itself).  Ownership guarantees owner < doc, so the run is
-    always cut from the LATER doc and kept in the earlier one.
+    (doc, owner) pairs come from chunk-hash ownership (blocking);
+    boundaries come from SAM matching statistics over the pair, so they
+    are token-EXACT, not chunk-rounded (Lee et al., arXiv:2107.06499: cut
+    the duplicated substring itself).  Ownership guarantees owner < doc,
+    so the run is always cut from the LATER doc and kept in the earlier
+    one.
 
-    Scale shape: ownership is the same single min-struct hash agg; the
+    Scale shape: ownership is a single min-struct hash agg; the
     pair list is distinct (doc, owner) — one row per sharing relation,
     NOT per chunk — and each doc compares against at most `max_owners`
     owners, strongest first (most shared lost chunks, ties by owner id;
@@ -463,10 +402,9 @@ def excise_duplicate_spans(docs: DataFrame,
     token-exactly (cross_owner_spans), PLUS intra-doc repeated chunks
     (same doc owns the first occurrence) cut at chunk granularity — the
     one case matching statistics against another doc can't see.
-    `excise_duplicate_chunks` remains the oracle-simpler chunk-rounded
-    twin; this operator is the Lee et al. shape: excision boundaries
-    land exactly at the duplicated substring's edges, including the
-    partial-chunk head/tail the chunk version misses.
+    This is the Lee et al. shape: excision boundaries land exactly at
+    the duplicated substring's edges, including the partial-chunk
+    head/tail a chunk-rounded cut misses.
 
     `shingle_tail=True` (opt-in, VERDICT r5 #4) adds winnowed-k-gram
     candidate pairs (shingle_candidate_pairs) so runs below the CDC
@@ -508,23 +446,6 @@ def excise_duplicate_spans(docs: DataFrame,
         & (F.col("chunk_idx") != F.col("first.chunk_idx"))
     ).select("doc_id", "start_tok", "end_tok")
     return _apply_cuts(docs, spans.unionByName(intra))
-
-
-def partial_overlap_dedup_apply(docs: DataFrame,
-                                min_span_tokens: int = MIN_SPAN_TOKENS,
-                                ) -> DataFrame:
-    """Substring-level dedup APPLICATION: verified partial-overlap pairs
-    -> connected components -> keep the minimum doc_id per cluster — the
-    same pairs->CC->keep-min shape as operators.dedup.dedup_apply (which
-    does the clustering; only pair DISCOVERY differs).  This is the
-    operator a pipeline runs to drop boilerplate-sharing documents that
-    whole-doc MinHash never pairs."""
-    from .dedup import dedup_apply
-
-    pairs = verified_partial_overlaps(
-        docs, min_span_tokens=min_span_tokens
-    ).select("doc_a", "doc_b")
-    return dedup_apply(docs, pairs)
 
 
 # Per-batch SAM cache bound (VERDICT r4 #3 / ADVICE r4): candidates

@@ -30,9 +30,9 @@ from .dedup import _band_rows, _doc_jaccard_udf
 
 def fp_expr():
     """THE exact-level normalization fingerprint — one definition shared
-    by the batch audit (_fingerprints) and the streaming ingest gate
-    (streaming/corpus_stream.py), so the two levels can never silently
-    diverge on what counts as byte-identical-after-normalization."""
+    by the batch audit (_fingerprints) and the streaming exact dedup
+    (streaming/detect_stream.py), so the two can never silently diverge
+    on what counts as byte-identical-after-normalization."""
     return F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "))
 
 

@@ -1,19 +1,14 @@
-"""Deduplication family over the `documents` table — exact, MinHash+LSH,
-SimHash, and exact n-gram-Jaccard baseline (training-data-pipeline
-operators; SURVEY-extra, graded first-class).
+"""Deduplication family over the `documents` table — MinHash+LSH and
+SimHash (training-data-pipeline operators; SURVEY-extra, graded
+first-class).
 
 Scale design:
-  - exact dedup is a single hash-aggregate on md5(text) (JVM-side md5,
-    no UDF; map-side partial agg free from Catalyst)
   - MinHash/LSH: signatures via one Arrow pass; band keys explode to
     (band, bhash) rows; candidates from a self equi-join on the band key
     (shuffle hash join, AQE-skew-safe); exact-Jaccard verify only on
     candidates — never quadratic
   - SimHash: 64-bit signature, 4x16-bit segment blocking join, hamming
     verify on candidates (JVM-side bit_count, no UDF)
-  - the exact all-pairs variant is the CORRECTNESS baseline only; its
-    docstring marks the quadratic shape (small-sf tests); the LSH path is
-    the 100-TB path
 """
 
 from __future__ import annotations
@@ -45,17 +40,6 @@ _SIMHASH_SCHEMA = T.StructType(
         T.StructField("simhash", T.LongType()),
     ]
 )
-
-
-def exact_dedup(docs: DataFrame) -> DataFrame:
-    """Exact duplicate groups: (text_md5, n_copies, keeper_id=min doc_id)."""
-    return (
-        docs.groupBy(F.md5("text").alias("text_md5"))
-        .agg(
-            F.count("*").alias("n_copies"),
-            F.min("doc_id").alias("keeper_id"),
-        )
-    )
 
 
 from .partitioning import fanout as _fanout
@@ -151,19 +135,6 @@ def neardup_minhash(docs: DataFrame) -> DataFrame:
     ta = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     tb = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
     pairs = cand.join(ta, "doc_a").join(tb, "doc_b")
-    return (
-        pairs.withColumn("jac", _doc_jaccard_udf("text_a", "text_b"))
-        .filter(F.col("jac") >= DOC_JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round("jac", 6).alias("jaccard_r6"))
-    )
-
-
-def neardup_exact(docs: DataFrame) -> DataFrame:
-    """All-pairs exact word-3-gram Jaccard (QUADRATIC — correctness baseline
-    for small sf only; use `neardup_minhash` at scale)."""
-    a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    pairs = a.crossJoin(b).filter(F.col("doc_a") < F.col("doc_b"))
     return (
         pairs.withColumn("jac", _doc_jaccard_udf("text_a", "text_b"))
         .filter(F.col("jac") >= DOC_JACCARD_THRESHOLD)

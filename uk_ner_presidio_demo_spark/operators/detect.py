@@ -67,19 +67,16 @@ def _detected_schema(with_anonymized: bool) -> T.StructType:
 
 
 def detect_turns(transcripts: DataFrame, strategy: str = "priority",
-                 with_anonymized: bool = True,
-                 ner_enabled: frozenset[str] | None = None,
-                 pattern_enabled: frozenset[str] | None = None) -> DataFrame:
+                 with_anonymized: bool = True) -> DataFrame:
     """transcripts (conv_id, turn_idx, role, text, tool, ts) -> detected
     turns.  Only (conv_id, turn_idx, text, tool) cross the Arrow boundary —
     `role`/`ts` are pruned.  Invalid rows (O-5) are filtered Catalyst-side
     before the boundary; the kernel re-checks the exact Python predicate
     for belt-and-braces parity with the oracle.  Set
     ``with_anonymized=False`` when only mentions are consumed — it skips
-    the splice and shrinks the return payload.  ``ner_enabled`` /
-    ``pattern_enabled`` restrict the detected entity-type sets (O-6 —
-    the enabled-set plumbing of core/config.py:64-90); the frozensets ride
-    to executors in the serialized kernel closure (a broadcast)."""
+    the splice and shrinks the return payload.  Every recognizer runs;
+    the O-6 enabled-set restriction lives on the scalar path
+    (api.analyze)."""
     schema = _detected_schema(with_anonymized)
     cols = [f.name for f in schema.fields]
 
@@ -97,10 +94,7 @@ def detect_turns(transcripts: DataFrame, strategy: str = "priority",
             # Arrow batch (detect_mentions_batch) — measured ~1.6x the
             # per-row form; outputs are identical (property-tested).
             detected = detect_mentions_batch(
-                [t for _, _, t, _ in valid],
-                strategy=strategy,
-                ner_enabled=ner_enabled,
-                pattern_enabled=pattern_enabled,
+                [t for _, _, t, _ in valid], strategy=strategy
             )
             for (conv_id, turn_idx, text, tool), (mentions, errors) in zip(
                 valid, detected

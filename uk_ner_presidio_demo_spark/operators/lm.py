@@ -106,30 +106,8 @@ def lm_bigram_model(docs: DataFrame) -> DataFrame:
             "w1",
             "w2",
             (F.col("_il2") - F.col("_il1")).alias("lp_fp"),
-            # kept for model pruning (lm_model_top); unused columns are
-            # pruned by Catalyst in scoring plans, so carrying it is free
-            F.col("_c2").alias("c2"),
         )
     )
-
-
-def lm_model_top(model: DataFrame, max_bigrams: int) -> list[tuple]:
-    """Bounded driver collect of the most frequent model slice for
-    broadcast/closure scoring (the streaming ingest gate): the top
-    `max_bigrams` rows by (c2 desc, w1, w2) — a TakeOrdered, so driver
-    traffic is O(max_bigrams) at ANY corpus size (the ANN_Q pattern).
-    Returns [(w1, w2, lp_fp)].
-
-    Dropping rows composes with the external-model semantics (module
-    docstring): out-of-model bigrams leave both the sum and the count
-    on every side, so a pruned model is just a smaller external model —
-    twin: semantics.lm.prune_model, same (count desc, w1, w2) order."""
-    return [
-        (r.w1, r.w2, int(r.lp_fp))
-        for r in model.orderBy(
-            F.desc("c2"), "w1", "w2"
-        ).limit(int(max_bigrams)).collect()
-    ]
 
 
 def lm_score_two_legs(docs: DataFrame, ref_mod: int) -> DataFrame:

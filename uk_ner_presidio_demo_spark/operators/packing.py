@@ -11,7 +11,7 @@ the packing groups, so the output is identical on 1 core or 1000 executors
 Scale shape: one shuffle on the bucket key, one applyInPandas pass whose
 state is a single running counter per group; pack ids are
 "<bucket>:<seq>" so they're globally unique without coordination.  Token
-counts are the whitespace tokenizer (textstats.token_count semantics) —
+counts are the whitespace tokenizer (textstats.text_profile's n_tokens) —
 swap in the BPE-ish counter by passing `bpe=True`.
 
 Oversized docs (n_tokens > budget) become single-doc packs flagged

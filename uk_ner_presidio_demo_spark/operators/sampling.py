@@ -10,9 +10,7 @@ never on partition layout, row order, or RNG state.
 reproduce every sampling decision exactly — tests/test_sampling.py.
 
 Scale shape: scan-local Catalyst filter (hash + compare inside whole-stage
-codegen), zero shuffles, prunes at the source.  Stratified sampling
-broadcasts the (stratum -> fraction) table: still no shuffle of the corpus
-side.
+codegen), zero shuffles, prunes at the source.
 """
 
 from __future__ import annotations
@@ -43,22 +41,4 @@ def train_eval_split(docs: DataFrame, eval_fraction: float,
     return docs.withColumn(
         "split",
         F.when(_bucket(key) < cut, F.lit("eval")).otherwise(F.lit("train")),
-    )
-
-
-def stratified_sample(docs: DataFrame, fractions: dict[str, float],
-                      stratum_col: str,
-                      key: str = "doc_id") -> DataFrame:
-    """Per-stratum deterministic sampling (the domain-mixing step: e.g.
-    keep 10% of web, 100% of books).  The fraction table is broadcast;
-    strata absent from `fractions` are dropped (fraction 0.0)."""
-    spark = docs.sparkSession
-    frac = spark.createDataFrame(
-        [(k, int(v * GRANULARITY)) for k, v in sorted(fractions.items())],
-        f"{stratum_col} string, _cut long",
-    )
-    return (
-        docs.join(F.broadcast(frac), stratum_col)
-        .filter(_bucket(key) < F.col("_cut"))
-        .drop("_cut")
     )

@@ -1,6 +1,6 @@
 """Similarity search over the `embeddings` table: brute-force cosine top-k
 (baseline) and random-hyperplane-LSH-bucketed top-k (scale path), plus
-all-pairs near-dup.
+LSH-blocked near-dup.
 
 Kernel design: cosine is ONE float64 BLAS matmul per Arrow batch
 (`semantics.docsim.cosine_matrix`, shared verbatim with the oracle, so
@@ -13,9 +13,7 @@ inside the UDF closure (a broadcast); candidates stream through in Arrow
 batches; each batch emits only its LOCAL top-k per query (map-side combine
 for top-k), and a final window takes the global top-k over
 n_batches x nq x k rows.  The LSH variant prunes candidates to the query's
-hyperplane bucket before scoring.  The all-pairs near-dup keeps the full
-(small) vector matrix in the closure — at real scale you LSH-block first;
-the quadratic form is the correctness baseline.
+hyperplane bucket before scoring.
 """
 
 from __future__ import annotations
@@ -419,16 +417,6 @@ def kmeans_centroids_distributed(emb: DataFrame,
     return cent
 
 
-def ann_topk_ivf_kmeans(emb: DataFrame, k: int = ANN_K,
-                        nprobe: int = IVF_NPROBE) -> DataFrame:
-    """IVF top-k over a TRAINED coarse quantizer: distributed deterministic
-    k-means centroids (above) replace the seeded stand-in; assignment and
-    probing reuse the shared ivf_cell/ivf_probe_cells with explicit
-    centroids."""
-    cent = kmeans_centroids_distributed(emb)
-    return ann_topk_ivf(emb, k=k, nprobe=nprobe, centroids=cent)
-
-
 def ann_topk_ivf(emb: DataFrame, k: int = ANN_K,
                  nprobe: int = IVF_NPROBE,
                  centroids: "np.ndarray | None" = None,
@@ -576,41 +564,6 @@ def emb_neardup_lsh(emb: DataFrame,
     verified = pairs.mapInPandas(verify, "vec_a long, vec_b long, cos double")
     return verified.select("vec_a", "vec_b",
                            F.round("cos", 6).alias("cos_r6"))
-
-
-def emb_neardup(emb: DataFrame, threshold: float = EMB_NEARDUP_COS) -> DataFrame:
-    """All-pairs cosine >= threshold (QUADRATIC correctness baseline kept as
-    a pytest fixture; the production path is `emb_neardup_lsh`).  The full
-    vector matrix rides in the UDF closure; each Arrow batch scores its rows
-    against all vectors with one matmul and emits (a < b) qualifying pairs."""
-    rows = emb.select("vec_id", "embedding").collect()
-    rows.sort(key=lambda r: r.vec_id)
-    all_ids = np.array([int(r.vec_id) for r in rows])
-    all_mat = np.array([[float(x) for x in r.embedding] for r in rows],
-                       dtype=np.float64)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf["vec_id"].to_numpy()
-            cmat = _emb_matrix(pdf["embedding"])
-            sims = cosine_matrix(all_mat, cmat)  # (batch, n_all)
-            out = []
-            for bi in range(sims.shape[0]):
-                hits = np.nonzero(
-                    (sims[bi] >= threshold) & (all_ids > cids[bi])
-                )[0]
-                for j in hits:
-                    out.append((int(cids[bi]), int(all_ids[j]),
-                                float(sims[bi, j])))
-            yield pd.DataFrame(out, columns=["vec_a", "vec_b", "cos"])
-
-    pairs = emb.select("vec_id", "embedding").mapInPandas(
-        kernel,
-        "vec_a long, vec_b long, cos double",
-    )
-    return pairs.select("vec_a", "vec_b", F.round("cos", 6).alias("cos_r6"))
 
 
 def emb_dedup_apply(emb: DataFrame,

@@ -24,29 +24,9 @@ def _count_matches(col: str, cls: str) -> Column:
     )
 
 
-def token_count(docs: DataFrame) -> DataFrame:
-    """Whitespace token count per doc (O(1) memory, scan-local)."""
-    return docs.select(
-        "doc_id",
-        F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tokens"),
-    )
-
-
 # GPT-2-ish pretokenizer classes, RE2/Java-portable subset: letter runs,
 # digit runs, non-space-non-alnum runs (each with optional leading space).
 BPE_TOKEN_PATTERN = r" ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+"
-
-
-def token_count_bpe(docs: DataFrame) -> DataFrame:
-    """BPE-ish token counting: counts pretokenizer matches (the
-    length-estimation shape used when a real tokenizer is too costly for
-    a first pass).  Pure Catalyst regexp_extract_all, JVM-side."""
-    return docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all("text", F.lit(BPE_TOKEN_PATTERN), 0))
-        .cast("long")
-        .alias("n_bpe_tokens"),
-    )
 
 
 def lang_id(docs: DataFrame) -> DataFrame:
@@ -86,21 +66,10 @@ def quality_score(docs: DataFrame) -> DataFrame:
     )
 
 
-def fingerprint(docs: DataFrame) -> DataFrame:
-    """Content fingerprint: md5 of whitespace-normalized lowercase text —
-    the exact-dedup / provenance key."""
-    normalized = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
-    return docs.select(
-        "doc_id", F.md5(normalized).alias("fp"),
-    )
-
-
 def text_profile(docs: DataFrame) -> DataFrame:
     """One-scan fusion of the per-doc counting features: whitespace tokens,
     BPE-ish pretokenizer tokens, and the content fingerprint — what a real
-    pipeline computes in a single pass instead of three scans (the
-    token_count / token_count_bpe / fingerprint operators stay as the
-    individually-tested units)."""
+    pipeline computes in a single pass instead of three scans."""
     normalized = F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")
     return docs.select(
         "doc_id",
@@ -138,36 +107,6 @@ def lang_quality(docs: DataFrame) -> DataFrame:
         .when(lat > cyr, F.lit("lat"))
         .otherwise(F.lit("other"))
         .alias("lang_guess"),
-    )
-
-
-def unigram_probs(docs: DataFrame) -> DataFrame:
-    """Unigram-LM scoring substrate (the perplexity-filter shape of C4/CCNet
-    pipelines): corpus token counts joined back to each document's tokens —
-    (doc_id, token, tok_count, p_unigram).  Entirely Catalyst (explode +
-    two-phase agg + equi-join, no UDF); the single corpus total is a
-    driver-side scalar aggregate (one number, the scale-correct choice —
-    an all-rows window would single-partition the counts).  Probabilities
-    are plain int64/int64 IEEE divisions, bit-identical across engines (a
-    log() here would risk cross-libm last-ulp drift vs the oracle)."""
-    toks = (
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.split(F.trim(F.lower("text")), r"\s+")
-            ).alias("token"),
-        )
-        .filter(F.col("token") != "")
-    )
-    counts = toks.groupBy("token").agg(F.count("*").alias("tok_count"))
-    # sum() over zero rows is NULL, not 0 — an empty/all-whitespace corpus
-    # must yield an empty frame, not int(None) (ADVICE r2)
-    total = counts.agg(F.sum("tok_count")).first()[0] or 1
-    return toks.join(counts, "token").select(
-        "doc_id",
-        "token",
-        F.col("tok_count").cast("long").alias("tok_count"),
-        (F.col("tok_count") / F.lit(int(total))).alias("p_unigram"),
     )
 
 
@@ -216,7 +155,7 @@ def doc_freq_profile(docs: DataFrame) -> DataFrame:
 
     freq_mass = sum over the doc's tokens of each token's CORPUS count —
     an int64 sum, exact under any aggregation order (a log-prob sum would
-    be both order- and libm-dependent vs the oracle, see unigram_probs);
+    be both order- and libm-dependent vs the oracle);
     mean_tok_freq is the single int/int IEEE division at the end.  Shape:
     explode + two-phase token-count agg + equi-join + per-doc agg, all
     Catalyst, two shuffles (token, then doc_id)."""

@@ -121,7 +121,3 @@ def emit_triples(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
         .groupBy("bucket").applyInPandas(window_triples, schema=TRIPLES_SCHEMA)
     )
     return tools.unionByName(windowed)
-
-
-def triple_counts(triples: DataFrame) -> DataFrame:
-    return triples.groupBy("pred").agg(F.count("*").alias("n_triples"))

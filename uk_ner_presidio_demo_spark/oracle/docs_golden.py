@@ -139,18 +139,6 @@ def ensure_docs_golden(sf_dir: str) -> Path:
         out_dir / "golden_neardup_minhash.parquet", index=False
     )
 
-    # --- near-dup via exact all-pairs (baseline) ---
-    ids = sorted(texts)
-    exact_rows = []
-    for i in range(len(ids)):
-        for j in range(i + 1, len(ids)):
-            jac = doc_jaccard(texts[ids[i]], texts[ids[j]])
-            if jac >= DOC_JACCARD_THRESHOLD:
-                exact_rows.append((ids[i], ids[j], round(jac, 6)))
-    pd.DataFrame(exact_rows, columns=["doc_a", "doc_b", "jaccard_r6"]).to_parquet(
-        out_dir / "golden_neardup_exact.parquet", index=False
-    )
-
     # --- dedup application: union-find over the minhash pairs, keep the
     # minimum doc_id per component (singletons keep themselves) ---
     parent: dict[int, int] = {}
@@ -311,30 +299,15 @@ def ensure_docs_golden(sf_dir: str) -> Path:
         hs_rows, columns=["doc_id", "in_sample", "split"]
     ).to_parquet(out_dir / "golden_hash_sample.parquet", index=False)
 
-    # --- span-level dedup apply (engine twin:
-    # operators/chunking.py excise_duplicate_chunks): global-first chunk
-    # occurrence survives, later occurrences cut from the token stream ---
+    # --- chunk ownership (the engine's min-struct agg in
+    # operators/chunking.py): the global-first (doc_id, chunk_idx)
+    # occurrence of each chunk hash owns it ---
     excise_chunks = {d: token_chunks(texts[d]) for d in sorted(texts)}
     chunk_owner: dict[str, tuple[int, int]] = {}
     for d in sorted(excise_chunks):
         for idx, (_, _, h) in enumerate(excise_chunks[d]):
             if h not in chunk_owner:
                 chunk_owner[h] = (d, idx)
-    excise_rows = []
-    for d in sorted(texts):
-        toks = texts[d].split()
-        drop: set[int] = set()
-        for idx, (s, e, h) in enumerate(excise_chunks[d]):
-            if chunk_owner[h] != (d, idx):
-                drop.update(range(s, e))
-        kept = [tk for i, tk in enumerate(toks) if i not in drop]
-        excise_rows.append(
-            (d, len(toks), len(toks) - len(kept), " ".join(kept))
-        )
-    pd.DataFrame(
-        excise_rows,
-        columns=["doc_id", "n_tokens", "n_excised_tokens", "clean_text"],
-    ).to_parquet(out_dir / "golden_excised.parquet", index=False)
 
     # --- EXACT-boundary span excision (engine twin:
     # operators/chunking.py excise_duplicate_spans, r5): maximal
@@ -514,10 +487,6 @@ def ensure_docs_golden(sf_dir: str) -> Path:
     kcells = np.array([ivf_cell(by_id[v], centroids=kcent) for v in vids])
     kprobes = [np.array(ivf_probe_cells(by_id[q], centroids=kcent))
                for q in qids]
-    pd.DataFrame(
-        topk_rows(lambda qi: np.isin(kcells, kprobes[qi])),
-        columns=["query_id", "neighbor_id", "rank", "sim_r6"],
-    ).to_parquet(out_dir / "golden_ann_ivf_kmeans_topk.parquet", index=False)
 
     # IVF-PQ composite (driver oracle for ann_ivfpq_topk): the trained
     # coarse cells above prune WHICH vectors each query scans; ADC scores

@@ -107,62 +107,6 @@ def lm_scores(
     return out
 
 
-def prune_model(
-    model: dict[tuple[str, str], int], max_bigrams: int
-) -> dict[tuple[str, str], int]:
-    """Keep the `max_bigrams` most frequent bigrams, ties broken by
-    (w1, w2) — the KEY-SELECTION twin of operators/lm.py lm_model_top's
-    (c2 desc, w1, w2) TakeOrdered.
-
-    CAUTION — do not feed the pruned COUNTS back into lm_scores as the
-    scoring model: lm_scores recomputes c1 from whatever counts it is
-    given, so pruned counts RENORMALIZE the surviving conditionals
-    (c1 shrinks wherever pruning cuts through a w1's continuation set)
-    — a different estimator that flips keep decisions (measured: 3
-    flips on the sf0.001 corpus at max_bigrams=800).  A pruned model's
-    lp values stay FROZEN from the full training model — pruning only
-    selects WHICH bigrams are scored.  The scoring twin of the
-    streaming gate is lm_scores_frozen over frozen_lp_model."""
-    order = sorted(model.items(), key=lambda kv: (-kv[1], kv[0]))
-    return dict(order[: int(max_bigrams)])
-
-
-def frozen_lp_model(
-    model: dict[tuple[str, str], int],
-    keys=None,
-) -> dict[tuple[str, str], int]:
-    """{bigram -> lp_fp} with lp FROZEN against the FULL model's c1
-    (what lm_bigram_model computes and lm_model_top carries), optionally
-    restricted to `keys` (e.g. prune_model(model, m))."""
-    c1: dict[str, int] = {}
-    for (w1, _), c in model.items():
-        c1[w1] = c1.get(w1, 0) + c
-    use = model.keys() if keys is None else keys
-    return {bg: ilog_fp(model[bg]) - ilog_fp(c1[bg[0]]) for bg in use}
-
-
-def lm_scores_frozen(
-    texts: dict[int, str],
-    lp_model: dict[tuple[str, str], int],
-) -> list[tuple[int, int, int, bool]]:
-    """Scoring twin over a FROZEN-lp model (the streaming gate's shape):
-    out-of-model bigrams drop from sum AND count; zero scored bigrams
-    keep.  Identical to lm_scores when lp_model = frozen_lp_model(full
-    counts); diverges deliberately from lm_scores(texts, pruned_counts)
-    — see prune_model's caution."""
-    out = []
-    for doc_id in sorted(texts):
-        lp = 0
-        n = 0
-        for bg in doc_bigrams(texts[doc_id]):
-            v = lp_model.get(bg)
-            if v is not None:
-                lp += v
-                n += 1
-        out.append((doc_id, n, lp, n == 0 or lp >= LM_KEEP_MIN_AVG_FP * n))
-    return out
-
-
 def ilog_values(model: dict[tuple[str, str], int]) -> dict[int, int]:
     """The lookup table a model needs: every distinct c2 and c1 value
     mapped through ilog_fp (bounded by the sqrt(2N) counting argument

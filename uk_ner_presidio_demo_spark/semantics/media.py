@@ -11,7 +11,6 @@ decoder changes nothing structurally.
 from __future__ import annotations
 
 import hashlib
-import math
 
 FEAT_DIM = 8
 
@@ -28,15 +27,6 @@ def fake_decode_features(payload: bytes, media_type: str) -> list[float]:
         int.from_bytes(d[i * 8 : (i + 1) * 8], "big") / float(1 << 64)
         for i in range(FEAT_DIM)
     ]
-
-
-def target_size(width: int, height: int, max_dim: int) -> tuple[int, int]:
-    """Aspect-preserving downscale plan (no upscale)."""
-    longest = max(width, height)
-    if longest <= max_dim:
-        return width, height
-    scale = max_dim / longest
-    return int(math.floor(width * scale)), int(math.floor(height * scale))
 
 
 def make_payload(media_id: int, media_type: str, size: int = 64) -> bytes:

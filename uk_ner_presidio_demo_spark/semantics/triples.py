@@ -89,7 +89,10 @@ def emit_triples_for_conv(
         if ps:
             parties[t] = ps
 
-    for t, tool in sorted(turns):
+    # Order by turn_idx alone: a turn listed twice may carry None beside a
+    # string tool, which do not compare.  The output is a set, so the
+    # visiting order of equal turn_idx cannot change it.
+    for t, tool in sorted(turns, key=lambda turn: turn[0]):
         ms = mentions.get(t, [])
 
         # mentions_person

@@ -41,7 +41,6 @@ def launcher_conf() -> dict[str, str]:
 def get_spark(
     app_name: str = "uk-ner-kg",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """The engine's session on ``local[cores]`` (default `default_cores`).
@@ -49,10 +48,9 @@ def get_spark(
     over these defaults, so spark-submit runs the configuration the tests
     run on its own master; ``extra_conf`` overrides both."""
     cores = cores or default_cores()
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     defaults = {
         "spark.master": f"local[{cores}]",
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.shuffle.partitions": str(max(cores, 8)),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",

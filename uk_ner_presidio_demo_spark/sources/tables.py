@@ -1,12 +1,10 @@
 """Table sources.
 
-Production path per BASELINE.json input_hint is an Iceberg `transcripts`
-table read via `spark.table(...)` (catalog-qualified) with partition pruning
-on the conv bucket.  The Iceberg runtime jar is not available in this
-sandbox, so `read_transcripts` dispatches: a catalog table name when one
-exists, else the deterministic synthesized parquet keyed to the requested
-scale (the dev fallback SURVEY.md §1.2 names).  Either way callers get the
-identical schema (conv_id, turn_idx, role, text, tool, ts).
+BASELINE.json's input_hint names an Iceberg `transcripts` table; no
+Iceberg runtime jar ships with this build, so `read_transcripts` reads the
+deterministic synthesized parquet keyed to the requested scale (the dev
+fallback SURVEY.md §1.2 names) with the fixed schema (conv_id, turn_idx,
+role, text, tool, ts).
 """
 
 from __future__ import annotations
@@ -41,15 +39,10 @@ DOCUMENTS_SCHEMA = ("doc_id long, text string, lang string, source string, "
                     "n_chars long")
 
 
-def read_transcripts(spark: SparkSession, sf_dir: str,
-                     table: str | None = None) -> DataFrame:
-    if table is not None and spark.catalog.tableExists(table):
-        df = spark.table(table)
-    else:
-        df = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(
-            str(ensure_transcripts(sf_dir))
-        )
-    return df
+def read_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(
+        str(ensure_transcripts(sf_dir))
+    )
 
 
 def read_aliases(spark: SparkSession) -> DataFrame:

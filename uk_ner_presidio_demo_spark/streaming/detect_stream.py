@@ -101,53 +101,6 @@ def windowed_entity_counts(mentions_stream: DataFrame,
     )
 
 
-CONV_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("total_mentions", T.LongType()),
-        T.StructField("n_person", T.LongType()),
-    ]
-)
-
-_CONV_STATE_STATE = T.StructType(
-    [
-        T.StructField("total", T.LongType()),
-        T.StructField("persons", T.LongType()),
-    ]
-)
-
-
-def conversation_state_stream(mentions_stream: DataFrame) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState): a running
-    per-conversation mention counter that survives micro-batch boundaries —
-    the arbitrary-state shape (GroupState) the built-in windowed aggs can't
-    express.  Emits the updated running totals for every conversation
-    touched by each micro-batch ("update" semantics)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(key, pdfs, state: GroupState):
-        total, persons = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            total += len(pdf)
-            persons += int((pdf["entity_type"] == "PERS").sum())
-        state.update((total, persons))
-        yield pd.DataFrame(
-            [(key[0], total, persons)],
-            columns=["conv_id", "total_mentions", "n_person"],
-        )
-
-    return (
-        mentions_stream.groupBy("conv_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=CONV_STATE_SCHEMA,
-            stateStructType=_CONV_STATE_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def run_available_now(df: DataFrame, query_name: str,
                       checkpoint_dir: str, output_mode: str) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow trigger)
@@ -182,8 +135,8 @@ _DEDUP_STATE = T.StructType([T.StructField("min_doc_id", T.LongType())])
 def streaming_exact_dedup(docs_stream: DataFrame,
                           ttl_ms: int | None = None) -> DataFrame:
     """Incremental exact dedup across micro-batches: group by content
-    fingerprint (md5 of whitespace-normalized lowercase text — the same
-    Catalyst expression as operators.textstats.fingerprint).
+    fingerprint (md5 of whitespace-normalized lowercase text —
+    operators/contamination.py fp_expr, the batch audit's key).
 
     Keeper rule: per-key GroupState tracks the MIN doc_id ever seen.  The
     first arrival of a fingerprint emits; a LATER batch bringing a smaller
@@ -204,8 +157,9 @@ def streaming_exact_dedup(docs_stream: DataFrame,
     run under a processing-time trigger; tests poll the sink and stop."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    fp = F.md5(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "))
-    keyed = docs_stream.select(fp.alias("fp"), "doc_id", "text")
+    from ..operators.contamination import fp_expr
+
+    keyed = docs_stream.select(fp_expr().alias("fp"), "doc_id", "text")
 
     def fn(key, pdfs, state: GroupState):
         if state.hasTimedOut:
