@@ -3,8 +3,6 @@ but still ships:
 
   kg_top_surfaces / events_sessions — off-board callables bench.py still
                           times; each keeps the oracle it had on the board
-  ann_ivf_topk          — the seeded-centroid IVF path (the board row runs
-                          the trained variant); exact vs its golden
   lang_id / quality_score — the clean_corpus legs; equal to the fused
                           lang_quality row
   tpch_filter_project   — merged into tpch_window_topk
@@ -26,22 +24,6 @@ def test_top_surfaces_plain_equals_salted(spark, sf01):
     plain = em._q_top_surfaces(spark, sf01).toPandas()
     salted = em.queries()["kg_top_surfaces_salted"](spark, sf01).toPandas()
     assert not compare_frames(plain, salted)
-
-
-def test_ann_ivf_seeded_matches_golden(spark, sf01):
-    """ann_ivf_topk (seeded-centroid IVF) vs its golden parquet — the board
-    row moved to the trained-kmeans variant; the seeded path stays exact."""
-    from uk_ner_presidio_demo_spark.operators.similarity import ann_topk_ivf
-    from uk_ner_presidio_demo_spark.oracle.docs_golden import (
-        ensure_docs_golden,
-    )
-
-    dg = ensure_docs_golden(sf01)
-    got = ann_topk_ivf(read_tpch(spark, sf01, "embeddings")).toPandas()
-    want = __import__("pandas").read_parquet(
-        f"{dg}/golden_ann_ivf_topk.parquet"
-    )
-    assert not compare_frames(got, want)
 
 
 def test_unit_lang_and_quality_match_fused(spark, sf01):

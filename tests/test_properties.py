@@ -163,21 +163,14 @@ class TestBatchDetectionEquivalence:
     @given(st.lists(_patternish, min_size=1, max_size=5),
            st.sampled_from(["score", "priority"]))
     @settings(max_examples=100, deadline=None)
-    def test_batch_respects_strategy_and_enabled_sets(self, texts, strategy):
+    def test_batch_respects_strategy(self, texts, strategy):
         from uk_ner_presidio_demo_spark.semantics.detect import (
             detect_mentions_batch,
         )
 
-        enabled = frozenset({"EMAIL_ADDRESS", "PHONE_NUMBER", "DATE_TIME"})
-        batch = detect_mentions_batch(
-            texts, strategy=strategy, ner_enabled=frozenset(),
-            pattern_enabled=enabled,
-        )
+        batch = detect_mentions_batch(texts, strategy=strategy)
         for t, got in zip(texts, batch):
-            assert got == detect_mentions(
-                t, strategy=strategy, ner_enabled=frozenset(),
-                pattern_enabled=enabled,
-            )
+            assert got == detect_mentions(t, strategy=strategy)
 
 
 def test_batch_family_isolation_u2(monkeypatch):

@@ -4,6 +4,7 @@ golden (blocked results are exactly the all-pairs results whose pair
 collided in >=1 LSH table)."""
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from tests.harness import compare_frames
 from uk_ner_presidio_demo_spark.operators.similarity import emb_neardup_lsh
@@ -43,12 +44,14 @@ def test_distributed_kmeans_bit_identical_to_oracle_trainer(spark, sf01):
     from uk_ner_presidio_demo_spark.operators.similarity import (
         kmeans_centroids_distributed,
     )
-    from uk_ner_presidio_demo_spark.semantics.docsim import kmeans_train
+    from uk_ner_presidio_demo_spark.semantics.docsim import (
+        KMEANS_K, kmeans_train,
+    )
 
     emb = _read_emb(spark, sf01)
-    got = kmeans_centroids_distributed(emb)
     pdf = emb.toPandas().sort_values("vec_id")
     mat = np.array([[float(x) for x in v] for v in pdf["embedding"]])
+    got = kmeans_centroids_distributed(emb, init=mat[:KMEANS_K])
     want = kmeans_train(mat)
     assert np.array_equal(got, want)  # bit-identical, not just close
 
@@ -131,7 +134,8 @@ def test_ann_ivfpq_matches_single_process_twin(spark, sf01):
         ann_topk_ivfpq, kmeans_centroids_distributed,
     )
     from uk_ner_presidio_demo_spark.semantics.docsim import (
-        ANN_K, ANN_Q, ANN_Q_MOD, IVF_NPROBE, ivf_cell, ivf_probe_cells,
+        ANN_K, ANN_Q, ANN_Q_MOD, IVF_NPROBE, KMEANS_K, ivf_cell,
+        ivf_probe_cells,
     )
     from uk_ner_presidio_demo_spark.semantics.pq import (
         PQ_TRAIN_SAMPLE, pq_adc_cosine, pq_encode, pq_train,
@@ -143,7 +147,8 @@ def test_ann_ivfpq_matches_single_process_twin(spark, sf01):
     vids = sorted(by)
     mat = np.array([by[v] for v in vids], dtype=np.float64)
     cids = np.array(vids)
-    cent = kmeans_centroids_distributed(_read_emb(spark, sf01))
+    cent = kmeans_centroids_distributed(_read_emb(spark, sf01),
+                                        init=mat[:KMEANS_K])
     cells = np.array([ivf_cell(by[v], centroids=cent) for v in vids])
     books = pq_train(mat[:PQ_TRAIN_SAMPLE])
     codes = pq_encode(mat, books)
@@ -360,3 +365,53 @@ class TestPqIndexAppend:
             codes = idx["codes"].toPandas()
             assert len(codes) == n
             assert codes["vec_id"].is_unique
+
+
+def test_cross_batch_ties_pick_the_lowest_neighbor_ids(spark):
+    """Duplicated vectors tie EXACTLY on sim, and each query has far more
+    tied candidates than ANN_K, spread over several partitions (one Arrow
+    batch each): the batch-local top-k and the window top-k must both
+    break ties to the lower neighbor id, so the result equals a numpy
+    twin ordering by (-sim, id) and ranking 1..ANN_K."""
+    import numpy as np
+
+    from uk_ner_presidio_demo_spark.operators.similarity import (
+        ann_topk_bruteforce, ann_topk_lsh,
+    )
+    from uk_ner_presidio_demo_spark.semantics.docsim import (
+        ANN_K, ANN_Q, ANN_Q_MOD, EMB_DIM, cosine_matrix, rp_bucket,
+    )
+
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal((4, EMB_DIM)).astype(np.float32)
+    ids = np.arange(240)
+    mat = base[ids % 4].astype(np.float64)
+    rdd = spark.sparkContext.parallelize(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, base[ids % 4])],
+        4,
+    )
+    emb = spark.createDataFrame(rdd, "vec_id long, embedding array<float>")
+    assert emb.select(F.spark_partition_id()).distinct().count() >= 3
+
+    qids = [int(v) for v in ids if v % ANN_Q_MOD == 0][:ANN_Q]
+    sims = cosine_matrix(mat[qids], mat)  # (n, nq)
+    buckets = np.array([rp_bucket(v) for v in mat])
+
+    def twin(mask_fn):
+        want = set()
+        for qi, q in enumerate(qids):
+            idx = np.nonzero((ids != q) & mask_fn(q))[0]
+            order = np.lexsort((ids[idx], -sims[idx, qi]))[:ANN_K]
+            for rank, j in enumerate(idx[order], 1):
+                want.add((q, int(ids[j]), rank, round(float(sims[j, qi]), 6)))
+        return want
+
+    def got(df):
+        return {(r["query_id"], r["neighbor_id"], r["rank"], r["sim_r6"])
+                for r in df.collect()}
+
+    want = twin(lambda q: True)
+    # non-vacuous: query 0's neighbors are its ANN_K lowest-id duplicates
+    assert {n for q, n, _, _ in want if q == 0} == set(range(4, 44, 4))
+    assert got(ann_topk_bruteforce(emb)) == want
+    assert got(ann_topk_lsh(emb)) == twin(lambda q: buckets == buckets[q])

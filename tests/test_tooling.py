@@ -158,6 +158,57 @@ def test_every_query_callable_is_on_the_board_or_timed():
     )
 
 
+def _unused_imports(path: Path) -> list[str]:
+    """Names an import statement binds that the module never loads.
+    Quoted annotations ("np.ndarray") count as loads; an import line
+    marked `# noqa: F401` (an availability probe) is skipped."""
+    import ast
+
+    src = path.read_text()
+    tree = ast.parse(src)
+    lines = src.splitlines()
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in ast.walk(tree):
+        annots = []
+        if isinstance(node, ast.arg):
+            annots = [node.annotation]
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            annots = [node.returns]
+        elif isinstance(node, ast.AnnAssign):
+            annots = [node.annotation]
+        for a in annots:
+            for c in ast.walk(a) if a is not None else ():
+                if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                    used |= {n.id for n in ast.walk(ast.parse(c.value))
+                             if isinstance(n, ast.Name)}
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.Import, ast.ImportFrom)):
+            continue
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if any("noqa: F401" in lines[i - 1]
+               for i in range(node.lineno, node.end_lineno + 1)):
+            continue
+        for a in node.names:
+            bound = a.asname or a.name.split(".")[0]
+            if bound != "*" and bound not in used:
+                out.append(f"{path.relative_to(REPO)}: {bound}")
+    return out
+
+
+def test_no_unused_imports():
+    """Every imported name in the package, the entry modules and scripts/
+    is used somewhere in its module."""
+    files = [
+        *sorted((REPO / "uk_ner_presidio_demo_spark").rglob("*.py")),
+        REPO / "__spark_entry__.py", REPO / "bench.py", REPO / "driver.py",
+        *sorted((REPO / "scripts").rglob("*.py")),
+    ]
+    unused = [u for f in files for u in _unused_imports(f)]
+    assert not unused, unused
+
+
 def test_errors_on_empty_query_dict(tmp_path):
     a = tmp_path / "a.json"
     b = tmp_path / "b.json"

@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..semantics.docsim import (
-    DOC_JACCARD_THRESHOLD, doc_band_keys, doc_jaccard, doc_minhash_batch,
+    DOC_JACCARD_THRESHOLD, doc_band_keys, doc_minhash_batch,
     simhash64, simhash64_batch,
 )
 
@@ -202,44 +202,49 @@ def simhash_dups(docs: DataFrame, max_hamming: int) -> DataFrame:
     )
 
 
-def _pad_doc_id(col) -> "F.Column":
-    # zero-padded so lexicographic min (the CC label order) == numeric min
-    return F.lpad(col.cast("string"), 12, "0")
+def keep_cluster_min(rows: DataFrame, id_col: str,
+                     pairs: DataFrame) -> DataFrame:
+    """Keep the minimum `id_col` of each near-dup cluster: `pairs` (two id
+    columns, an edge list) -> connected components (the canonicalization
+    CC operator) -> left-semi keep of each component's label.  Singletons
+    keep themselves.  Ids are zero-padded so the lexicographic min (the
+    CC label order) is the numeric min.  Returns `rows` restricted to the
+    kept ids.
 
-
-def dedup_apply(docs: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
-    """Apply near-duplicate clustering: MinHash/LSH dup pairs -> connected
-    components (reusing the canonicalization CC operator) -> keep exactly
-    the minimum doc_id of each cluster (singletons keep themselves).
-    Returns the deduplicated (doc_id, text) table — the operator a
-    training-data pipeline actually runs after pair discovery.
-
-    Scale shape: pair discovery is the banded equi-join (never quadratic);
-    CC iterates only over docs that touch a dup pair (singleton bypass);
-    the final keep is a left-semi join."""
+    Scale shape: CC iterates only over ids that touch a pair (singleton
+    bypass); the keep is a left-semi join."""
     from .canonicalize import connected_components
 
-    if pairs is None:
-        pairs = neardup_minhash(docs).select("doc_a", "doc_b")
-    nodes = docs.select(
-        F.lit("doc").alias("entity_type"),
-        _pad_doc_id(F.col("doc_id")).alias("norm_surface"),
+    def pad(c):
+        return F.lpad(c.cast("string"), 12, "0")
+
+    src, dst = pairs.columns
+    nodes = rows.select(
+        F.lit(id_col).alias("entity_type"),
+        pad(F.col(id_col)).alias("norm_surface"),
     )
     edges = pairs.select(
-        F.lit("doc").alias("entity_type"),
-        _pad_doc_id(F.col("doc_a")).alias("src"),
-        _pad_doc_id(F.col("doc_b")).alias("dst"),
+        F.lit(id_col).alias("entity_type"),
+        pad(F.col(src)).alias("src"),
+        pad(F.col(dst)).alias("dst"),
     )
-    cc = connected_components(nodes, edges)
-    keepers = cc.filter(
+    keepers = connected_components(nodes, edges).filter(
         F.col("label")
         == F.concat_ws(":", F.col("entity_type"), F.col("norm_surface"))
     ).select(F.col("norm_surface").alias("pad_id"))
-    return docs.join(
-        keepers,
-        _pad_doc_id(F.col("doc_id")) == F.col("pad_id"),
-        "left_semi",
-    ).select("doc_id", "text")
+    return rows.join(keepers, pad(F.col(id_col)) == F.col("pad_id"),
+                     "left_semi")
+
+
+def dedup_apply(docs: DataFrame) -> DataFrame:
+    """Apply near-duplicate clustering: MinHash/LSH dup pairs ->
+    keep_cluster_min (keep exactly the minimum doc_id of each cluster;
+    singletons keep themselves).  Returns the deduplicated (doc_id, text)
+    table — the operator a training-data pipeline actually runs after
+    pair discovery.  Pair discovery is the banded equi-join (never
+    quadratic)."""
+    pairs = neardup_minhash(docs).select("doc_a", "doc_b")
+    return keep_cluster_min(docs.select("doc_id", "text"), "doc_id", pairs)
 
 
 def clean_corpus(docs: DataFrame, lang: str = "uk",

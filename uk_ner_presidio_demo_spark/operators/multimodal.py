@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..semantics.media import FEAT_DIM, fake_decode_features
+from ..semantics.media import fake_decode_features
 
 FEATURES_SCHEMA = T.StructType(
     [

@@ -26,8 +26,6 @@ quantile_disc live, and against a sorted-list twin under hypothesis).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 

@@ -1,6 +1,6 @@
 """Similarity search over the `embeddings` table: brute-force cosine top-k
-(baseline) and random-hyperplane-LSH-bucketed top-k (scale path), plus
-LSH-blocked near-dup.
+(baseline), random-hyperplane-LSH-bucketed, PQ and IVF-PQ top-k (scale
+paths), the precomputed-codes IVF-PQ query path, plus LSH-blocked near-dup.
 
 Kernel design: cosine is ONE float64 BLAS matmul per Arrow batch
 (`semantics.docsim.cosine_matrix`, shared verbatim with the oracle, so
@@ -10,10 +10,11 @@ vectorized pandas path IS the performant formulation, not a fallback.
 
 Scale shape: the query set is small by construction and ships to executors
 inside the UDF closure (a broadcast); candidates stream through in Arrow
-batches; each batch emits only its LOCAL top-k per query (map-side combine
-for top-k), and a final window takes the global top-k over
-n_batches x nq x k rows.  The LSH variant prunes candidates to the query's
-hyperplane bucket before scoring.
+batches; every ANN entry point runs the ONE top-k kernel `_topk`, which
+emits each batch's LOCAL top-k per query (map-side combine for top-k), and
+a final window takes the global top-k over n_batches x nq x k rows.  An
+entry point only supplies the batch score matrix and, for the LSH and IVF
+variants, the per-query candidate mask (hyperplane bucket, probed cells).
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from ..semantics.docsim import (
@@ -33,6 +33,7 @@ from ..semantics.docsim import (
     KMEANS_K, cosine_matrix, ivf_probe_cells, kmeans_assign,
     kmeans_centroid_from_sums, kmeans_quantize, rp_bucket,
 )
+from ..semantics.pq import PQ_TRAIN_SAMPLE, pq_adc_cosine, pq_encode, pq_train
 
 _SCORED_SCHEMA = T.StructType(
     [
@@ -72,50 +73,70 @@ def _collect_queries(emb: DataFrame) -> tuple[list[int], "np.ndarray"]:
     return qids, qmat
 
 
-def _topk_scored(emb: DataFrame, qids: list[int], qmat: "np.ndarray",
-                 k: int, qbuckets: list[int] | None,
-                 scorer=None) -> DataFrame:
-    """Batch-local top-k scoring kernel; qbuckets (parallel to qids)
-    restricts each query to candidates in its LSH bucket; `scorer(cmat)`
-    overrides the exact-cosine score matrix (PQ's ADC path)."""
+def _head_sample(emb: DataFrame) -> "np.ndarray":
+    """(PQ_TRAIN_SAMPLE, dim) float64 embeddings of the smallest vec_ids,
+    vec_id-ascending — the ONE training collect (a TakeOrdered, O(sample)
+    bytes).  It feeds the PQ codebooks, and its first KMEANS_K rows are
+    the k-means init (PQ_TRAIN_SAMPLE >= KMEANS_K)."""
+    rows = sorted(
+        emb.orderBy("vec_id").limit(PQ_TRAIN_SAMPLE)
+        .select("vec_id", "embedding").collect(),
+        key=lambda r: r.vec_id,
+    )
+    return np.array([[float(x) for x in r.embedding] for r in rows],
+                    dtype=np.float64)
+
+
+def _probes(qmat: "np.ndarray", cent: "np.ndarray") -> "np.ndarray":
+    """(n_queries, IVF_NPROBE): each query's nearest trained cells."""
+    return np.array(
+        [ivf_probe_cells(list(q), IVF_NPROBE, centroids=cent) for q in qmat],
+        dtype=np.int64,
+    ).reshape(len(qmat), IVF_NPROBE)
+
+
+def _probe_mask(cells: "np.ndarray", probes: "np.ndarray") -> "np.ndarray":
+    """(n_rows, n_queries): the row's coarse cell is one the query probes."""
+    return (np.asarray(cells)[:, None, None] == probes[None]).any(axis=2)
+
+
+def _topk(frame: DataFrame, qids: list[int], score) -> DataFrame:
+    """(query_id, neighbor_id, rank, sim_r6): the ONE ANN top-k.
+
+    `score(pdf)` maps one Arrow batch of `frame` (vec_id plus whatever the
+    scorer reads) to `(sims, mask)`: the (n_rows, n_queries) similarity
+    matrix and a same-shape candidate mask, or None for no mask.  The
+    kernel drops the query itself and keeps each batch's local top-ANN_K
+    per query, ties to the lower neighbor id; one row_number window takes
+    the global top-ANN_K under the same order."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             cids = pdf["vec_id"].to_numpy()
-            cmat = _emb_matrix(pdf["embedding"])
-            sims = scorer(cmat) if scorer is not None \
-                else cosine_matrix(qmat, cmat)  # (nc, nq)
-            if qbuckets is not None:
-                # rp_bucket stays the scalar sequential fold (frozen sign
-                # semantics shared with the oracle); numpy float64 scalars
-                # go through the same IEEE ops as python floats
-                cbuckets = np.array([rp_bucket(v) for v in cmat])
+            sims, allowed = score(pdf)
             out = []
             for qi, qid in enumerate(qids):
                 col = sims[:, qi]
                 mask = cids != qid
-                if qbuckets is not None:
-                    mask &= cbuckets == qbuckets[qi]
+                if allowed is not None:
+                    mask &= allowed[:, qi]
                 idx = np.nonzero(mask)[0]
                 if not len(idx):
                     continue
-                # local top-k, deterministic tie-break by neighbor id
-                order = np.lexsort((cids[idx], -col[idx]))[:k]
+                order = np.lexsort((cids[idx], -col[idx]))[:ANN_K]
                 for j in idx[order]:
                     out.append((qid, int(cids[j]), float(col[j])))
             yield pd.DataFrame(
                 out, columns=["query_id", "neighbor_id", "sim"]
             )
 
-    scored = emb.select("vec_id", "embedding").mapInPandas(
-        kernel, _SCORED_SCHEMA
-    )
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        frame.mapInPandas(kernel, _SCORED_SCHEMA)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= ANN_K)
         .select(
             "query_id", "neighbor_id",
             F.col("rank").cast("long").alias("rank"),
@@ -124,89 +145,75 @@ def _topk_scored(emb: DataFrame, qids: list[int], qmat: "np.ndarray",
     )
 
 
-def ann_topk_bruteforce(emb: DataFrame, k: int = ANN_K) -> DataFrame:
+def ann_topk_bruteforce(emb: DataFrame) -> DataFrame:
     """(query_id, neighbor_id, rank, sim_r6): exact top-k by cosine."""
     qids, qmat = _collect_queries(emb)
-    return _topk_scored(emb, qids, qmat, k, None)
+
+    def score(pdf: pd.DataFrame):
+        return cosine_matrix(qmat, _emb_matrix(pdf["embedding"])), None
+
+    return _topk(emb.select("vec_id", "embedding"), qids, score)
 
 
-def ann_topk_lsh(emb: DataFrame, k: int = ANN_K) -> DataFrame:
+def ann_topk_lsh(emb: DataFrame) -> DataFrame:
     """LSH-bucketed top-k: candidates limited to the query's hyperplane
     bucket (approximate; deterministic seeded planes)."""
     qids, qmat = _collect_queries(emb)
-    qbuckets = [rp_bucket(list(qmat[i])) for i in range(len(qids))]
-    return _topk_scored(emb, qids, qmat, k, qbuckets)
+    qbuckets = np.array([rp_bucket(list(q)) for q in qmat])
+
+    def score(pdf: pd.DataFrame):
+        cmat = _emb_matrix(pdf["embedding"])
+        # rp_bucket stays the scalar sequential fold (frozen sign
+        # semantics shared with the oracle); numpy float64 scalars go
+        # through the same IEEE ops as python floats
+        cbuckets = np.array([rp_bucket(v) for v in cmat])
+        return cosine_matrix(qmat, cmat), cbuckets[:, None] == qbuckets
+
+    return _topk(emb.select("vec_id", "embedding"), qids, score)
 
 
-def ann_topk_pq(emb: DataFrame, k: int = ANN_K) -> DataFrame:
+def ann_topk_pq(emb: DataFrame) -> DataFrame:
     """Product-quantization ANN (semantics/pq.py): codebooks trained on
     the deterministic vec_id-ascending head sample, every vector encoded
     to PQ_M uint8 codes inside the scoring kernel, ADC approx-cosine
     against the reconstructed centroids.  THE memory-scale path: 8 B of
     codes replace 256 B of floats, so a 100-TB embedding corpus's code
     table fits in cluster RAM; in a full deployment the codes are
-    precomputed once and the raw-vector scan disappears from the query
-    path entirely."""
-    from ..semantics.pq import (
-        PQ_TRAIN_SAMPLE, pq_adc_cosine, pq_encode, pq_train,
-    )
-
+    precomputed once (build_pq_index) and the raw-vector scan disappears
+    from the query path entirely."""
     qids, qmat = _collect_queries(emb)
-    sample_rows = (
-        emb.orderBy("vec_id").limit(PQ_TRAIN_SAMPLE)
-        .select("embedding").collect()
-    )
-    sample = np.array(
-        [[float(x) for x in r.embedding] for r in sample_rows],
-        dtype=np.float64,
-    )
-    books = pq_train(sample)
+    books = pq_train(_head_sample(emb))
 
-    def scorer(cmat: "np.ndarray") -> "np.ndarray":
-        return pq_adc_cosine(qmat, pq_encode(cmat, books), books)
+    def score(pdf: pd.DataFrame):
+        codes = pq_encode(_emb_matrix(pdf["embedding"]), books)
+        return pq_adc_cosine(qmat, codes, books), None
 
-    return _topk_scored(emb, qids, qmat, k, None, scorer=scorer)
+    return _topk(emb.select("vec_id", "embedding"), qids, score)
 
 
-def ann_topk_ivfpq(emb: DataFrame, k: int = ANN_K,
-                   nprobe: int = IVF_NPROBE) -> DataFrame:
+def ann_topk_ivfpq(emb: DataFrame) -> DataFrame:
     """IVF-PQ composite (the FAISS IVFPQ shape): trained coarse cells
-    prune WHICH vectors each query scans (nprobe nearest cells), PQ codes
-    shrink WHAT is scanned (8 B ADC lookups instead of 256 B exact
+    prune WHICH vectors each query scans (IVF_NPROBE nearest cells), PQ
+    codes shrink WHAT is scanned (8 B ADC lookups instead of 256 B exact
     cosine) — the two pruning axes a real 100-TB ANN deployment composes.
     Both components reuse their deterministic trainers (distributed
     int64-quantized k-means; head-sample PQ codebooks), so the
-    single-process twin reproduces the output exactly."""
-    from ..semantics.pq import (
-        PQ_TRAIN_SAMPLE, pq_adc_cosine, pq_encode, pq_train,
-    )
-
-    # ONE head-sample collect feeds both trainers (r8): the k-means init
-    # is the embeddings of the KMEANS_K smallest vec_ids — exactly the
-    # first KMEANS_K rows of the vec_id-ascending PQ training sample
-    # (PQ_TRAIN_SAMPLE >= KMEANS_K), so passing the slice is the same
-    # matrix with one TakeOrdered job fewer.
-    sample_rows = sorted(
-        emb.orderBy("vec_id").limit(PQ_TRAIN_SAMPLE)
-        .select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id,
-    )
-    sample = np.array(
-        [[float(x) for x in r.embedding] for r in sample_rows],
-        dtype=np.float64,
-    )
-    cent = kmeans_centroids_distributed(emb, init=sample[:KMEANS_K])
+    single-process twin reproduces the output exactly.  ONE pass over the
+    raw vectors: cells and codes are computed inside the scoring kernel —
+    composing build_pq_index + ann_topk_pq_index instead costs the codes
+    checkpoint job on top."""
+    sample = _head_sample(emb)
+    cent = kmeans_centroids_distributed(emb, sample[:KMEANS_K])
     books = pq_train(sample)
-    # collect the query set ONCE and pass it through explicitly — the
-    # scorer's qmat and the probe sets must come from the same collect
-    # (ADVICE r3: two independent collects only aligned by accident)
     qids, qmat = _collect_queries(emb)
+    probes = _probes(qmat, cent)
 
-    def scorer(cmat: "np.ndarray") -> "np.ndarray":
-        return pq_adc_cosine(qmat, pq_encode(cmat, books), books)
+    def score(pdf: pd.DataFrame):
+        cmat = _emb_matrix(pdf["embedding"])
+        sims = pq_adc_cosine(qmat, pq_encode(cmat, books), books)
+        return sims, _probe_mask(kmeans_assign(cent, cmat), probes)
 
-    return ann_topk_ivf(emb, k=k, nprobe=nprobe, centroids=cent,
-                        scorer=scorer, queries=(qids, qmat))
+    return _topk(emb.select("vec_id", "embedding"), qids, score)
 
 
 PQ_CODES_SCHEMA = T.StructType(
@@ -219,36 +226,28 @@ PQ_CODES_SCHEMA = T.StructType(
 
 
 def pq_encode_table(emb: DataFrame, books: "np.ndarray",
-                    centroids: "np.ndarray | None" = None) -> DataFrame:
+                    centroids: "np.ndarray") -> DataFrame:
     """The ONE-OFF encode pass of a PQ deployment: (vec_id, cell, codes)
     where codes packs PQ_M uint8 subspace assignments into PQ_M bytes
     (binary column — 8 B replaces 256 B of floats) and cell is the
-    trained IVF coarse cell (NULL when centroids is None, i.e. plain PQ).
-    In production this table is written once (Parquet/Iceberg) and every
-    subsequent query scans it INSTEAD of the raw embeddings — the
-    SCALE.md deployment claim, made real (VERDICT r3 #5)."""
-    from ..semantics.pq import pq_encode
+    trained IVF coarse cell.  In production this table is written once
+    (Parquet/Iceberg) and every subsequent query scans it INSTEAD of the
+    raw embeddings — the SCALE.md deployment claim, made real (VERDICT r3
+    #5)."""
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             vecs = _emb_matrix(pdf["embedding"])
-            codes = pq_encode(vecs, books)
-            if centroids is not None:
-                # batch coarse assignment (r8): kmeans_assign is the
-                # argmax-first batch twin of per-row ivf_cell (same
-                # cosine_matrix, shape-independent einsum accumulation;
-                # same lowest-cell tie rule) — the per-row loop paid one
-                # einsum call per vector
-                cells = [int(c) for c in kmeans_assign(centroids, vecs)]
-            else:
-                cells = [None] * len(vecs)
+            # kmeans_assign is the argmax-first batch twin of per-row
+            # ivf_cell (same cosine_matrix, shape-independent einsum
+            # accumulation; same lowest-cell tie rule)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].astype("int64"),
-                    "cell": pd.array(cells, dtype="Int32"),
-                    "codes": [c.tobytes() for c in codes],
+                    "cell": kmeans_assign(centroids, vecs).astype(np.int32),
+                    "codes": [c.tobytes() for c in pq_encode(vecs, books)],
                 }
             )
 
@@ -257,96 +256,46 @@ def pq_encode_table(emb: DataFrame, books: "np.ndarray",
     )
 
 
-def build_pq_index(emb: DataFrame, nprobe: int = IVF_NPROBE) -> dict:
+def build_pq_index(emb: DataFrame) -> dict:
     """Train-once artifacts of an IVF-PQ deployment: trained coarse
     centroids, head-sample PQ codebooks, the materialized codes table
     (checkpointed — the stand-in for the written Iceberg codes table),
     and the collected query set (in deployment, queries ARRIVE as raw
     vectors; they are inputs, not a table scan).  Everything downstream
     of this call touches no raw embedding data."""
-    from ..semantics.pq import PQ_TRAIN_SAMPLE, pq_train
-
-    # one head-sample collect feeds both trainers (see ann_topk_ivfpq)
-    sample_rows = sorted(
-        emb.orderBy("vec_id").limit(PQ_TRAIN_SAMPLE)
-        .select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id,
-    )
-    sample = np.array(
-        [[float(x) for x in r.embedding] for r in sample_rows],
-        dtype=np.float64,
-    )
-    cent = kmeans_centroids_distributed(emb, init=sample[:KMEANS_K])
+    sample = _head_sample(emb)
+    cent = kmeans_centroids_distributed(emb, sample[:KMEANS_K])
     books = pq_train(sample)
-    codes_df = pq_encode_table(emb, books, centroids=cent) \
-        .localCheckpoint(eager=True)
-    qids, qmat = _collect_queries(emb)
+    codes_df = pq_encode_table(emb, books, cent).localCheckpoint(eager=True)
     return {"centroids": cent, "books": books, "codes": codes_df,
-            "queries": (qids, qmat), "nprobe": nprobe}
+            "queries": _collect_queries(emb)}
 
 
-def ann_topk_pq_index(index: dict, k: int = ANN_K) -> DataFrame:
+def ann_topk_pq_index(index: dict) -> DataFrame:
     """QUERY path of the IVF-PQ deployment: scan ONLY (vec_id, cell,
-    codes) — 9 B/vector instead of 256 B — probe each query's nprobe
+    codes) — 9 B/vector instead of 256 B — probe each query's IVF_NPROBE
     nearest cells, ADC-score the codes, window-final the top-k.  Output
     is EXACTLY ann_topk_ivfpq's (same codes, same scorer, same
     tie-breaks); what changes is the data touched per query: at 100 TB
     of embeddings the codes table is ~0.35 TB and the raw vectors never
     enter the query path (twin + no-embedding-scan gated in
     tests/test_similarity.py)."""
-    from ..semantics.pq import pq_adc_cosine
-
     books = index["books"]
-    cent = index["centroids"]
     qids, qmat = index["queries"]
-    probe_sets = [
-        np.array(ivf_probe_cells(list(qmat[i]), index["nprobe"],
-                                 centroids=cent))
-        for i in range(len(qids))
-    ]
+    probes = _probes(qmat, index["centroids"])
 
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cids = pdf["vec_id"].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            codes = np.stack(
-                [np.frombuffer(b, dtype=np.uint8) for b in pdf["codes"]]
-            )
-            sims = pq_adc_cosine(qmat, codes, books)
-            out = []
-            for qi, qid in enumerate(qids):
-                col = sims[:, qi]
-                mask = (cids != qid) & np.isin(cells, probe_sets[qi])
-                idx = np.nonzero(mask)[0]
-                if not len(idx):
-                    continue
-                order = np.lexsort((cids[idx], -col[idx]))[:k]
-                for j in idx[order]:
-                    out.append((qid, int(cids[j]), float(col[j])))
-            yield pd.DataFrame(
-                out, columns=["query_id", "neighbor_id", "sim"]
-            )
-
-    scored = index["codes"].mapInPandas(kern, _SCORED_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("sim", 6).alias("sim_r6"),
+    def score(pdf: pd.DataFrame):
+        codes = np.stack(
+            [np.frombuffer(b, dtype=np.uint8) for b in pdf["codes"]]
         )
-    )
+        return (pq_adc_cosine(qmat, codes, books),
+                _probe_mask(pdf["cell"].to_numpy(), probes))
+
+    return _topk(index["codes"], qids, score)
 
 
 def kmeans_centroids_distributed(emb: DataFrame,
-                                 init: "np.ndarray | None" = None
-                                 ) -> "np.ndarray":
+                                 init: "np.ndarray") -> "np.ndarray":
     """Deterministic distributed Lloyd training (semantics.docsim kmeans_*):
     per iteration ONE mapInPandas pass emits per-cell partial int64
     quantized sums (map-side combine), a tiny (cell, dim) shuffle sum
@@ -355,23 +304,10 @@ def kmeans_centroids_distributed(emb: DataFrame,
     regardless of partitioning.  Only K x dim aggregated values ever reach
     the driver; at 100 TB this is the standard two-phase agg shape.
 
-    `init` (optional, r8): the (KMEANS_K, dim) float64 init matrix — the
-    embeddings of the KMEANS_K smallest vec_ids.  Callers that already
-    hold the vec_id-ascending head sample (the PQ trainers) pass its
-    first KMEANS_K rows and skip this function's TakeOrdered collect —
-    same matrix by construction, one driver round-trip fewer."""
-    if init is not None:
-        cent = np.asarray(init, dtype=np.float64).copy()
-    else:
-        init_rows = sorted(
-            emb.select("vec_id", "embedding").orderBy("vec_id")
-            .limit(KMEANS_K).collect(),
-            key=lambda r: r.vec_id,
-        )
-        cent = np.array(
-            [[float(x) for x in r.embedding] for r in init_rows],
-            dtype=np.float64,
-        )
+    `init`: the (KMEANS_K, dim) float64 init matrix — the embeddings of
+    the KMEANS_K smallest vec_ids, i.e. the first KMEANS_K rows of
+    `_head_sample(emb)`."""
+    cent = np.asarray(init, dtype=np.float64).copy()
     for _ in range(KMEANS_ITERS):
         frozen = cent  # ships in the kernel closure (a broadcast)
 
@@ -417,72 +353,6 @@ def kmeans_centroids_distributed(emb: DataFrame,
     return cent
 
 
-def ann_topk_ivf(emb: DataFrame, k: int = ANN_K,
-                 nprobe: int = IVF_NPROBE,
-                 centroids: "np.ndarray | None" = None,
-                 scorer=None, queries=None) -> DataFrame:
-    """IVF-bucketed top-k: candidates are assigned to their nearest coarse
-    centroid (inverted file cell); each query probes its `nprobe` nearest
-    cells.  Deterministic seeded centroids stand in for trained k-means —
-    the partition/probe mechanics (the scale path: each cell is a prunable
-    partition of the vector table) are the real thing."""
-
-    def kernel_factory(qids, qmat, probe_sets):
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                cids = pdf["vec_id"].to_numpy()
-                cmat = _emb_matrix(pdf["embedding"])
-                # batch coarse assignment — argmax-first twin of per-row
-                # ivf_cell (see pq_encode_table); seeded centroids when
-                # no trained ones are passed
-                from ..semantics.docsim import IVF_CENTROIDS
-
-                cents = np.asarray(
-                    IVF_CENTROIDS if centroids is None else centroids,
-                    dtype=np.float64,
-                )
-                cells = kmeans_assign(cents, cmat)
-                sims = scorer(cmat) if scorer is not None \
-                    else cosine_matrix(qmat, cmat)
-                out = []
-                for qi, qid in enumerate(qids):
-                    col = sims[:, qi]
-                    mask = (cids != qid) & np.isin(cells, probe_sets[qi])
-                    idx = np.nonzero(mask)[0]
-                    if not len(idx):
-                        continue
-                    order = np.lexsort((cids[idx], -col[idx]))[:k]
-                    for j in idx[order]:
-                        out.append((qid, int(cids[j]), float(col[j])))
-                yield pd.DataFrame(
-                    out, columns=["query_id", "neighbor_id", "sim"]
-                )
-        return kernel
-
-    # callers composing a scorer over the same query set (IVF-PQ) pass it
-    # in so scorer qmat and probe sets provably share one collect
-    qids, qmat = queries if queries is not None else _collect_queries(emb)
-    probe_sets = [
-        np.array(ivf_probe_cells(list(qmat[i]), nprobe, centroids=centroids))
-        for i in range(len(qids))
-    ]
-    scored = emb.select("vec_id", "embedding").mapInPandas(
-        kernel_factory(qids, qmat, probe_sets), _SCORED_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.round("sim", 6).alias("sim_r6"),
-        )
-    )
-
-
 _BLOCK_SCHEMA = T.StructType(
     [
         T.StructField("vec_id", T.LongType()),
@@ -513,14 +383,14 @@ def _emb_block_rows(emb: DataFrame) -> DataFrame:
     return emb.select("vec_id", "embedding").mapInPandas(kernel, _BLOCK_SCHEMA)
 
 
-def emb_neardup_lsh(emb: DataFrame,
-                    threshold: float = EMB_NEARDUP_COS) -> DataFrame:
+def emb_neardup_lsh(emb: DataFrame) -> DataFrame:
     """Embedding near-dup, the 100-TB path: multi-table hyperplane-LSH
     blocking (equi-join on (tbl, bucket) — the MinHash-band analog for
-    vectors) + exact-cosine verify on candidates only.  Nothing collects to
-    the driver; candidate generation is a shuffle join, verification is one
-    Arrow pass with a row-wise einsum (semantics.docsim.cosine_pairs,
-    shared with the oracle for bit-identical doubles)."""
+    vectors) + exact-cosine verify (>= EMB_NEARDUP_COS) on candidates
+    only.  Nothing collects to the driver; candidate generation is a
+    shuffle join, verification is one Arrow pass with a row-wise einsum
+    (semantics.docsim.cosine_pairs, shared with the oracle for
+    bit-identical doubles)."""
     # lineage cut: the self-join references the block rows twice
     blocks = _emb_block_rows(emb).localCheckpoint(eager=True)
     a, b = blocks.alias("a"), blocks.alias("b")
@@ -559,7 +429,7 @@ def emb_neardup_lsh(emb: DataFrame,
                     "cos": cos,
                 }
             )
-            yield out[out["cos"] >= threshold]
+            yield out[out["cos"] >= EMB_NEARDUP_COS]
 
     verified = pairs.mapInPandas(verify, "vec_a long, vec_b long, cos double")
     return verified.select("vec_a", "vec_b",
@@ -567,46 +437,21 @@ def emb_neardup_lsh(emb: DataFrame,
 
 
 def emb_dedup_apply(emb: DataFrame,
-                    threshold: float = EMB_NEARDUP_COS,
                     pairs: DataFrame | None = None) -> DataFrame:
     """Embedding-level dedup APPLICATION: LSH-blocked near-dup pairs ->
-    connected components -> keep the minimum vec_id per cluster
-    (singletons keep themselves).  The vector-side twin of
-    operators.dedup.dedup_apply — same pairs->CC->keep-min shape, same
-    CC operator, only pair DISCOVERY differs (hyperplane-LSH blocking +
-    exact-cosine verify instead of MinHash bands + Jaccard).  Returns
-    the deduplicated (vec_id, embedding) table.
-
-    Scale shape: candidate generation is the blocked self-join (never
-    all-pairs); CC iterates only over vectors touching a dup pair
-    (singleton bypass); the keep is a left-semi join.  Pass `pairs`
-    (vec_a, vec_b) to reuse an already-materialized pair frame — the
-    two-consumer lineage-cut discipline when a query emits both the
-    pairs and the keep set."""
-    from ..operators.canonicalize import connected_components
+    operators.dedup.keep_cluster_min (keep the minimum vec_id per
+    cluster; singletons keep themselves).  The vector-side twin of
+    operators.dedup.dedup_apply — only pair DISCOVERY differs
+    (hyperplane-LSH blocking + exact-cosine verify instead of MinHash
+    bands + Jaccard).  Returns the deduplicated (vec_id, embedding)
+    table.  Pass `pairs` (vec_a, vec_b) to reuse an already-materialized
+    pair frame — the two-consumer lineage-cut discipline when a query
+    emits both the pairs and the keep set."""
+    from .dedup import keep_cluster_min
 
     if pairs is None:
-        pairs = emb_neardup_lsh(emb, threshold).select("vec_a", "vec_b")
-    pad = lambda c: F.lpad(c.cast("string"), 12, "0")  # noqa: E731
-    nodes = emb.select(
-        F.lit("vec").alias("entity_type"),
-        pad(F.col("vec_id")).alias("norm_surface"),
-    )
-    edges = pairs.select(
-        F.lit("vec").alias("entity_type"),
-        pad(F.col("vec_a")).alias("src"),
-        pad(F.col("vec_b")).alias("dst"),
-    )
-    cc = connected_components(nodes, edges)
-    keepers = cc.filter(
-        F.col("label")
-        == F.concat_ws(":", F.col("entity_type"), F.col("norm_surface"))
-    ).select(F.col("norm_surface").alias("pad_id"))
-    return emb.join(
-        keepers,
-        pad(F.col("vec_id")) == F.col("pad_id"),
-        "left_semi",
-    ).select("vec_id", "embedding")
+        pairs = emb_neardup_lsh(emb).select("vec_a", "vec_b")
+    return keep_cluster_min(emb.select("vec_id", "embedding"), "vec_id", pairs)
 
 
 def pq_index_append(index: dict, new_emb: DataFrame) -> dict:
@@ -634,6 +479,6 @@ def pq_index_append(index: dict, new_emb: DataFrame) -> dict:
         index["codes"].select("vec_id"), "vec_id", "left_anti"
     )
     new_codes = pq_encode_table(
-        fresh, index["books"], centroids=index["centroids"]
+        fresh, index["books"], index["centroids"]
     ).localCheckpoint(eager=True)
     return {**index, "codes": index["codes"].unionByName(new_codes)}

@@ -448,38 +448,28 @@ def ensure_docs_golden(sf_dir: str) -> Path:
     qmat = np.array([by_id[q] for q in qids], dtype=np.float64)
     sims = cosine_matrix(qmat, cmat)  # (nc, nq)
 
-    def topk_rows(mask_fn):
+    def write_topk(name, sims, qids, mask_fn):
+        """The ONE top-k loop: per query drop itself, keep mask_fn(qi)'s
+        candidates, ANN_K best by sim with ties to the lower id."""
         rows = []
         for qi, q in enumerate(qids):
             col = sims[:, qi]
-            mask = cids != q
-            mask &= mask_fn(qi)
-            idx = np.nonzero(mask)[0]
+            idx = np.nonzero((cids != q) & mask_fn(qi))[0]
             order = np.lexsort((cids[idx], -col[idx]))[:ANN_K]
             for rank, j in enumerate(idx[order], 1):
                 rows.append((q, int(cids[j]), rank, round(float(col[j]), 6)))
-        return rows
+        pd.DataFrame(
+            rows, columns=["query_id", "neighbor_id", "rank", "sim_r6"]
+        ).to_parquet(out_dir / f"{name}.parquet", index=False)
 
-    pd.DataFrame(
-        topk_rows(lambda qi: np.ones(len(cids), dtype=bool)),
-        columns=["query_id", "neighbor_id", "rank", "sim_r6"],
-    ).to_parquet(out_dir / "golden_ann_topk.parquet", index=False)
+    write_topk("golden_ann_topk", sims, qids, lambda qi: True)
 
     buckets = np.array([rp_bucket(by_id[v]) for v in vids])
     qbuckets = [rp_bucket(by_id[q]) for q in qids]
-    pd.DataFrame(
-        topk_rows(lambda qi: buckets == qbuckets[qi]),
-        columns=["query_id", "neighbor_id", "rank", "sim_r6"],
-    ).to_parquet(out_dir / "golden_ann_lsh_topk.parquet", index=False)
+    write_topk("golden_ann_lsh_topk", sims, qids,
+               lambda qi: buckets == qbuckets[qi])
 
     from ..semantics.docsim import ivf_cell, ivf_probe_cells, kmeans_train
-
-    cells = np.array([ivf_cell(by_id[v]) for v in vids])
-    qprobes = [np.array(ivf_probe_cells(by_id[q])) for q in qids]
-    pd.DataFrame(
-        topk_rows(lambda qi: np.isin(cells, qprobes[qi])),
-        columns=["query_id", "neighbor_id", "rank", "sim_r6"],
-    ).to_parquet(out_dir / "golden_ann_ivf_topk.parquet", index=False)
 
     # trained coarse quantizer: deterministic k-means (int64-quantized
     # sums; bit-identical to the engine's distributed trainer)
@@ -496,20 +486,9 @@ def ensure_docs_golden(sf_dir: str) -> Path:
     )
 
     books = pq_train(cmat[:PQ_TRAIN_SAMPLE])
-    pq_sims = pq_adc_cosine(qmat, pq_encode(cmat, books), books)
-    ivfpq_rows = []
-    for qi, q in enumerate(qids):
-        col = pq_sims[:, qi]
-        mask = (cids != q) & np.isin(kcells, kprobes[qi])
-        idx = np.nonzero(mask)[0]
-        order = np.lexsort((cids[idx], -col[idx]))[:ANN_K]
-        for rank, j in enumerate(idx[order], 1):
-            ivfpq_rows.append(
-                (q, int(cids[j]), rank, round(float(col[j]), 6))
-            )
-    pd.DataFrame(
-        ivfpq_rows, columns=["query_id", "neighbor_id", "rank", "sim_r6"]
-    ).to_parquet(out_dir / "golden_ann_ivfpq_topk.parquet", index=False)
+    write_topk("golden_ann_ivfpq_topk",
+               pq_adc_cosine(qmat, pq_encode(cmat, books), books), qids,
+               lambda qi: np.isin(kcells, kprobes[qi]))
 
     # near-dup (driver oracle): multi-table hyperplane-LSH blocking + exact
     # cosine verify — the scale-safe semantics shipped in queries()
@@ -577,18 +556,9 @@ def ensure_docs_golden(sf_dir: str) -> Path:
     a_qmat = np.array([by_id[q] for q in a_qids], dtype=np.float64)
     a_probes = [np.array(ivf_probe_cells(by_id[q], centroids=a_cent))
                 for q in a_qids]
-    a_sims = pq_adc_cosine(a_qmat, pq_encode(cmat, a_books), a_books)
-    app_rows = []
-    for qi, q in enumerate(a_qids):
-        col = a_sims[:, qi]
-        mask = (cids != q) & np.isin(a_cells, a_probes[qi])
-        idx = np.nonzero(mask)[0]
-        order = np.lexsort((cids[idx], -col[idx]))[:ANN_K]
-        for rank, j in enumerate(idx[order], 1):
-            app_rows.append((q, int(cids[j]), rank, round(float(col[j]), 6)))
-    pd.DataFrame(
-        app_rows, columns=["query_id", "neighbor_id", "rank", "sim_r6"]
-    ).to_parquet(out_dir / "golden_ann_ivfpq_append.parquet", index=False)
+    write_topk("golden_ann_ivfpq_append",
+               pq_adc_cosine(a_qmat, pq_encode(cmat, a_books), a_books),
+               a_qids, lambda qi: np.isin(a_cells, a_probes[qi]))
 
     # near-dup all-pairs twin (quadratic correctness fixture for pytest —
     # NOT the driver oracle)

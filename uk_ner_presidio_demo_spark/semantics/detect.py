@@ -84,8 +84,6 @@ def detect_mentions(
 def detect_mentions_batch(
     texts: list[str],
     strategy: str = "priority",
-    ner_enabled: frozenset[str] | None = None,
-    pattern_enabled: frozenset[str] | None = None,
 ) -> list[tuple[list[Mention], int]]:
     """Batch twin of detect_mentions — IDENTICAL per-text outputs (the
     engine's hot path; equality with the per-text form is property-tested).
@@ -95,36 +93,35 @@ def detect_mentions_batch(
     finditer overhead was ~65% of kernel time.  U-2 isolation is preserved:
     if a family's batch scan throws, that family falls back to per-text
     scanning so a poisoned row flags only itself (same bitflags as
-    detect_mentions)."""
+    detect_mentions).  Every recognizer runs: the O-6 enabled-set
+    restriction lives on the scalar path (api.analyze)."""
     n = len(texts)
     raws: list[list[tuple[str, int, int, float]]] = [[] for _ in range(n)]
     errs = [0] * n
-    if ner_enabled is None or ner_enabled:
-        try:
-            ner_lists = find_ner_spans_batch(texts, ner_enabled)
-        except Exception:
-            ner_lists = []
-            for i, t in enumerate(texts):
-                try:
-                    ner_lists.append(find_ner_spans(t, ner_enabled))
-                except Exception:
-                    ner_lists.append([])
-                    errs[i] |= 1
-        for i, spans in enumerate(ner_lists):
-            raws[i].extend(spans)
-    if pattern_enabled is None or pattern_enabled:
-        try:
-            pat_lists = find_pattern_spans_batch(texts, pattern_enabled)
-        except Exception:
-            pat_lists = []
-            for i, t in enumerate(texts):
-                try:
-                    pat_lists.append(find_pattern_spans(t, pattern_enabled))
-                except Exception:
-                    pat_lists.append([])
-                    errs[i] |= 2
-        for i, spans in enumerate(pat_lists):
-            raws[i].extend(spans)
+    try:
+        ner_lists = find_ner_spans_batch(texts)
+    except Exception:
+        ner_lists = []
+        for i, t in enumerate(texts):
+            try:
+                ner_lists.append(find_ner_spans(t))
+            except Exception:
+                ner_lists.append([])
+                errs[i] |= 1
+    for i, spans in enumerate(ner_lists):
+        raws[i].extend(spans)
+    try:
+        pat_lists = find_pattern_spans_batch(texts)
+    except Exception:
+        pat_lists = []
+        for i, t in enumerate(texts):
+            try:
+                pat_lists.append(find_pattern_spans(t))
+            except Exception:
+                pat_lists.append([])
+                errs[i] |= 2
+    for i, spans in enumerate(pat_lists):
+        raws[i].extend(spans)
 
     results: list[tuple[list[Mention], int]] = []
     for i, text in enumerate(texts):

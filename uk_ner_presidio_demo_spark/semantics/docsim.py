@@ -25,7 +25,6 @@ Specs:
 from __future__ import annotations
 
 import hashlib
-import math
 import random
 import struct
 import zlib
@@ -140,36 +139,29 @@ RP_PLANES: list[list[float]] = [
     [_rp_rng.gauss(0.0, 1.0) for _ in range(EMB_DIM)] for _ in range(RP_K)
 ]
 
-# IVF coarse quantizer: seeded random centroids (deterministic; real systems
-# train them with k-means — the assignment/probe mechanics are identical).
-IVF_K = 8           # coarse centroids
+# IVF coarse quantizer: the trained k-means centroids below; each query
+# probes its IVF_NPROBE nearest cells.
 IVF_NPROBE = 2      # probe the nearest N cells per query
-_ivf_rng = random.Random(RP_SEED + 1)
-IVF_CENTROIDS: list[list[float]] = [
-    [_ivf_rng.gauss(0.0, 1.0) for _ in range(EMB_DIM)] for _ in range(IVF_K)
-]
 
 
-def ivf_cell(vec, centroids=None) -> int:
-    """Nearest-centroid assignment by cosine (shared kernel semantics).
-    `centroids` defaults to the seeded IVF_CENTROIDS; pass trained ones
-    (kmeans below) for the learned quantizer."""
+def ivf_cell(vec, centroids) -> int:
+    """Nearest-centroid assignment by cosine (shared kernel semantics);
+    ties -> lowest cell."""
     import numpy as np
 
-    cents = IVF_CENTROIDS if centroids is None else centroids
-    sims = cosine_matrix(np.asarray(cents, dtype=float),
+    sims = cosine_matrix(np.asarray(centroids, dtype=float),
                          np.asarray([vec], dtype=float))[0]
-    return int(np.lexsort((list(range(len(cents))), -sims))[0])
+    return int(np.lexsort((list(range(len(centroids))), -sims))[0])
 
 
-def ivf_probe_cells(vec, nprobe: int = IVF_NPROBE, centroids=None) -> list[int]:
+def ivf_probe_cells(vec, nprobe: int = IVF_NPROBE, *,
+                    centroids) -> list[int]:
     import numpy as np
 
-    cents = IVF_CENTROIDS if centroids is None else centroids
-    sims = cosine_matrix(np.asarray(cents, dtype=float),
+    sims = cosine_matrix(np.asarray(centroids, dtype=float),
                          np.asarray([vec], dtype=float))[0]
-    return [int(i)
-            for i in np.lexsort((list(range(len(cents))), -sims))[:nprobe]]
+    order = np.lexsort((list(range(len(centroids))), -sims))
+    return [int(i) for i in order[:nprobe]]
 
 
 # --- deterministic k-means (trained IVF quantizer) ----------------------------

@@ -159,7 +159,7 @@ def find_ner_spans(
 
 
 def find_ner_spans_batch(
-    texts: list[str], enabled: frozenset[str] | None = None
+    texts: list[str],
 ) -> list[list[tuple[str, int, int, float]]]:
     """Batch twin of find_ner_spans: ONE finditer over the joined batch.
     BATCH_SEP is a non-[\\w'] char, so the word-ish boundaries behave
@@ -171,7 +171,7 @@ def find_ner_spans_batch(
 
     assert not any(BATCH_SEP in s for s in GAZETTEER)
     out: list[list[tuple[str, int, int, float]]] = [[] for _ in texts]
-    pat = _compiled(enabled)
+    pat = _compiled(None)
     if pat is None or not texts:
         return out
     joined = BATCH_SEP.join(texts)

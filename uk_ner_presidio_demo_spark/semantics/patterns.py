@@ -279,7 +279,7 @@ def _anchored_matches(pattern, joined, candidates):
 
 
 def find_pattern_spans_batch(
-    texts: list[str], enabled: frozenset[str] | None = None
+    texts: list[str],
 ) -> list[list[tuple[str, int, int, float]]]:
     """Batch twin of find_pattern_spans: anchored candidate scan per spec
     over the whole joined batch, identical per-text results (same span
@@ -296,8 +296,6 @@ def find_pattern_spans_batch(
     runs: list[tuple[int, int]] | None = None
     lowered_cache: dict[int, str] = {}
     for spec in PATTERN_SPECS:
-        if enabled is not None and spec.entity_type not in enabled:
-            continue
         cand = _CANDIDATES.get(spec.entity_type)
         if cand is None:
             matches = spec.pattern.finditer(joined)

@@ -45,7 +45,6 @@ import json
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..semantics.detect import Mention, detect_mentions_batch
